@@ -4,9 +4,11 @@ These implement the pgvector operator family the reference relies on —
 ``<->`` (L2, the only one the reference uses: SSEOpenAIController.java:315-316),
 plus the obvious siblings ``<=>`` (cosine) and ``<#>`` (negative inner
 product) — entirely with ``zip_with``/``aggregate``/``transform`` so the
-math stays inside whole-stage codegen on the JVM.  No Python UDF in the
-hot path: at 100 TB this is the difference between an Arrow round-trip
-per batch and pure Tungsten execution.
+math stays on the JVM.  These higher-order functions are
+``CodegenFallback`` expressions: they run interpreted per row inside an
+otherwise code-generated stage.  No Python UDF in the hot path: at
+100 TB this is the difference between an Arrow round-trip per batch and
+JVM-only execution.
 
 Accumulation is sequential left-to-right (``aggregate`` semantics), in
 double precision regardless of the storage type (float4 arrays, matching

@@ -1,206 +1,1 @@
 """Relational / dataflow operators."""
-
-from .ann import (
-    assign_ivf,
-    hyperplanes,
-    ivf_index_append,
-    ivf_index_search,
-    ivf_index_write,
-    ivf_search,
-    lsh_bucket,
-    lsh_search,
-    recall_sweep,
-)
-from .cluster import connected_components, duplicate_clusters, leakage_safe_split
-from .evalmetrics import auc_roc, calibration_bins, ndcg_at_k
-from .decontam import benchmark_grams, contamination_flags
-from .dedup import (
-    embedding_neardup_pairs,
-    classify_against_fingerprints,
-    exact_dedup,
-    incremental_exact_dedup,
-    interdoc_line_dedup,
-    lsh_candidate_pairs,
-    minhash_signatures,
-    ngram_containment_pairs,
-    ngram_jaccard_pairs,
-    verify_candidate_pairs,
-    shingle_stage,
-    simhash,
-    simhash_neardup_pairs,
-    simhash_packed,
-)
-from .export import shard_assign, shard_export_write, token_budget_select
-from .groupwise import (
-    groupwise_zscore_native,
-    groupwise_zscore_pandas,
-    hash_sample,
-    mixture_sample,
-    source_cap,
-    train_test_split_hash,
-)
-from .ingest import embed_chunks, ingest_pages, pages_to_chunks, validate_corpus, write_corpus
-from .kmeans import kmeans_fit
-from .knn import knn, knn_join, knn_join_numpy
-from .multimodal import (
-    audio_features,
-    image_features,
-    image_jpeg_roundtrip_check,
-    image_resize,
-    synth_media_df,
-    video_frame_sample,
-)
-from .nsw import nsw_build, nsw_search
-from .quant import (
-    binary_encode,
-    hamming_knn,
-    ivf_sq8_index_search,
-    ivf_sq8_index_write,
-    matryoshka_knn,
-    sq8_encode,
-    sq8_index_search,
-    sq8_index_write,
-    sq8_knn,
-)
-from .retrieval import (
-    bm25_index_search,
-    bm25_index_write,
-    bm25_topk,
-    bm25_topk_join,
-    phrase_match,
-    rrf_fuse,
-    with_rank,
-)
-from .dsir import dsir_bucket_weights, dsir_scores, dsir_select
-from .heavyhitters import heavy_hitters, mg_partials
-from .privacy import k_anonymity_audit, l_diversity_audit
-from .serving import blob_url, build_prompt, llm_extract, sse_escape, sse_events
-from .skew import salted_agg, salted_broadcast_join
-from .urls import (
-    registrable_domain,
-    url_blocklist_filter,
-    url_host,
-    url_path,
-    with_url_parts,
-)
-from .pq import fixed_codebooks, ivfpq_encode, ivfpq_search, pq_encode, pq_search
-from .status import STATUS_VALUES, completed_listing, failed_listing, status_upsert
-from .textstats import (
-    fingerprint,
-    gopher_quality_flags,
-    language_id,
-    line_quality_filter,
-    quality_score,
-    repetition_stats,
-    token_stats,
-)
-from .upsert import delta_available, merge_status, read_status
-
-__all__ = [
-    "STATUS_VALUES",
-    "assign_ivf",
-    "audio_features",
-    "blob_url",
-    "build_prompt",
-    "completed_listing",
-    "connected_components",
-    "duplicate_clusters",
-    "leakage_safe_split",
-    "auc_roc",
-    "calibration_bins",
-    "ndcg_at_k",
-    "embed_chunks",
-    "embedding_neardup_pairs",
-    "exact_dedup",
-    "failed_listing",
-    "fingerprint",
-    "groupwise_zscore_native",
-    "groupwise_zscore_pandas",
-    "hyperplanes",
-    "bm25_topk",
-    "image_features",
-    "image_jpeg_roundtrip_check",
-    "image_resize",
-    "ingest_pages",
-    "fixed_codebooks",
-    "ivf_index_append",
-    "ivf_index_search",
-    "ivf_index_write",
-    "ivf_search",
-    "ivfpq_encode",
-    "ivfpq_search",
-    "kmeans_fit",
-    "knn",
-    "knn_join",
-    "knn_join_numpy",
-    "language_id",
-    "llm_extract",
-    "bm25_index_search",
-    "bm25_index_write",
-    "bm25_topk_join",
-    "phrase_match",
-    "dsir_bucket_weights",
-    "dsir_scores",
-    "dsir_select",
-    "heavy_hitters",
-    "mg_partials",
-    "k_anonymity_audit",
-    "l_diversity_audit",
-    "incremental_exact_dedup",
-    "ngram_containment_pairs",
-    "verify_candidate_pairs",
-    "classify_against_fingerprints",
-    "source_cap",
-    "shard_assign",
-    "shard_export_write",
-    "token_budget_select",
-    "registrable_domain",
-    "url_blocklist_filter",
-    "url_host",
-    "url_path",
-    "with_url_parts",
-    "interdoc_line_dedup",
-    "lsh_bucket",
-    "lsh_candidate_pairs",
-    "lsh_search",
-    "delta_available",
-    "merge_status",
-    "minhash_signatures",
-    "ngram_jaccard_pairs",
-    "nsw_build",
-    "benchmark_grams",
-    "binary_encode",
-    "contamination_flags",
-    "hamming_knn",
-    "ivf_sq8_index_search",
-    "ivf_sq8_index_write",
-    "matryoshka_knn",
-    "sq8_encode",
-    "sq8_index_search",
-    "sq8_index_write",
-    "sq8_knn",
-    "nsw_search",
-    "read_status",
-    "recall_sweep",
-    "rrf_fuse",
-    "with_rank",
-    "pages_to_chunks",
-    "pq_encode",
-    "pq_search",
-    "quality_score",
-    "repetition_stats",
-    "salted_agg",
-    "salted_broadcast_join",
-    "shingle_stage",
-    "simhash",
-    "simhash_neardup_pairs",
-    "simhash_packed",
-    "sse_escape",
-    "sse_events",
-    "status_upsert",
-    "synth_media_df",
-    "token_stats",
-    "validate_corpus",
-    "video_frame_sample",
-    "write_corpus",
-]

@@ -156,7 +156,9 @@ def ingest_pages(
         "pageNumber",
         F.current_timestamp().alias("updated_at"),
     )
-    status_events = chunk_events.unionByName(post_events)
+    # Hash-partitioned on fileName, so the status write lays out one file
+    # per (AQE-coalesced) shuffle partition, not one per page-read split.
+    status_events = chunk_events.unionByName(post_events).repartition("fileName")
     return corpus, status_events
 
 
@@ -176,10 +178,14 @@ def write_corpus(corpus: DataFrame, path: str, buckets: int = 64) -> None:
     ``fileName``-hash bucket as the partition column: bounded fan-out
     (``buckets`` directories), no per-file skew, and chunk locality per
     source file — the layout a 100 TB corpus wants for both per-file
-    reprocessing and embedding-scan queries.
+    reprocessing and embedding-scan queries.  Rows are shuffled on the
+    bucket first, so each call writes one file per touched bucket
+    whatever the input's partitioning (reads split per core; AQE
+    coalesces the small shuffle).
     """
     (
         corpus.withColumn("bucket", F.pmod(F.xxhash64("fileName"), F.lit(buckets)))
+        .repartition("bucket")
         .write.mode("append")
         .partitionBy("bucket")
         .parquet(path)

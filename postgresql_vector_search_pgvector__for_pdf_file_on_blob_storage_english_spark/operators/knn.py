@@ -17,9 +17,21 @@ Spark-first physical design
   driver.  **No full sort, no shuffle of the corpus.**  This is the
   plan you want at 100 TB: each executor scans its parquet split,
   keeps k rows, and ships only k rows.
-* Distance math is native higher-order functions (functions/vector.py),
-  inside whole-stage codegen; the embedding column never leaves the
-  scan stage.
+* Distance math is native higher-order functions (functions/vector.py).
+  ``aggregate`` is a ``CodegenFallback`` expression, so the fold runs
+  interpreted per row inside the scan stage (the rest of the stage is
+  codegen); the embedding column never leaves that stage.
+* A literal query travels as ONE literal: its JSON text parsed by
+  ``from_json``, which Catalyst constant-folds into a single
+  ``array<double>`` literal holding the same doubles as a per-element
+  ``F.array(F.lit(v), ...)`` — one py4j call instead of one per
+  dimension, and bit-identical distances.
+* The scan is split per core: Spark sizes file splits from the corpus
+  bytes and the default parallelism, so even a small corpus of a few
+  files is scored by every core, each task keeping its own k-row heap.
+* A query whose length differs from a corpus vector fails in the same
+  scan with pgvector's "different vector dimensions" error, instead of
+  silently scoring the shared prefix.
 * Batched queries (N query vectors): broadcast the (small) query
   relation — the dimension side of this similarity join — score
   corpus x queries map-side, project narrow (drop the embedding)
@@ -34,6 +46,7 @@ Spark-first physical design
 
 from __future__ import annotations
 
+import json
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -45,7 +58,22 @@ from ..functions.vector import DISTANCE_FNS
 def _query_col(query_vec: Sequence[float] | Column) -> Column:
     if isinstance(query_vec, Column):
         return query_vec
-    return F.array(*[F.lit(float(v)) for v in query_vec])
+    # json.dumps writes each float's shortest round-trip repr (and NaN /
+    # Infinity, which Spark's JSON reader accepts), so the folded literal
+    # holds exactly these doubles.
+    return F.from_json(F.lit(json.dumps([float(v) for v in query_vec])), "array<double>")
+
+
+def _checked_distance(dist_fn, vec: Column, query: Column) -> Column:
+    """``dist_fn(vec, query)``, raising pgvector's "different vector
+    dimensions" error for a row whose vector length differs from the
+    query's (a null vector keeps its null distance)."""
+    return F.when(
+        F.size(vec) != F.size(query),
+        F.raise_error(
+            F.format_string("different vector dimensions %d and %d", F.size(vec), F.size(query))
+        ),
+    ).otherwise(dist_fn(vec, query))
 
 
 def knn(
@@ -68,10 +96,12 @@ def knn(
     if isinstance(query_vec, DataFrame):
         qname = query_vec.columns[0]
         scored = corpus.crossJoin(F.broadcast(query_vec)).withColumn(
-            distance_col, dist_fn(F.col(vec_col), F.col(qname))
+            distance_col, _checked_distance(dist_fn, F.col(vec_col), F.col(qname))
         ).drop(qname)
     else:
-        scored = corpus.withColumn(distance_col, dist_fn(F.col(vec_col), _query_col(query_vec)))
+        scored = corpus.withColumn(
+            distance_col, _checked_distance(dist_fn, F.col(vec_col), _query_col(query_vec))
+        )
     cols = list(payload_cols) if payload_cols is not None else [c for c in corpus.columns if c != vec_col]
     if distance_col not in cols:
         cols.append(distance_col)

@@ -31,11 +31,6 @@ def get_spark(app_name: str = "pgvector_pdf_spark", cpus: int | None = None) -> 
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Don't force tiny files into `defaultParallelism` splits: a
-        # kilobyte parquet read as 32 near-empty tasks costs 32 footer
-        # reads + scheduling for nothing.  Large files are unaffected —
-        # they still split by maxPartitionBytes.
-        .config("spark.sql.files.minPartitionNum", "1")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

@@ -125,6 +125,20 @@ class TestBatchIngest:
         assert (hit["fileName"], hit["pageNumber"]) == ("a.pdf", 2)
         assert hit["distance"] < 1e-6
 
+    def test_write_corpus_one_file_per_bucket(self, spark, tmp_path):
+        rows = [(f"id{i}", [float(i)], "t", f"f{i % 6}.pdf", 1, i) for i in range(48)]
+        corpus = spark.createDataFrame(
+            rows,
+            "id string, embedding array<float>, origntext string, fileName string, "
+            "pageNumber int, chunk_index int",
+        ).repartition(4)  # round-robin: every bucket's rows reach every split
+        out = tmp_path / "corpus"
+        write_corpus(corpus, str(out))
+        buckets = [d for d in out.iterdir() if d.name.startswith("bucket=")]
+        assert buckets
+        assert all(len(list(d.glob("*.parquet"))) == 1 for d in buckets)
+        assert spark.read.parquet(str(out)).count() == len(rows)
+
 
 class TestStreamingIngest:
     def test_available_now_drains_and_matches_batch(self, spark, pdf_dir, tmp_path):

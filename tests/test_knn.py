@@ -5,10 +5,15 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.functions.vector import (
+    l2_distance,
+)
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.knn import (
+    _query_col,
     knn,
     knn_join,
 )
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 
@@ -50,6 +55,61 @@ def test_knn_includes_self_at_distance_zero(spark, emb):
     got = knn(df, mat[ids == 7][0].tolist(), k=1, payload_cols=["vec_id"]).first()
     assert got["vec_id"] == 7
     assert got["distance"] == 0.0
+
+
+# Values a folded JSON literal could get wrong: NaN, infinities, the
+# sign of zero, a float32 subnormal (the embeddings are float32) and
+# doubles that float32 cannot hold.
+SPECIAL = [
+    float("nan"), float("inf"), float("-inf"), -0.0, float(np.float32(1e-45)), 0.1, 5e-324,
+]
+
+
+def _per_element_literal(q):
+    return F.array(*[F.lit(float(v)) for v in q])
+
+
+def test_literal_query_holds_the_same_doubles(spark, emb):
+    _, ids, mat = emb
+    q = SPECIAL + mat[ids == 0][0].tolist()
+    row = spark.range(1).select(
+        _query_col(q).alias("one"), _per_element_literal(q).alias("per_element")
+    ).first()
+    # repr tells -0.0 from 0.0 and prints every NaN alike
+    assert [repr(v) for v in row["one"]] == [repr(v) for v in row["per_element"]]
+
+
+@pytest.mark.parametrize("special", [None, *SPECIAL], ids=repr)
+def test_literal_query_distances_equal_per_element_literal(spark, emb, special):
+    df, ids, mat = emb
+    q = mat[ids == 0][0].tolist()
+    if special is not None:
+        q[1] = special
+    got = knn(df, q, k=len(ids), payload_cols=["vec_id"]).collect()
+    ref = df.select("vec_id", l2_distance("embedding", _per_element_literal(q)).alias("d")).collect()
+    assert {r["vec_id"]: repr(r["distance"]) for r in got} == {r["vec_id"]: repr(r["d"]) for r in ref}
+
+
+def test_literal_query_is_folded_to_one_literal(spark, emb):
+    df, ids, mat = emb
+    hits = knn(df, mat[ids == 0][0].tolist(), k=5, payload_cols=["vec_id"])
+    optimized = hits._jdf.queryExecution().optimizedPlan().toString()
+    assert "from_json" not in optimized and "JsonToStructs" not in optimized
+
+
+@pytest.mark.parametrize("as_frame", [False, True], ids=["literal", "frame"])
+@pytest.mark.parametrize("query", [[1.0, 0.0, 5.0], [1.0]], ids=["longer", "shorter"])
+def test_knn_dimension_mismatch_raises(spark, query, as_frame):
+    # pgvector rejects `<->` across dimensions; a longer query must not
+    # silently score the shared prefix (id 1 would come back at 0.0).
+    corpus = spark.createDataFrame(
+        [(0, [0.0, 1.0]), (1, [1.0, 0.0])], "vec_id long, embedding array<float>"
+    )
+    expected = f"different vector dimensions 2 and {len(query)}"
+    if as_frame:
+        query = spark.createDataFrame([(query,)], "qv array<double>")
+    with pytest.raises(SparkRuntimeException, match=expected):
+        knn(corpus, query, k=1, payload_cols=["vec_id"]).collect()
 
 
 @pytest.mark.parametrize("local_topk", [False, True])
