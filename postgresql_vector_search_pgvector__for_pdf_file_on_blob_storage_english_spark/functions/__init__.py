@@ -1,39 +1,2 @@
-"""Expression builders: vector distances, text transforms, portable hashing."""
-
-from .vector import (
-    cosine_distance,
-    cosine_similarity,
-    dot_product,
-    l2_distance,
-    l2_distance_sq,
-    negative_inner_product,
-    vector_norm,
-)
-from .hashing import stable_hash60, chunk_id
-from .pii import PII_PATTERNS, pii_counts, redact_col, redact_pii
-from .text import (
-    normalize_whitespace_col,
-    split_chunks,
-    split_chunks_pandas_udf,
-    split_chunks_udf,
-)
-
-__all__ = [
-    "l2_distance",
-    "l2_distance_sq",
-    "cosine_distance",
-    "cosine_similarity",
-    "dot_product",
-    "negative_inner_product",
-    "vector_norm",
-    "stable_hash60",
-    "chunk_id",
-    "normalize_whitespace_col",
-    "PII_PATTERNS",
-    "pii_counts",
-    "redact_col",
-    "redact_pii",
-    "split_chunks",
-    "split_chunks_pandas_udf",
-    "split_chunks_udf",
-]
+"""Expression builders: vector distances, text transforms, embedding,
+portable hashing."""

@@ -10,7 +10,7 @@ plugs in as ``embed_fn`` with the reference's operational contract
 reproduced *inside the UDF*: up to 3 attempts with a 10 s backoff
 (Function.java:48, 263-270) and client-side pacing (Function.java:45) —
 but applied per Arrow batch, not per row: the reference's one-HTTP-call-
-and-one-JDBC-connection-per-chunk anti-pattern (BASELINE.md) is replaced
+and-one-JDBC-connection-per-chunk anti-pattern is replaced
 by set-at-a-time batching.
 """
 

@@ -21,24 +21,20 @@ Exact behavioral port of the reference ingestion text path:
 Lengths are in UTF-16 code units in Java and code points here; the two
 agree for all BMP text (documented choice, FIXTURES.md §3.8).
 
-The chunker is a pure Python function wrapped as an **Arrow-batched
-pandas UDF** returning ``array<string>`` and exploded with
-``posexplode`` — a UDTF in Spark terms, exactly the shape of the
-reference's per-page loop.  It runs once per *page*, not per row of the
-corpus, and pages move worker-side in columnar Arrow batches (no
-per-row pickling); the normalization stays native (``regexp_replace``).
-A row-at-a-time twin (:data:`split_chunks_udf`) is kept for parity
-testing.
+The chunker runs natively: :func:`split_chunks_col` expresses the
+whole cut loop as one ``regexp_extract_all`` and :func:`chunk_exploded`
+stages normalization and the chunk array, then explodes it to one
+row per chunk — no Python eval node, so page text crosses the
+JVM<->Python boundary only at the embedder.  The pure-Python
+:func:`split_chunks` is the oracle it is parity-tested against.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 MAX_CHUNK_LEN = 7500  # MAX_SEPARATE_TOKEN_LENGTH, Function.java:40
 SPLIT_WINDOW = 300    # scan window size, Function.java:234 (start = max - 300)
@@ -49,7 +45,7 @@ _WS_RUN = re.compile(r"\s{2,}", re.ASCII)
 
 
 def normalize_whitespace(text: str) -> str:
-    """Pure-Python twin of the column expression (for UDF-side use)."""
+    """Pure-Python twin of :func:`normalize_whitespace_col` (the oracle)."""
     return _WS_RUN.sub(" ", text.replace("\n", " "))
 
 
@@ -86,30 +82,6 @@ def split_chunks(text: str, max_length: int = MAX_CHUNK_LEN) -> list[str]:
         text = text[i:]
     chunks.append(text)
     return chunks
-
-
-@F.udf(returnType=T.ArrayType(T.StringType()))
-def split_chunks_udf(text: str) -> list[str]:
-    """Row-at-a-time form — kept as the parity twin for tests; use
-    :data:`split_chunks_pandas_udf` in pipelines (same function, Arrow
-    batch transfer instead of per-row pickle)."""
-    if text is None:
-        return []
-    return split_chunks(text)
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def split_chunks_pandas_udf(texts: pd.Series) -> pd.Series:
-    """Arrow-batched chunker — the hot-path form.
-
-    Wraps the same :func:`split_chunks` (bit-identical output to
-    :data:`split_chunks_udf` by construction; parity-tested in
-    tests/test_chunker.py).  Arrow moves each batch of pages in one
-    columnar transfer, so the per-row pickle/unpickle of the plain UDF
-    disappears; the Python work itself (one backwards scan per 7.5 KB
-    cut) is amortized per page and unchanged.
-    """
-    return texts.map(lambda t: [] if t is None else split_chunks(t))
 
 
 def split_chunks_col(norm: Column, max_length: int = MAX_CHUNK_LEN) -> Column:
@@ -167,9 +139,8 @@ def chunk_exploded(df, text_col: str = "text", out_prefix: str = "chunk"):
     r14: fully native (no Python eval node) — normalization and the
     chunk array are staged as real columns (bare attributes) so each
     is evaluated once per row, then posexplode'd.  A NULL text yields
-    no rows, exactly like the old pandas-UDF path (``None -> []`` ->
-    posexplode drops the row).  The pandas UDF and row UDF remain as
-    parity twins, tested against this path."""
+    no rows (``None -> []`` -> posexplode drops the row).  Parity-tested
+    against the pure-Python :func:`split_chunks`."""
     cols = list(df.columns)
     staged = df.withColumn(
         "_cnorm", normalize_whitespace_col(text_col)
@@ -181,34 +152,13 @@ def chunk_exploded(df, text_col: str = "text", out_prefix: str = "chunk"):
     # adds no filter; the only rows it keeps that inner would drop are
     # the empty/null arrays (NULL text), which surface as NULL
     # positions and are dropped by one cheap post-Generate filter on
-    # the OUTPUT attribute — restoring exact UDF-path semantics
-    # (None -> [] -> no rows).
+    # the OUTPUT attribute (None -> [] -> no rows).
     return staged.select(
         *cols,
         F.posexplode_outer("_cchunks").alias(
             f"{out_prefix}_index", f"{out_prefix}_text"
         ),
     ).filter(F.col(f"{out_prefix}_index").isNotNull())
-
-
-def make_chunk_udtf():
-    """The chunker as a Python UDTF (Spark 4 table-function surface):
-    ``chunk_udtf(fileName, pageNumber, text)`` lateral-joins to one row
-    per chunk.  Same splitting code as :func:`split_chunks`; the UDTF
-    form exists for SQL-first callers (``SELECT * FROM pages, LATERAL
-    chunk_udtf(...)``) and is parity-tested against the
-    posexplode(udf) path.
-    """
-
-    @F.udtf(returnType="chunk_index int, chunk_text string")
-    class ChunkUDTF:
-        def eval(self, text: str):  # noqa: D401
-            if text is None:
-                return
-            for i, c in enumerate(split_chunks(normalize_whitespace(text))):
-                yield i, c
-
-    return ChunkUDTF
 
 
 def sliding_chunks_col(text_col, size: int = 400, overlap: int = 100):

@@ -126,7 +126,7 @@ def _local_topk_selector(k: int, query_id_col: str, distance_col: str, id_col: s
     return select
 
 
-# Fold -> GEMM dispatch (VERDICT r6 #8).  SCALE.md's parity table: the
+# Fold -> GEMM dispatch.  Measured on this engine, the
 # interpreted HOF fold and the Arrow+BLAS GEMM path are even at dim 64
 # (0.45 s vs 0.40 s on 20k x 16) and 11x apart at the reference's
 # dim 1536 (6.12 s vs 0.54 s) — the fold's cost is linear in dim while

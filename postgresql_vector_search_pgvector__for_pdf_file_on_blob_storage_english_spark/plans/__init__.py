@@ -1,9 +1,1 @@
-from .inspect import (  # noqa: F401
-    count_exchanges,
-    explain_str,
-    has_broadcast_hash_join,
-    has_take_ordered,
-    pushed_filters,
-    read_schemas,
-    wholestage_codegen_spans,
-)
+"""Physical-plan introspection (see :mod:`.inspect`)."""

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.text import normalize_whitespace_col, split_chunks_pandas_udf
+from ..functions.text import normalize_whitespace_col
 from ..functions.vector import DISTANCE_FNS
 from ..operators.knn import knn, knn_join
 from ..operators.status import STATUS_VALUES

@@ -18,8 +18,10 @@ from ._base import (  # noqa: F401
     knn,
     knn_join,
     normalize_whitespace_col,
-    split_chunks_pandas_udf,
 )
+from ..operators.serving import blob_url, build_prompt
+from ..operators.status import completed_listing, failed_listing
+
 # ==========================================================================
 # Q2/Q3/Q4 — exact KNN top-k (flagship; SSEOpenAIController.java:315-316)
 # ==========================================================================
@@ -235,19 +237,11 @@ FROM documents
 
 
 def _l1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _derived_status(spark, sf_dir)
-        .filter(F.col("status") == "COMPLETED")
-        .orderBy("fileName", "pageNumber")
-    )
+    return completed_listing(_derived_status(spark, sf_dir))
 
 
 def _l2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _derived_status(spark, sf_dir)
-        .filter(F.col("status") != "COMPLETED")
-        .orderBy("fileName", "pageNumber")
-    )
+    return failed_listing(_derived_status(spark, sf_dir))
 
 
 _register(
@@ -374,14 +368,7 @@ def _q5_prompt(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("query_vec"))
     top = knn(emb, q, k=5, metric="l2", payload_cols=["vec_id"]).select("vec_id")
     joined = top.join(F.broadcast(docs), top.vec_id == docs.doc_id)
-    # note the trailing space after the closing triple-quote — the
-    # reference emits '""" \n\n' (SSEOpenAIController.java:153)
-    prompt = F.concat(
-        F.lit('""" '), F.col("text"), F.lit(' """ '), F.lit("\n\n"),
-        F.lit('From the above document "'), F.lit(_PROMPT_QUERY_TEXT),
-        F.lit('" Please extract the part that describes.'),
-    )
-    return joined.select("vec_id", prompt.alias("prompt"))
+    return joined.select("vec_id", build_prompt("text", _PROMPT_QUERY_TEXT).alias("prompt"))
 
 
 _register(
@@ -406,10 +393,7 @@ _BLOB_ACCOUNT_URL = "https://account.blob.core.windows.net/pdfs/"
 def _q7_blob_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     page = ((F.col("doc_id") % 40) + 1).cast("int")
-    return docs.select(
-        "doc_id",
-        F.concat(F.lit(_BLOB_ACCOUNT_URL), F.col("source"), F.lit("#page="), page).alias("url"),
-    )
+    return docs.select("doc_id", blob_url(_BLOB_ACCOUNT_URL, "source", page).alias("url"))
 
 
 _register(

@@ -1,1 +1,1 @@
-from .pdf import extract_pages, pdf_source, read_binary_docs  # noqa: F401
+"""Binary/PDF/multimodal ingestion sources and their codecs."""

@@ -1,2 +1,1 @@
-from .index_stream import stream_into_bm25_index, stream_into_ivf_index  # noqa: F401
-from .ingest_stream import ingest_stream  # noqa: F401
+"""Structured Streaming variants of the ingest pipeline."""

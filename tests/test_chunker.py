@@ -114,65 +114,6 @@ class TestSplitChunks:
             assert chunks == [t]
 
 
-class TestChunkUDTF:
-    def test_udtf_parity_with_posexplode_path(self, spark):
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.functions.text import (
-            make_chunk_udtf,
-            normalize_whitespace_col,
-            split_chunks_udf,
-        )
-        from pyspark.sql import functions as F
-
-        chunk_udtf = make_chunk_udtf()
-        spark.udtf.register("chunk_udtf", chunk_udtf)
-        long_text = ("word " * 2000).strip() + ". tail"
-        df = spark.createDataFrame(
-            [("a.pdf", 1, "short page"), ("a.pdf", 2, long_text)],
-            "fileName string, pageNumber int, text string",
-        )
-        df.createOrReplaceTempView("_pages_udtf")
-
-        via_udtf = spark.sql(
-            "SELECT fileName, pageNumber, c.chunk_index, c.chunk_text "
-            "FROM _pages_udtf, LATERAL chunk_udtf(text) c"
-        ).collect()
-        via_explode = df.select(
-            "fileName", "pageNumber",
-            F.posexplode(split_chunks_udf(normalize_whitespace_col("text"))).alias(
-                "chunk_index", "chunk_text"
-            ),
-        ).collect()
-        assert sorted(map(tuple, via_udtf)) == sorted(map(tuple, via_explode))
-        assert len(via_udtf) == 3  # 1 + 2 chunks
-
-
-class TestPandasUdfParity:
-    def test_pandas_udf_matches_row_udf(self, spark):
-        """The Arrow-batched hot-path chunker and the row-at-a-time twin
-        wrap the same split_chunks — assert identical output on a mix of
-        short, long, punctuation-free, empty and null pages."""
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.functions.text import (
-            split_chunks_pandas_udf,
-            split_chunks_udf,
-        )
-        from pyspark.sql import functions as F
-
-        rows = [
-            ("short",),
-            (("word " * 3000).strip() + ". tail",),   # multiple cuts
-            ("x" * 20000,),                           # no punctuation: cuts at 7200
-            ("",),
-            (None,),
-        ]
-        df = spark.createDataFrame(rows, "text string")
-        got = df.select(
-            split_chunks_udf("text").alias("row_udf"),
-            split_chunks_pandas_udf("text").alias("arrow_udf"),
-        ).collect()
-        for r in got:
-            assert r["row_udf"] == r["arrow_udf"]
-
-
 class TestNativeChunkerParity:
     def test_native_regex_matches_python_reference(self, spark):
         """r14: the hot path is the NATIVE single-regex chunker

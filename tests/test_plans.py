@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.plans import (
+from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.plans.inspect import (
     count_exchanges,
     has_broadcast_hash_join,
     has_take_ordered,

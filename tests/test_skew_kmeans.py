@@ -13,7 +13,7 @@ from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spa
     salted_agg,
     salted_broadcast_join,
 )
-from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.plans import (
+from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.plans.inspect import (
     count_exchanges,
 )
 from pyspark.sql import functions as F

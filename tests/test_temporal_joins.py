@@ -60,7 +60,7 @@ class TestAsofJoin:
         assert row["ts_asof"] == _ts(120)
 
     def test_single_shuffle_plan(self, spark, quotes, trades):
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.plans import (
+        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.plans.inspect import (
             count_exchanges,
         )
 
