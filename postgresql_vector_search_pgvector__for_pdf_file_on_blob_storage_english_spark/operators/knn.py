@@ -32,16 +32,14 @@ Spark-first physical design
 * A query whose length differs from a corpus vector fails in the same
   scan with pgvector's "different vector dimensions" error, instead of
   silently scoring the shared prefix.
-* Batched queries (N query vectors): broadcast the (small) query
-  relation — the dimension side of this similarity join — score
-  corpus x queries map-side, project narrow (drop the embedding)
-  **before** any exchange, then one window per query_id for the global
-  top-k.  Shuffle volume is |corpus| x |queries| x ~24 bytes.  For
-  corpora where even that is too much, ``local_topk=True`` inserts an
-  Arrow-batched partition-local selection (``mapInPandas``, pure row
-  selection on the JVM-computed distance — no Python float math, so
-  results are bit-identical) that cuts the exchange to
-  ~k x partitions x queries rows.
+* Results are ordered ``(distance ASC NULLS LAST, id)``, as pgvector's
+  ``ORDER BY ... ASC`` puts a null distance (a null vector) last.
+* Batched queries (N query vectors, :func:`knn_join`): the query batch
+  is collected once (under a row cap) into a matrix, and each Arrow
+  batch of the corpus scan scores all queries with one NumPy GEMM in a
+  ``mapInPandas``, keeping per query its k nearest rows plus any row
+  tied with the k-th.  Only these narrow candidates (no embedding) cross
+  the one exchange, to a per-query window that takes the global top-k.
 """
 
 from __future__ import annotations
@@ -51,6 +49,7 @@ from collections.abc import Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.vector import DISTANCE_FNS
 
@@ -64,16 +63,13 @@ def _query_col(query_vec: Sequence[float] | Column) -> Column:
     return F.from_json(F.lit(json.dumps([float(v) for v in query_vec])), "array<double>")
 
 
-def _checked_distance(dist_fn, vec: Column, query: Column) -> Column:
-    """``dist_fn(vec, query)``, raising pgvector's "different vector
-    dimensions" error for a row whose vector length differs from the
-    query's (a null vector keeps its null distance)."""
+def _dims_checked(vec: Column, dim: Column, value: Column) -> Column:
+    """``value``, or pgvector's "different vector dimensions" error for a
+    row whose ``vec`` length is not ``dim`` (a null vector passes)."""
     return F.when(
-        F.size(vec) != F.size(query),
-        F.raise_error(
-            F.format_string("different vector dimensions %d and %d", F.size(vec), F.size(query))
-        ),
-    ).otherwise(dist_fn(vec, query))
+        F.size(vec) != dim,
+        F.raise_error(F.format_string("different vector dimensions %d and %d", F.size(vec), dim)),
+    ).otherwise(value)
 
 
 def knn(
@@ -93,65 +89,32 @@ def knn(
     (joined via broadcast — keeps everything set-at-a-time, no collect).
     """
     dist_fn = DISTANCE_FNS[metric]
+    vec = F.col(vec_col)
     if isinstance(query_vec, DataFrame):
         qname = query_vec.columns[0]
+        query = F.col(qname)
         scored = corpus.crossJoin(F.broadcast(query_vec)).withColumn(
-            distance_col, _checked_distance(dist_fn, F.col(vec_col), F.col(qname))
+            distance_col, _dims_checked(vec, F.size(query), dist_fn(vec, query))
         ).drop(qname)
     else:
+        query = _query_col(query_vec)
         scored = corpus.withColumn(
-            distance_col, _checked_distance(dist_fn, F.col(vec_col), _query_col(query_vec))
+            distance_col, _dims_checked(vec, F.size(query), dist_fn(vec, query))
         )
     cols = list(payload_cols) if payload_cols is not None else [c for c in corpus.columns if c != vec_col]
     if distance_col not in cols:
         cols.append(distance_col)
     # TakeOrderedAndProject: per-partition heap, k rows to the driver.
-    return scored.select(*cols).orderBy(distance_col, id_col).limit(k)
+    return scored.select(*cols).orderBy(F.col(distance_col).asc_nulls_last(), id_col).limit(k)
 
 
-def _local_topk_selector(k: int, query_id_col: str, distance_col: str, id_col: str):
-    """Partition-local top-k row *selection* (no arithmetic in Python)."""
-
-    def select(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        acc: "pd.DataFrame | None" = None
-        for pdf in batches:
-            both = pdf if acc is None else pd.concat((acc, pdf), ignore_index=True)
-            both = both.sort_values([query_id_col, distance_col, id_col], kind="mergesort")
-            acc = both.groupby(query_id_col, sort=False).head(k)
-        if acc is not None and len(acc):
-            yield acc
-
-    return select
-
-
-# Fold -> GEMM dispatch.  Measured on this engine, the
-# interpreted HOF fold and the Arrow+BLAS GEMM path are even at dim 64
-# (0.45 s vs 0.40 s on 20k x 16) and 11x apart at the reference's
-# dim 1536 (6.12 s vs 0.54 s) — the fold's cost is linear in dim while
-# GEMM is near-flat.  Above this dimensionality the GEMM path IS the
-# plan; below it the codegen fold wins on constant factors and exact
-# bit-reproducibility.  Override per session with the conf key
-# (-1 disables GEMM dispatch entirely; 0 forces it).
-GEMM_DIM_THRESHOLD_CONF = "spark.sparkgraft.knnJoin.gemmDimThreshold"
-DEFAULT_GEMM_DIM_THRESHOLD = 128
-
-
-def _gemm_dim_threshold(spark) -> int:
-    return int(
-        spark.conf.get(GEMM_DIM_THRESHOLD_CONF, str(DEFAULT_GEMM_DIM_THRESHOLD))
-    )
-
-
-# Bounded-query-batch contract (VERDICT r8 #7).  The GEMM and batched
-# graph-walk paths collect the QUERY relation to a driver closure — the
-# same data movement broadcasting it performs, valid only while the
-# batch is genuinely small (serving batches: 10s-1000s of rows).  The
-# docstring assumption is now enforced: collecting more than this many
-# query rows raises instead of silently materializing an unbounded
-# relation on the driver.  Override per session with the conf key
-# (-1 disables the cap).
+# Bounded-query-batch contract.  knn_join and the batched graph walk
+# collect the QUERY relation to a driver closure — the same data
+# movement broadcasting it performs, valid only while the batch is
+# genuinely small (serving batches: 10s-1000s of rows).  Collecting more
+# than this many query rows raises instead of silently materializing an
+# unbounded relation on the driver.  Override per session with the conf
+# key (-1 disables the cap).
 QUERY_BATCH_MAX_ROWS_CONF = "spark.sparkgraft.queryBatch.maxRows"
 DEFAULT_QUERY_BATCH_MAX_ROWS = 100_000
 
@@ -189,152 +152,87 @@ def knn_join(
     query_vec_col: str = "query_vec",
     payload_cols: Sequence[str] | None = None,
     distance_col: str = "distance",
-    local_topk: bool = False,
-    dispatch: str = "auto",
 ) -> DataFrame:
-    """Per-query exact top-k for a relation of query vectors.
+    """Per-query exact top-k for a relation of query vectors: the
+    generalization the reference only runs at N=1.
 
-    The generalization the reference only runs at N=1.  Exact regardless
-    of ``local_topk``; the prune only shrinks the exchange, never the
-    result (each partition retains >= k candidates per query, and the
-    global winner set is a subset of the union of partition winner sets).
+    The queries are collected once (:func:`collect_query_batch`) into a
+    matrix.  Each Arrow batch of the corpus scan then computes its
+    |batch| x |queries| distance matrix with one NumPy GEMM and keeps,
+    per query, its k nearest rows plus every row tied with the k-th, so
+    the window over the candidates applies the ``(distance, id)`` rule
+    to all rows that could win.  A null vector gets a null distance and
+    ranks last; a vector whose length differs from the queries' fails
+    with pgvector's "different vector dimensions" error.
 
-    ``dispatch`` picks the physical strategy: ``"fold"`` is the codegen
-    HOF scoring below, ``"gemm"`` is :func:`knn_join_numpy` (per-batch
-    BLAS distance matrices), and the default ``"auto"`` probes the
-    vector dimensionality from ONE query row (a 1-row job on the small
-    side) and takes GEMM at dim >= the configured threshold — so the
-    default plan at reference dimensionality (1536) is the scale plan,
-    without callers having to know the crossover.  Both paths return
-    the same columns and the same (distance, id)-tiebroken winner set;
-    distances agree to ~1e-12 relative (BLAS vs sequential summation
-    order), which survives the oracle rounding at fixture dims
-    (tests/test_knn.py gates hash parity across the dispatch).
-    """
-    if dispatch not in ("auto", "fold", "gemm"):
-        raise ValueError(f"dispatch must be auto|fold|gemm, got {dispatch!r}")
-    if dispatch == "gemm":
-        return knn_join_numpy(
-            corpus, queries, k=k, metric=metric, vec_col=vec_col,
-            id_col=id_col, query_id_col=query_id_col,
-            query_vec_col=query_vec_col, payload_cols=payload_cols,
-            distance_col=distance_col,
-        )
-    if dispatch == "auto":
-        thr = _gemm_dim_threshold(corpus.sparkSession)
-        if thr >= 0:
-            probe = queries.select(
-                F.size(F.col(query_vec_col)).alias("_d")
-            ).first()
-            if probe is not None and probe["_d"] is not None and probe["_d"] >= thr:
-                return knn_join_numpy(
-                    corpus, queries, k=k, metric=metric, vec_col=vec_col,
-                    id_col=id_col, query_id_col=query_id_col,
-                    query_vec_col=query_vec_col, payload_cols=payload_cols,
-                    distance_col=distance_col,
-                )
-    dist_fn = DISTANCE_FNS[metric]
-    scored = corpus.crossJoin(F.broadcast(queries)).withColumn(
-        distance_col, dist_fn(F.col(vec_col), F.col(query_vec_col))
-    )
-    cols = list(payload_cols) if payload_cols is not None else [c for c in corpus.columns if c != vec_col]
-    narrow = scored.select(query_id_col, *cols, distance_col)  # embedding dropped pre-exchange
-
-    if local_topk:
-        narrow = narrow.mapInPandas(
-            _local_topk_selector(k, query_id_col, distance_col, id_col), narrow.schema
-        )
-
-    global_w = Window.partitionBy(query_id_col).orderBy(distance_col, id_col)
-    return (
-        narrow.withColumn("rank", F.row_number().over(global_w))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def knn_join_numpy(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    metric: str = "l2",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    payload_cols: Sequence[str] | None = None,
-    distance_col: str = "distance",
-) -> DataFrame:
-    """The vectorized scale path: per-partition NumPy/BLAS distance
-    matrices + partition-local top-k, then one window for the global
-    cut (SURVEY.md §4's "pandas fallback").
-
-    Each Arrow batch computes a |batch| x |queries| distance matrix with
-    one GEMM instead of per-pair folds — 1-2 orders of magnitude faster
-    per row at high dim.  BLAS summation order differs from the
-    sequential HOF fold, so distances agree only to float tolerance
-    (~1e-12 relative): the winner *set* is identical whenever no two
-    distinct candidates sit within that tolerance of each other.
-    :func:`knn_join` auto-dispatches here above the configured dim
-    threshold (VERDICT r6 #8); hash parity across the dispatch at
-    fixture dims is gated in tests/test_knn.py.  Queries (the small
-    dimension side) are collected to a closure matrix — the same data
-    movement a broadcast performs.
+    BLAS summation order differs from the sequential fold of
+    :func:`knn`, so distances agree with it to ~1e-12 relative: the
+    winner set is the same unless two distinct candidates sit within
+    that tolerance of each other.
     """
     import numpy as np
-    import pandas as pd
 
-    if metric not in ("l2", "l2sq", "cosine", "dot"):
+    if metric not in DISTANCE_FNS:
         raise ValueError(f"unsupported metric {metric!r}")
 
     qrows = collect_query_batch(queries, [query_id_col, query_vec_col])
     qids = np.array([r[query_id_col] for r in qrows])
     qmat = np.array([r[query_vec_col] for r in qrows], dtype=np.float64)  # (Q, d)
-    if metric == "cosine":
+    if metric == "cosine" and len(qrows):
         qmat = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
-    qsq = (qmat * qmat).sum(axis=1)  # (Q,)
+    qsq = (qmat * qmat).sum(axis=-1)  # (Q,)
+    qidx = np.arange(len(qrows))
 
     cols = list(payload_cols) if payload_cols is not None else [
         c for c in corpus.columns if c != vec_col
     ]
 
-    from pyspark.sql import types as T
-
-    base_fields = [corpus.schema[c] for c in cols]
-    qid_type = queries.schema[query_id_col].dataType  # string/int ids work too
     schema = T.StructType(
-        [T.StructField(query_id_col, qid_type)]
-        + base_fields
+        [T.StructField(query_id_col, queries.schema[query_id_col].dataType)]
+        + [corpus.schema[c] for c in cols]
         + [T.StructField(distance_col, T.DoubleType())]
     )
+
+    def distances(cmat):
+        if metric == "cosine":
+            return 1.0 - (cmat / np.linalg.norm(cmat, axis=1, keepdims=True)) @ qmat.T
+        if metric == "dot":
+            return -(cmat @ qmat.T)
+        sq = (cmat * cmat).sum(axis=1)[:, None] - 2.0 * (cmat @ qmat.T) + qsq[None, :]
+        np.maximum(sq, 0.0, out=sq)
+        return np.sqrt(sq) if metric == "l2" else sq
 
     def score(batches: Iterator) -> Iterator:
         for pdf in batches:
             if not len(pdf):
                 continue
-            cmat = np.array(list(pdf[vec_col]), dtype=np.float64)  # (N, d)
-            if metric == "cosine":
-                cn = cmat / np.linalg.norm(cmat, axis=1, keepdims=True)
-                dist = 1.0 - cn @ qmat.T                            # (N, Q)
-            elif metric == "dot":
-                dist = -(cmat @ qmat.T)
-            else:
-                csq = (cmat * cmat).sum(axis=1)
-                sq = csq[:, None] - 2.0 * (cmat @ qmat.T) + qsq[None, :]
-                np.maximum(sq, 0.0, out=sq)
-                dist = np.sqrt(sq) if metric == "l2" else sq
-            kk = min(k, dist.shape[0])
-            top = np.argpartition(dist, kk - 1, axis=0)[:kk]        # (k, Q)
-            out_frames = []
-            for qi in range(dist.shape[1]):
-                rows = pdf.iloc[top[:, qi]][cols].copy()
-                rows.insert(0, query_id_col, qids[qi])
-                rows[distance_col] = dist[top[:, qi], qi]
-                out_frames.append(rows)
-            yield pd.concat(out_frames, ignore_index=True)
+            scorable = pdf[vec_col].notna().to_numpy()
+            dist = np.full((len(pdf), len(qrows)), np.nan)  # NaN -> null distance
+            if scorable.any():
+                dist[scorable] = distances(
+                    np.array(list(pdf[vec_col][scorable]), dtype=np.float64)
+                )
+            kk = min(k, len(pdf))
+            top = np.argpartition(dist, kk - 1, axis=0)[:kk]  # NaN sorts last
+            take = dist <= dist[top[-1], qidx]  # ties with the k-th
+            take[top, qidx] = True
+            qi, ri = np.nonzero(take.T)
+            out = pdf.iloc[ri][cols].reset_index(drop=True)
+            out.insert(0, query_id_col, qids[qi])
+            out[distance_col] = dist[ri, qi]
+            yield out
 
-    needed = [vec_col] + [c for c in cols if c != vec_col]
-    candidates = corpus.select(*needed).mapInPandas(score, schema)
-    global_w = Window.partitionBy(query_id_col).orderBy(distance_col, id_col)
+    vec = F.col(vec_col)
+    scan = corpus.select(
+        _dims_checked(vec, F.lit(qmat.shape[-1]), vec).alias(vec_col),
+        *[c for c in cols if c != vec_col],
+    )
+    if not len(qrows):
+        scan = scan.limit(0)  # nothing to score
+    candidates = scan.mapInPandas(score, schema)
+    global_w = Window.partitionBy(query_id_col).orderBy(
+        F.col(distance_col).asc_nulls_last(), id_col
+    )
     return (
         candidates.withColumn("rank", F.row_number().over(global_w))
         .filter(F.col("rank") <= k)

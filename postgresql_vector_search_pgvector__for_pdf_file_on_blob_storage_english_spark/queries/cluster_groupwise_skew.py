@@ -92,7 +92,7 @@ _register("groupwise_zscore_native", _zscore(native=True), _DD_ZSCORE)
 
 # ---- the vectorized scale path, held to the same oracle -------------------
 
-from ..operators.knn import knn_join_numpy  # noqa: E402
+from ..operators.knn import knn_join  # noqa: E402
 
 
 def _knn_batch_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,7 +100,7 @@ def _knn_batch_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    out = knn_join_numpy(emb, queries, k=3, metric="l2", payload_cols=["vec_id", "label"])
+    out = knn_join(emb, queries, k=3, metric="l2", payload_cols=["vec_id", "label"])
     return out.select(
         "query_id", "rank", "vec_id", "label", F.round("distance", 4).alias("distance")
     )

@@ -110,21 +110,15 @@ ORDER BY {dist}, e.vec_id LIMIT 5
 )
 
 
-def _knn_batch(local_topk: bool):
-    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        emb = _t(spark, sf_dir, "embeddings")
-        queries = emb.filter(F.col("vec_id") < 8).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-        )
-        out = knn_join(
-            emb, queries, k=3, metric="l2", payload_cols=["vec_id", "label"],
-            local_topk=local_topk,
-        )
-        return out.select(
-            "query_id", "rank", "vec_id", "label", F.round("distance", 4).alias("distance")
-        )
-
-    return fn
+def _knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = _t(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    out = knn_join(emb, queries, k=3, metric="l2", payload_cols=["vec_id", "label"])
+    return out.select(
+        "query_id", "rank", "vec_id", "label", F.round("distance", 4).alias("distance")
+    )
 
 
 _DD_KNN_BATCH = dd_sql(
@@ -199,10 +193,7 @@ WHERE {dist} < {radius}
 )
 
 
-_register("q2_knn_l2_topk_batch", _knn_batch(local_topk=False), _DD_KNN_BATCH)
-# Same semantics, scale-path physical plan (partition-local Arrow top-k
-# selection before the exchange) — must agree bit-for-bit with the oracle.
-_register("q2_knn_l2_topk_batch_localtopk", _knn_batch(local_topk=True), _DD_KNN_BATCH)
+_register("q2_knn_l2_topk_batch", _knn_batch, _DD_KNN_BATCH)
 
 
 # ==========================================================================

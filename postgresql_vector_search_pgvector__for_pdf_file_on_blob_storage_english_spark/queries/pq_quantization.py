@@ -792,14 +792,13 @@ def _ann_ivfpq_recall_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nq = queries.agg(F.count(F.lit(1)).alias("_nq"))
 
-    # Ground truth via the narrow batched-KNN operator (partition-local
-    # top-k, auto GEMM dispatch) instead of a crossJoin + Q-partition
-    # window — the N x Q relation never crosses an exchange.  sqrt is
-    # monotone and the (distance, vec_id) tie-break matches, so the
-    # winner set is identical to the oracle's l2sq QUALIFY form.
+    # Ground truth via the narrow batched-KNN operator (per-batch GEMM
+    # top-k) instead of a crossJoin + Q-partition window — the N x Q
+    # relation never crosses an exchange.  sqrt is monotone and the
+    # (distance, vec_id) tie-break matches, so the winner set is
+    # identical to the oracle's l2sq QUALIFY form.
     exact5 = knn_join(
-        emb, queries, k=5, metric="l2", id_col="vec_id",
-        payload_cols=["vec_id"], local_topk=True,
+        emb, queries, k=5, metric="l2", id_col="vec_id", payload_cols=["vec_id"]
     ).select("query_id", "vec_id")
 
     def recall_row(config: str, hits: DataFrame) -> DataFrame:

@@ -42,6 +42,10 @@ PAGES_SCHEMA = T.ArrayType(
 )
 
 
+# The binaryFile source's fixed schema; a streaming source must be given it.
+BINARY_FILE_SCHEMA = "path string, modificationTime timestamp, length long, content binary"
+
+
 def read_binary_docs(
     spark: SparkSession, path: str, glob: str = "*.pdf", stream: bool = False
 ) -> DataFrame:
@@ -51,7 +55,7 @@ def read_binary_docs(
     Returns ``(path, modificationTime, length, content)``; ``stream=True``
     gives the identical relation as a streaming source.
     """
-    reader = spark.readStream if stream else spark.read
+    reader = spark.readStream.schema(BINARY_FILE_SCHEMA) if stream else spark.read
     return reader.format("binaryFile").option("pathGlobFilter", glob).load(path)
 
 

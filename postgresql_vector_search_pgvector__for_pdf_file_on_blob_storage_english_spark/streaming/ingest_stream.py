@@ -8,7 +8,7 @@ streaming — the same batch transformation applied per micro-batch via
 ``foreachBatch``.  One codepath, two execution modes:
 
 * batch: ``ingest_pages(pdf_source(spark, dir))``
-* incremental: this module — ``readStream.format("binaryFile")`` with
+* incremental: this module — ``pdf_source(..., stream=True)`` with
   the same downstream pipeline; ``Trigger.AvailableNow`` drains the
   backlog and stops (the "catch up, then exit" operational mode),
   omit it for continuous arrival processing.
@@ -21,10 +21,10 @@ reference's trigger, but transactional with the sink writes.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from ..functions.embed import DEFAULT_DIM
 from ..operators.ingest import ingest_pages, write_corpus
-from ..sources.pdf import extract_pages
+from ..sources.pdf import pdf_source
 
 
 def ingest_stream(
@@ -34,7 +34,7 @@ def ingest_stream(
     status_path: str,
     checkpoint_dir: str,
     glob: str = "*.pdf",
-    dim: int = 64,
+    dim: int = DEFAULT_DIM,
     embed_fn=None,
     available_now: bool = True,
 ):
@@ -44,33 +44,16 @@ def ingest_stream(
     so batch and streaming results are the same relation (stateless by
     design — the reference has no cross-event semantics to preserve).
     """
-    # Streaming sources require an explicit schema; binaryFile's is fixed.
-    binary_schema = (
-        "path string, modificationTime timestamp, length long, content binary"
-    )
-    binary = (
-        spark.readStream.format("binaryFile")
-        .schema(binary_schema)
-        .option("pathGlobFilter", glob)
-        .load(input_dir)
-    )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        paged = extract_pages(batch_df)
-        pages = paged.select(
-            F.element_at(F.split(F.col("path"), "/"), -1).alias("fileName"),
-            F.posexplode_outer(F.col("pages")).alias("_pos", "page"),
-        ).select(
-            "fileName",
-            F.col("page.pageNumber").alias("pageNumber"),
-            F.col("page.text").alias("text"),
-        )
+    def process(pages: DataFrame, batch_id: int) -> None:
         corpus, status_events = ingest_pages(pages, dim=dim, embed_fn=embed_fn)
         write_corpus(corpus, corpus_path)
         status_events.write.mode("append").parquet(status_path)
 
-    writer = binary.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    writer = (
+        pdf_source(spark, input_dir, glob, stream=True)
+        .writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

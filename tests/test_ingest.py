@@ -80,6 +80,11 @@ class TestPdfSource:
         )
         assert a == [(1, "First page about spark."), (2, "Second page about vectors.")]
 
+    def test_stream_source_has_the_batch_columns(self, spark, pdf_dir):
+        pages = pdf_source(spark, pdf_dir, stream=True)
+        assert pages.isStreaming
+        assert pages.columns == ["fileName", "pageNumber", "text"]
+
 
 class TestBatchIngest:
     def test_chunk_ids_deterministic_idempotent(self, spark, pdf_dir):

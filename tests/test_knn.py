@@ -112,13 +112,77 @@ def test_knn_dimension_mismatch_raises(spark, query, as_frame):
         knn(corpus, query, k=1, payload_cols=["vec_id"]).collect()
 
 
-@pytest.mark.parametrize("local_topk", [False, True])
-def test_knn_join_matches_bruteforce(spark, emb, local_topk):
+def _corpus_with_null(spark):
+    return spark.createDataFrame(
+        [(0, None), (1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id long, embedding array<float>"
+    )
+
+
+def test_knn_null_vector_ranks_last(spark):
+    # pgvector's ORDER BY ... ASC puts a null distance last, not first
+    corpus = _corpus_with_null(spark)
+    got = knn(corpus, [1.0, 0.0], k=3, payload_cols=["vec_id"]).collect()
+    assert [(r["vec_id"], r["distance"]) for r in got] == [(1, 0.0), (2, 2 ** 0.5), (0, None)]
+    assert [r["vec_id"] for r in knn(corpus, [1.0, 0.0], k=2, payload_cols=["vec_id"]).collect()] == [1, 2]
+
+
+def test_knn_join_null_vector_ranks_last(spark):
+    corpus = _corpus_with_null(spark)
+    queries = spark.createDataFrame([(7, [1.0, 0.0])], "query_id long, query_vec array<double>")
+
+    def ranked(k):
+        got = knn_join(corpus, queries, k=k, payload_cols=["vec_id"]).collect()
+        return [(r["rank"], r["vec_id"], r["distance"]) for r in sorted(got, key=lambda r: r["rank"])]
+
+    assert ranked(3) == [(1, 1, 0.0), (2, 2, 2 ** 0.5), (3, 0, None)]
+    assert ranked(2) == [(1, 1, 0.0), (2, 2, 2 ** 0.5)]
+
+
+@pytest.mark.parametrize("vec", [[1.0, 0.0, 5.0], [1.0]], ids=["longer", "shorter"])
+def test_knn_join_corpus_dimension_mismatch_raises(spark, vec):
+    corpus = spark.createDataFrame(
+        [(0, [0.0, 1.0]), (1, vec)], "vec_id long, embedding array<float>"
+    )
+    queries = spark.createDataFrame([(0, [1.0, 0.0])], "query_id long, query_vec array<double>")
+    with pytest.raises(SparkRuntimeException, match=f"different vector dimensions {len(vec)} and 2"):
+        knn_join(corpus, queries, k=1, payload_cols=["vec_id"]).collect()
+
+
+@pytest.mark.parametrize("layout", ["spread", "one_partition"])
+@pytest.mark.parametrize("dim", [64, 1536])
+def test_knn_join_ties_break_by_id(spark, dim, layout):
+    # Each of 16 vectors is stored 4x under shuffled ids; every top-5
+    # holds tied copies, which must come back in id order.  "spread"
+    # puts one copy of each vector in each partition, "one_partition"
+    # puts all copies in the same Arrow batch.
+    rng = np.random.default_rng(dim)
+    base = rng.normal(size=(16, dim)).astype(np.float32)
+    ids = rng.permutation(64)
+    rows = [(int(ids[c * 16 + v]), base[v].tolist()) for c in range(4) for v in range(16)]
+    slices = spark.sparkContext.parallelize(rows, 1 if layout == "one_partition" else 4)
+    corpus = spark.createDataFrame(slices, "vec_id long, embedding array<float>")
+    qmat = base[np.arange(64) % 16] + rng.normal(scale=0.3, size=(64, dim))
+    queries = spark.createDataFrame(
+        [(i, qmat[i].tolist()) for i in range(64)], "query_id long, query_vec array<double>"
+    )
+    copies = {v: sorted(int(ids[c * 16 + v]) for c in range(4)) for v in range(16)}
+    expect = {}
+    for i in range(64):
+        order = np.argsort(np.linalg.norm(base.astype(np.float64) - qmat[i], axis=1))
+        expect[i] = [vid for v in order for vid in copies[v]][:5]
+    got = {}
+    for r in sorted(knn_join(corpus, queries, k=5, payload_cols=["vec_id"]).collect(),
+                    key=lambda r: (r["query_id"], r["rank"])):
+        got.setdefault(r["query_id"], []).append(r["vec_id"])
+    assert got == expect
+
+
+def test_knn_join_matches_bruteforce(spark, emb):
     df, ids, mat = emb
     queries = df.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    got = knn_join(df, queries, k=3, payload_cols=["vec_id"], local_topk=local_topk).collect()
+    got = knn_join(df, queries, k=3, payload_cols=["vec_id"]).collect()
     by_query = {}
     for r in sorted(got, key=lambda r: (r["query_id"], r["rank"])):
         by_query.setdefault(r["query_id"], []).append(r["vec_id"])
@@ -139,35 +203,33 @@ def test_knn_join_rank_is_dense_per_query(spark, emb):
 
 
 class TestNumpyScalePath:
-    """knn_join_numpy: the GEMM-batched scale path must produce the same
-    winner sets and ranks as the sequential-fold reference path."""
+    """knn_join, the GEMM-batched path, must produce the same winner sets
+    and ranks as the sequential-fold reference, one knn per query."""
 
     @pytest.mark.parametrize("metric", ["l2", "cosine", "dot"])
     def test_parity_with_hof_path(self, spark, emb, metric):
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.knn import (
-            knn_join_numpy,
-        )
-
-        df, _, _ = emb
+        df, ids, mat = emb
         queries = df.filter(F.col("vec_id") < 5).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
         )
-        a = knn_join(df, queries, k=4, metric=metric, payload_cols=["vec_id"])
-        b = knn_join_numpy(df, queries, k=4, metric=metric, payload_cols=["vec_id"])
-        sa = sorted((r["query_id"], r["rank"], r["vec_id"]) for r in a.collect())
-        sb = sorted((r["query_id"], r["rank"], r["vec_id"]) for r in b.collect())
+        got = knn_join(df, queries, k=4, metric=metric, payload_cols=["vec_id"])
+        sa = sorted((r["query_id"], r["rank"], r["vec_id"]) for r in got.collect())
+        sb = sorted(
+            (qid, rank, r["vec_id"])
+            for qid in range(5)
+            for rank, r in enumerate(
+                knn(df, mat[ids == qid][0].tolist(), k=4, metric=metric, payload_cols=["vec_id"]).collect(),
+                start=1,
+            )
+        )
         assert sa == sb
 
     def test_distances_within_tolerance(self, spark, emb):
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.knn import (
-            knn_join_numpy,
-        )
-
         df, ids, mat = emb
         queries = df.filter(F.col("vec_id") == 0).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
         )
-        got = knn_join_numpy(df, queries, k=3, payload_cols=["vec_id"]).collect()
+        got = knn_join(df, queries, k=3, payload_cols=["vec_id"]).collect()
         q = mat[ids == 0][0]
         for r in got:
             expect = float(np.linalg.norm(mat[ids == r["vec_id"]][0] - q))
@@ -182,7 +244,6 @@ class TestQueryBatchCap:
     def test_oversized_batch_raises(self, spark, emb):
         from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.knn import (
             QUERY_BATCH_MAX_ROWS_CONF,
-            knn_join_numpy,
         )
 
         df, _, _ = emb
@@ -192,14 +253,13 @@ class TestQueryBatchCap:
         spark.conf.set(QUERY_BATCH_MAX_ROWS_CONF, "3")
         try:
             with pytest.raises(ValueError, match="query batch exceeds 3 rows"):
-                knn_join_numpy(df, queries, k=2, payload_cols=["vec_id"])
+                knn_join(df, queries, k=2, payload_cols=["vec_id"])
         finally:
             spark.conf.unset(QUERY_BATCH_MAX_ROWS_CONF)
 
     def test_cap_boundary_and_disable(self, spark, emb):
         from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.knn import (
             QUERY_BATCH_MAX_ROWS_CONF,
-            knn_join_numpy,
         )
 
         df, _, _ = emb
@@ -208,9 +268,9 @@ class TestQueryBatchCap:
         )
         spark.conf.set(QUERY_BATCH_MAX_ROWS_CONF, "5")  # exactly at the cap
         try:
-            assert knn_join_numpy(df, queries, k=1, payload_cols=["vec_id"]).count() == 5
+            assert knn_join(df, queries, k=1, payload_cols=["vec_id"]).count() == 5
             spark.conf.set(QUERY_BATCH_MAX_ROWS_CONF, "-1")  # disabled
-            assert knn_join_numpy(df, queries, k=1, payload_cols=["vec_id"]).count() == 5
+            assert knn_join(df, queries, k=1, payload_cols=["vec_id"]).count() == 5
         finally:
             spark.conf.unset(QUERY_BATCH_MAX_ROWS_CONF)
 
@@ -234,97 +294,3 @@ class TestQueryBatchCap:
                 hnsw_search_join(g, queries, k=2, ef_search=8)
         finally:
             spark.conf.unset(QUERY_BATCH_MAX_ROWS_CONF)
-
-
-class TestGemmDispatch:
-    """knn_join fold->GEMM auto-dispatch (VERDICT r6 #8): the default
-    plan above the dim threshold is the BLAS path, below it the codegen
-    fold, the conf key overrides, and the gated knn_join entries hash
-    identically on BOTH sides of the threshold."""
-
-    def _queries(self, df):
-        return df.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-        )
-
-    def test_default_stays_on_fold_at_fixture_dim(self, spark, emb):
-        # dim 64 < default threshold 128 -> no Python map node in plan
-        df, _, _ = emb
-        out = knn_join(df, self._queries(df), k=4, payload_cols=["vec_id"])
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "MapInPandas" not in plan and "ArrowEval" not in plan
-
-    def test_conf_forces_gemm_and_results_hash_match(self, spark, emb):
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.knn import (
-            GEMM_DIM_THRESHOLD_CONF,
-        )
-
-        df, _, _ = emb
-        q = self._queries(df)
-        fold = knn_join(df, q, k=4, payload_cols=["vec_id"], dispatch="fold")
-        spark.conf.set(GEMM_DIM_THRESHOLD_CONF, "0")
-        try:
-            auto = knn_join(df, q, k=4, payload_cols=["vec_id"])
-            plan = auto._jdf.queryExecution().executedPlan().toString()
-            assert "MapInPandas" in plan, "conf=0 must dispatch to GEMM"
-            # the oracle-facing canonicalization: sorted rows, rounded dist
-            ca = sorted(
-                (r["query_id"], r["rank"], r["vec_id"], round(r["distance"], 4))
-                for r in fold.collect()
-            )
-            cb = sorted(
-                (r["query_id"], r["rank"], r["vec_id"], round(r["distance"], 4))
-                for r in auto.collect()
-            )
-            assert ca == cb
-        finally:
-            spark.conf.unset(GEMM_DIM_THRESHOLD_CONF)
-
-    def test_conf_minus_one_disables_gemm(self, spark, emb):
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.knn import (
-            GEMM_DIM_THRESHOLD_CONF,
-        )
-
-        df, _, _ = emb
-        spark.conf.set(GEMM_DIM_THRESHOLD_CONF, "-1")
-        try:
-            out = knn_join(df, self._queries(df), k=4, payload_cols=["vec_id"])
-            plan = out._jdf.queryExecution().executedPlan().toString()
-            assert "MapInPandas" not in plan
-        finally:
-            spark.conf.unset(GEMM_DIM_THRESHOLD_CONF)
-
-    def test_explicit_dispatch_and_validation(self, spark, emb):
-        df, _, _ = emb
-        q = self._queries(df)
-        g = knn_join(df, q, k=4, payload_cols=["vec_id"], dispatch="gemm")
-        assert "MapInPandas" in g._jdf.queryExecution().executedPlan().toString()
-        with pytest.raises(ValueError, match="dispatch"):
-            knn_join(df, q, k=4, dispatch="blas")
-
-    def test_gated_entry_hashes_match_across_dispatch(self, spark, sf_dir):
-        # the driver-gated knn_join entries must hash identically on
-        # both sides of the threshold (VERDICT r6 #8 done-criterion)
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.knn import (
-            GEMM_DIM_THRESHOLD_CONF,
-        )
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.queries import (
-            REGISTRY,
-        )
-
-        for name in ("q2_knn_l2_topk_batch", "eval_knn_mrr"):
-            fn = REGISTRY[name][0]
-
-            def canon(df):
-                cols = sorted(df.columns)
-                return sorted(
-                    tuple(str(r[c]) for c in cols) for r in df.collect()
-                )
-
-            base = canon(fn(spark, sf_dir))
-            spark.conf.set(GEMM_DIM_THRESHOLD_CONF, "0")
-            try:
-                forced = canon(fn(spark, sf_dir))
-            finally:
-                spark.conf.unset(GEMM_DIM_THRESHOLD_CONF)
-            assert base == forced, name

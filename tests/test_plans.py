@@ -54,10 +54,20 @@ class TestFlagshipKnn:
         assert count_exchanges(df) == 0
 
     def test_batched_knn_single_exchange(self, spark):
-        # broadcast queries + map-side scoring; the only shuffle is the
-        # per-query window for the global top-k.
+        # the query matrix rides in the GEMM scorer's closure: one
+        # MapInPandas over the (dimension-checked) corpus scan, no join
+        # node; the only shuffle is the per-query window for the global
+        # top-k.
+        import re
+
+        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.plans.inspect import (
+            explain_str,
+        )
+
         df = q(spark, "q2_knn_l2_topk_batch")
-        assert has_broadcast_hash_join(df) or "BroadcastNestedLoop" in str(df._jdf.queryExecution())
+        plan = explain_str(df, "simple")
+        assert re.search(r"MapInPandas .*\n\s*\+- Project .*\n\s*\+- FileScan parquet", plan)
+        assert "Join" not in plan
         assert count_exchanges(df) == 1
 
     def test_batched_knn_embedding_dropped_before_exchange(self, spark):
