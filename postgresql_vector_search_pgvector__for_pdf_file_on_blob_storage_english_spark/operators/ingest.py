@@ -6,30 +6,31 @@ sleeps):  extract pages -> normalize -> chunk -> [status PAGE_SEPARATE_
 FINISHED] -> embed (3 retries) -> [FINISH_OAI_INVOCATION] -> JDBC
 INSERT -> [FINISH_DB_INSERTION] -> [COMPLETED | FAILED_DB_INSERTION].
 
-Spark restatement: one declarative job —
+Spark restatement: one staged relation, decided once per chunk —
 
-    pages -> normalize (native regex) -> chunk (native bounds scan,
-          r14 — no Python) -> posexplode -> deterministic chunk id
-          -> embed (Arrow-batched pandas UDF) -> corpus rows (§1.1)
+    pages -> normalize (native regex) -> chunk (native bounds scan)
+          -> posexplode -> deterministic chunk id
+          -> embed (Arrow-batched pandas UDF)           [staged]
+          -> VECTOR(n) check -> corpus rows (§1.1) + status trail
 
-plus a status-event relation derived from the same lineage (the
-reference's per-chunk Cosmos writes become one set-oriented append;
-resolve with operators.status.status_upsert).  Per-chunk sequencing,
-20 ms pacing and per-chunk JDBC connections disappear — batching *is*
-the rate limiter, and one write per job replaces row-at-a-time inserts.
+The reference's per-chunk Cosmos writes become one set-oriented append
+of the status trail, resolved with operators.status.status_upsert.
+Per-chunk sequencing, 20 ms pacing and per-chunk JDBC connections
+disappear — batching *is* the rate limiter, and one write per job
+replaces row-at-a-time inserts.
 
-Scale notes: the ONLY Python stage is the embedder (Arrow-batched;
-r14 made the chunker native, so the corpus text crosses the
-JVM<->Python boundary once instead of twice).  Everything else is
-whole-stage codegen.  The corpus write partitions by ``fileName``
-prefix bucket so a 1000-executor ingest lays out files without a
-single hot partition; embeddings never shuffle (the pipeline is
-narrow from page rows to the sink).
+Scale notes: two Python stages, both Arrow-batched: the PDF page decode
+(a ``mapInPandas`` in sources.pdf) and the embedder.  The chunker is
+native, so the corpus text crosses the JVM<->Python boundary once.
+Everything else is whole-stage codegen.  The pipeline is narrow from
+page rows to the staged relation; ``write_corpus`` then shuffles the
+corpus rows, embeddings included, on the ``fileName`` bucket, so each
+write lays out one file per touched bucket whatever the page split.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.embed import DEFAULT_DIM, make_embedder
@@ -47,10 +48,9 @@ def pages_to_chunks(pages: DataFrame) -> DataFrame:
     identity here is content-addressed — sha2(fileName § pageNumber §
     chunk_index) — so re-ingesting a file is idempotent (same keys).
     """
-    # r14: fully native chunking (functions/text.py::chunk_exploded) —
-    # the page text no longer crosses the Python boundary to find cut
-    # points; the embedder below is now the pipeline's ONLY Python
-    # stage, so the corpus text crosses JVM<->Python once, not twice.
+    # Fully native chunking (functions/text.py::chunk_exploded): the page
+    # text does not cross the Python boundary to find cut points, so the
+    # corpus text crosses JVM<->Python once, into the embedder.
     chunked = chunk_exploded(
         pages.select("fileName", "pageNumber", "text"), "text", "c"
     ).select(
@@ -83,18 +83,20 @@ def embed_chunks(
     return chunks.withColumn("embedding", embedder(F.col(text_col)))
 
 
-def failed_chunk_status(corpus: DataFrame, dim: int = DEFAULT_DIM) -> DataFrame:
-    """Status events for quarantined chunks: every row failing the
-    ``VECTOR(n)`` check becomes a FAILED_DB_INSERTION entry — the
-    terminal-failure path of the reference's state machine
-    (Function.java:173-174), set-at-a-time."""
-    return validate_corpus(corpus, dim=dim).select(
-        "id",
-        "fileName",
-        F.lit("FAILED_DB_INSERTION").alias("status"),
-        "pageNumber",
-        F.current_timestamp().alias("updated_at"),
-    )
+def _vector_ok(dim: int) -> Column:
+    """pgvector's ``VECTOR(n)`` insert check (SURVEY.md §1.1) as a
+    predicate: the embedding is present and has ``dim`` components."""
+    return F.col("embedding").isNotNull() & (F.size("embedding") == F.lit(dim))
+
+
+# Per-chunk status trail: every chunk was separated from its page; the
+# OAI/DB stage events happened only for a chunk whose vector passed the
+# check (Function.java:149, 165), and the terminal event follows the
+# check — the conditional the reference forgot (Function.java:177).
+_STORED_TRAIL = [
+    "PAGE_SEPARATE_FINISHED", "FINISH_OAI_INVOCATION", "FINISH_DB_INSERTION", "COMPLETED"
+]
+_REJECTED_TRAIL = ["PAGE_SEPARATE_FINISHED", "FAILED_DB_INSERTION"]
 
 
 def ingest_pages(
@@ -105,71 +107,57 @@ def ingest_pages(
 ) -> tuple[DataFrame, DataFrame]:
     """Full §3.1 pipeline from a page relation.
 
-    Returns ``(corpus, status_events)``:
+    Returns ``(corpus, status_events)``, both read from one staged
+    relation, ``embed_chunks(pages_to_chunks(pages))``.  It is
+    materialized the first time either frame is used, so writing both
+    decodes each page and embeds each chunk once, and the two frames
+    always agree on which chunks passed.  The staged rows live in the
+    executors' block managers (a local checkpoint, not a cache entry)
+    and are not recomputed if an executor is lost: a job that reads
+    them after that fails, and the ingest is run again.  ``pages`` is a
+    batch relation; :func:`..streaming.ingest_stream.ingest_stream` calls
+    this once per micro-batch.
 
-    * corpus — the §1.1 vector-table schema (+ chunk_index);
-    * status_events — one event per chunk per completed stage, a
-      set-oriented version of the reference's per-chunk Cosmos writes.
-      The unconditional-COMPLETED bug (Function.java:177) is not
-      replicated: COMPLETED is emitted only for chunks whose embedding
-      passes the ``VECTOR(n)`` check; a quarantined chunk
-      (``on_error='null'``) gets the pre-embedding stages plus the
-      FAILED_DB_INSERTION event from :func:`failed_chunk_status`, and
-      :func:`..operators.status.status_upsert` resolves the union to the
-      failure (terminal-failure outranks terminal-success on ties).
+    * corpus — the §1.1 vector-table schema (+ chunk_index), holding
+      only the rows whose embedding passes the ``VECTOR(n)`` check
+      (:func:`_vector_ok`); pgvector would hold the same rows.
+    * status_events — one event per chunk per stage of its trail.  A
+      stored chunk gets PAGE_SEPARATE_FINISHED, FINISH_OAI_INVOCATION,
+      FINISH_DB_INSERTION, COMPLETED; a rejected one (null vector from a
+      quarantined batch, or wrong length) gets PAGE_SEPARATE_FINISHED,
+      FAILED_DB_INSERTION.  The unconditional-COMPLETED bug
+      (Function.java:177) is not replicated.
 
     ``on_error`` is passed through to the embedder (P5): ``'fail'``
     raises on exhausted retries, ``'null'`` quarantines the batch as
     null vectors so the job survives a partial embedding outage.
     """
-    chunks = pages_to_chunks(pages)
-    corpus = embed_chunks(chunks, dim=dim, embed_fn=embed_fn, on_error=on_error).select(
-        *CORPUS_COLS
-    )
-
-    # Only PAGE_SEPARATE_FINISHED is known at chunk time (Function.java:142-144).
-    # The OAI/DB stage events are history that happened only when the embedding
-    # actually succeeded (Function.java:149, 165), so they derive from the
-    # corpus validity predicate below — a quarantined chunk must not leave
-    # FINISH_OAI_INVOCATION / FINISH_DB_INSERTION ghosts in the raw event log.
-    chunk_events = chunks.select(
-        "id",
-        "fileName",
-        F.lit("PAGE_SEPARATE_FINISHED").alias("status"),
-        "pageNumber",
-        F.current_timestamp().alias("updated_at"),
-    )
-    # Post-embedding events per chunk in ONE pass over corpus (the embedder
-    # runs once for this leg): the full success trail iff the embedding passes
-    # the VECTOR(n) check, the terminal failure otherwise — the conditional
-    # the reference forgot (Function.java:177).
-    valid = F.col("embedding").isNotNull() & (F.size("embedding") == F.lit(dim))
-    success_trail = F.array(
-        F.lit("FINISH_OAI_INVOCATION"), F.lit("FINISH_DB_INSERTION"), F.lit("COMPLETED")
-    )
-    post_events = corpus.select(
-        "id",
-        "fileName",
-        F.explode(
-            F.when(valid, success_trail).otherwise(F.array(F.lit("FAILED_DB_INSERTION")))
-        ).alias("status"),
-        "pageNumber",
-        F.current_timestamp().alias("updated_at"),
+    staged = embed_chunks(
+        pages_to_chunks(pages), dim=dim, embed_fn=embed_fn, on_error=on_error
+    ).localCheckpoint(eager=False)
+    ok = _vector_ok(dim)
+    corpus = staged.filter(ok).select(*CORPUS_COLS)
+    trail = F.when(ok, F.array(*map(F.lit, _STORED_TRAIL))).otherwise(
+        F.array(*map(F.lit, _REJECTED_TRAIL))
     )
     # Hash-partitioned on fileName, so the status write lays out one file
     # per (AQE-coalesced) shuffle partition, not one per page-read split.
-    status_events = chunk_events.unionByName(post_events).repartition("fileName")
+    status_events = staged.select(
+        "id",
+        "fileName",
+        F.explode(trail).alias("status"),
+        "pageNumber",
+        F.current_timestamp().alias("updated_at"),
+    ).repartition("fileName")
     return corpus, status_events
 
 
 def validate_corpus(corpus: DataFrame, dim: int = DEFAULT_DIM) -> DataFrame:
     """The engine-side twin of pgvector's ``VECTOR(n)`` insert check
-    (SURVEY.md §1.1): reject rows whose embedding is missing or has the
-    wrong dimensionality.  Returns the offending rows (empty = valid).
+    (SURVEY.md §1.1): the rows failing :func:`_vector_ok`, i.e. whose
+    embedding is missing or has the wrong dimensionality (empty = valid).
     """
-    return corpus.filter(
-        F.col("embedding").isNull() | (F.size("embedding") != F.lit(dim))
-    )
+    return corpus.filter(~_vector_ok(dim))
 
 
 def write_corpus(corpus: DataFrame, path: str, buckets: int = 64) -> None:

@@ -12,7 +12,6 @@ from .dedup import (  # noqa: F401
     lsh_candidate_pairs,
     minhash_signatures,
 )
-from .flagship_knn import _DD_KNN_BATCH  # noqa: F401
 # Duplicate-cluster resolution (operators/cluster.py): connected
 # components over MinHash-LSH candidate pairs, iterated to fixpoint in
 # Spark and replayed as a recursive CTE in the oracle.
@@ -88,25 +87,6 @@ WINDOW w AS (PARTITION BY event_type)
 
 _register("groupwise_zscore_pandas", _zscore(native=False), _DD_ZSCORE)
 _register("groupwise_zscore_native", _zscore(native=True), _DD_ZSCORE)
-
-
-# ---- the vectorized scale path, held to the same oracle -------------------
-
-from ..operators.knn import knn_join  # noqa: E402
-
-
-def _knn_batch_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    out = knn_join(emb, queries, k=3, metric="l2", payload_cols=["vec_id", "label"])
-    return out.select(
-        "query_id", "rank", "vec_id", "label", F.round("distance", 4).alias("distance")
-    )
-
-
-_register("q2_knn_l2_topk_batch_numpy", _knn_batch_numpy, _DD_KNN_BATCH)
 
 
 # ==========================================================================

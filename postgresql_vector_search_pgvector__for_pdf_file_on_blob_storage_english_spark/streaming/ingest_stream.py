@@ -14,8 +14,12 @@ streaming — the same batch transformation applied per micro-batch via
   omit it for continuous arrival processing.
 
 File-arrival tracking (which blobs are new) is the source's checkpoint
-state — exactly the bookkeeping the Functions host does for the
-reference's trigger, but transactional with the sink writes.
+state — the bookkeeping the Functions host does for the reference's
+trigger.  It is not transactional with the sink writes: ``foreachBatch``
+makes two plain parquet appends (corpus, then status), so delivery is
+at-least-once.  A micro-batch replayed after a crash repeats both
+appends, and a crash between them leaves stored chunks without a status
+trail until the replay.
 """
 
 from __future__ import annotations

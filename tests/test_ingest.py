@@ -3,6 +3,7 @@ corpus + status, batch and streaming (same pipeline, two modes)."""
 
 from __future__ import annotations
 
+import os
 import time
 
 import numpy as np
@@ -33,6 +34,10 @@ from pyspark.sql import functions as F
 DOC_A = f"First page about spark.{PAGE_SEP}Second page about vectors."
 DOC_B = "Single page document."
 LONG_PAGE = ("word " * 2000).strip() + "."  # ~10k chars -> 2 chunks
+
+
+def _chunk_ids(df) -> set[str]:
+    return {r["id"] for r in df.select("id").collect()}
 
 
 @pytest.fixture(scope="module")
@@ -214,34 +219,24 @@ class TestEmbedQuarantine:
     def test_failed_embeds_become_failed_status(self, spark, pdf_dir):
         """Fault injection (SURVEY §5.4): an embed endpoint that rejects
         texts mentioning 'vectors' quarantines those chunks as null
-        vectors; validate_corpus rejects them and they terminate as
+        vectors; they stay out of the corpus and terminate as
         FAILED_DB_INSERTION — the rest of the corpus is unaffected."""
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.functions.embed import (
-            hash_embed_text,
-        )
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.ingest import (
-            embed_chunks,
-            failed_chunk_status,
-        )
 
         def flaky(texts):
             if any("vectors" in t for t in texts):
                 raise ValueError("endpoint rejected batch")
             return [hash_embed_text(t, 16) for t in texts]
 
-        chunks = pages_to_chunks(pdf_source(spark, pdf_dir))
+        pages = pdf_source(spark, pdf_dir)
         # quarantine granularity is the Arrow batch: the poisoned chunk
         # fails, co-batched rows fail with it, other batches are clean
-        corpus = embed_chunks(
-            chunks.repartition(chunks.count()), dim=16, embed_fn=flaky,
-            on_error="null",
-        )
-        failed = failed_chunk_status(corpus, dim=16).collect()
+        pages = pages.repartition(pages.count())
+        corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky, on_error="null")
+        failed = status.filter(F.col("status") == "FAILED_DB_INSERTION").collect()
         failed_keys = {(r["fileName"], r["pageNumber"]) for r in failed}
         assert ("a.pdf", 2) in failed_keys                 # the poisoned chunk
-        assert all(r["status"] == "FAILED_DB_INSERTION" for r in failed)
-        ok = corpus.filter(F.col("embedding").isNotNull())
-        assert 0 < ok.count() < chunks.count()             # rest of corpus survives
+        n_chunks = pages_to_chunks(pages).count()
+        assert 0 < corpus.count() < n_chunks               # rest of corpus survives
 
     def test_ingest_pages_quarantine_resolves_failed(self, spark, pdf_dir):
         """ADVICE r1 repro: a quarantined chunk's events, resolved through
@@ -257,7 +252,7 @@ class TestEmbedQuarantine:
         pages = pdf_source(spark, pdf_dir).repartition(8)
         corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky, on_error="null")
         current = {r["id"]: r["status"] for r in status_upsert(status).collect()}
-        failed_ids = {r["id"] for r in validate_corpus(corpus, dim=16).collect()}
+        failed_ids = _chunk_ids(pages_to_chunks(pages)) - _chunk_ids(corpus)
         assert failed_ids, "fault injection produced no quarantined chunk"
         assert all(current[i] == "FAILED_DB_INSERTION" for i in failed_ids)
         ok_ids = set(current) - failed_ids
@@ -278,7 +273,7 @@ class TestEmbedQuarantine:
 
         pages = pdf_source(spark, pdf_dir).repartition(8)
         corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky, on_error="null")
-        failed_ids = {r["id"] for r in validate_corpus(corpus, dim=16).collect()}
+        failed_ids = _chunk_ids(pages_to_chunks(pages)) - _chunk_ids(corpus)
         assert failed_ids, "fault injection produced no quarantined chunk"
         history = {}
         for r in status.collect():
@@ -306,3 +301,88 @@ class TestEmbedQuarantine:
         chunks = pages_to_chunks(pdf_source(spark, pdf_dir))
         with pytest.raises(Exception, match="embedding failed"):
             embed_chunks(chunks, dim=16, embed_fn=always_fail, on_error="fail").collect()
+
+
+def _write_both(corpus, status, out, status_first=False):
+    """Write an ingest's two frames as its callers do; return the stored
+    corpus and the stored status events."""
+    def write_status():
+        status.write.mode("append").parquet(str(out / "status"))
+
+    if status_first:
+        write_status()
+    write_corpus(corpus, str(out / "corpus"))
+    if not status_first:
+        write_status()
+    spark = corpus.sparkSession
+    return spark.read.parquet(str(out / "corpus")), spark.read.parquet(str(out / "status"))
+
+
+class TestIngestOnce:
+    """One ingest decides each chunk once: the corpus and the status
+    trail are read from one embedded relation."""
+
+    def test_writes_embed_each_chunk_once(self, spark, pdf_dir, tmp_path):
+        log = str(tmp_path / "embedded")
+
+        def counting(texts):
+            # the UDF runs in Python workers: count through a file
+            with open(log, "a") as f:
+                f.write(f"{len(texts)}\n")
+            return [hash_embed_text(t, 16) for t in texts]
+
+        pages = pdf_source(spark, pdf_dir)
+        corpus, status = ingest_pages(pages, dim=16, embed_fn=counting)
+        _write_both(corpus, status, tmp_path)
+        with open(log) as f:
+            embedded = sum(int(n) for n in f)
+        assert embedded == pages_to_chunks(pages).count()
+        for frame in (corpus, status):  # neither frame re-runs decode or embed
+            plan = frame._jdf.queryExecution().executedPlan().toString()
+            assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
+
+    @pytest.mark.parametrize("status_first", [False, True], ids=["corpus_first", "status_first"])
+    def test_corpus_and_status_agree(self, spark, pdf_dir, tmp_path, status_first):
+        """An endpoint whose first answer has the wrong length and whose
+        later answers are good: the rejected batch is neither stored nor
+        COMPLETED, whichever frame is written first."""
+        marker = str(tmp_path / "called")
+
+        def wrong_first(texts):
+            try:
+                os.close(os.open(marker, os.O_CREAT | os.O_EXCL))
+                dim = 17
+            except FileExistsError:
+                dim = 16
+            return [hash_embed_text(t, dim) for t in texts]
+
+        pages = pdf_source(spark, pdf_dir).repartition(4)
+        corpus, status = ingest_pages(pages, dim=16, embed_fn=wrong_first)
+        stored, events = _write_both(corpus, status, tmp_path, status_first)
+        stored_ids = _chunk_ids(stored)
+        current = {r["id"]: r["status"] for r in status_upsert(events).collect()}
+        assert set(current) == _chunk_ids(pages_to_chunks(pages))
+        rejected = set(current) - stored_ids
+        assert stored_ids and rejected
+        assert all(current[i] == "COMPLETED" for i in stored_ids)
+        assert all(current[i] == "FAILED_DB_INSERTION" for i in rejected)
+        assert validate_corpus(stored, dim=16).count() == 0
+
+    def test_wrong_length_vectors_stay_out(self, spark, pdf_dir, tmp_path):
+        def long_for_vectors(texts):
+            return [hash_embed_text(t, 17 if "vectors" in t else 16) for t in texts]
+
+        corpus, status = ingest_pages(pdf_source(spark, pdf_dir), dim=16, embed_fn=long_for_vectors)
+        stored, _ = _write_both(corpus, status, tmp_path)
+        assert validate_corpus(stored, dim=16).count() == 0
+        assert ("a.pdf", 2) not in {(r["fileName"], r["pageNumber"]) for r in stored.collect()}
+        q = hash_embed_text("Single page document.", 16)
+        hit = knn(stored, q, k=1, id_col="id", payload_cols=["fileName"]).first()
+        assert hit["fileName"] == "b.pdf"
+
+    def test_ingest_leaves_no_cache_entry(self, spark, pdf_dir, tmp_path):
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        spark.catalog.clearCache()
+        corpus, status = ingest_pages(pdf_source(spark, pdf_dir), dim=16)
+        _write_both(corpus, status, tmp_path)
+        assert cache.isEmpty()
