@@ -74,12 +74,14 @@ def embed_chunks(
     embed_fn=None,
     text_col: str = "origntext",
     on_error: str = "fail",
+    backoff_s: float = 10.0,
 ) -> DataFrame:
     """P5: attach the embedding column (Arrow-batched; deterministic
     local embedder unless a real endpoint is injected).  With
     ``on_error='null'`` an exhausted-retry batch yields null vectors
-    for downstream quarantine instead of failing the job."""
-    embedder = make_embedder(dim=dim, embed_fn=embed_fn, on_error=on_error)
+    for downstream quarantine instead of failing the job.  ``backoff_s``
+    is the sleep between an endpoint's retries (the reference's 10 s)."""
+    embedder = make_embedder(dim=dim, embed_fn=embed_fn, backoff_s=backoff_s, on_error=on_error)
     return chunks.withColumn("embedding", embedder(F.col(text_col)))
 
 
@@ -104,6 +106,7 @@ def ingest_pages(
     dim: int = DEFAULT_DIM,
     embed_fn=None,
     on_error: str = "fail",
+    backoff_s: float = 10.0,
 ) -> tuple[DataFrame, DataFrame]:
     """Full §3.1 pipeline from a page relation.
 
@@ -128,12 +131,13 @@ def ingest_pages(
       FAILED_DB_INSERTION.  The unconditional-COMPLETED bug
       (Function.java:177) is not replicated.
 
-    ``on_error`` is passed through to the embedder (P5): ``'fail'``
-    raises on exhausted retries, ``'null'`` quarantines the batch as
-    null vectors so the job survives a partial embedding outage.
+    ``on_error`` and ``backoff_s`` are passed through to the embedder
+    (P5): ``'fail'`` raises on exhausted retries, ``'null'`` quarantines
+    the batch as null vectors so the job survives a partial embedding
+    outage.
     """
     staged = embed_chunks(
-        pages_to_chunks(pages), dim=dim, embed_fn=embed_fn, on_error=on_error
+        pages_to_chunks(pages), dim=dim, embed_fn=embed_fn, on_error=on_error, backoff_s=backoff_s
     ).localCheckpoint(eager=False)
     ok = _vector_ok(dim)
     corpus = staged.filter(ok).select(*CORPUS_COLS)

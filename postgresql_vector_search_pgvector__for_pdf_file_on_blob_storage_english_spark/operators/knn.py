@@ -34,17 +34,38 @@ Spark-first physical design
   silently scoring the shared prefix.
 * Results are ordered ``(distance ASC NULLS LAST, id)``, as pgvector's
   ``ORDER BY ... ASC`` puts a null distance (a null vector) last.
-* Batched queries (N query vectors, :func:`knn_join`): the query batch
-  is collected once (under a row cap) into a matrix, and each Arrow
-  batch of the corpus scan scores all queries with one NumPy GEMM in a
-  ``mapInPandas``, keeping per query its k nearest rows plus any row
-  tied with the k-th.  Only these narrow candidates (no embedding) cross
-  the one exchange, to a per-query window that takes the global top-k.
+
+Batched queries (N query vectors, :func:`knn_join`)
+----------------------------------------------------
+The query batch is collected once, as one Arrow table (under a row
+cap), and becomes a matrix.  One scorer takes *blocks* of the
+corpus — ``(payload, vector lengths, flat vector values)`` — scores all
+queries against each block with one NumPy GEMM, and keeps per query its
+k nearest rows plus any row tied with the k-th.  Only these narrow
+candidates (no embedding) cross the one exchange, to a per-query window
+that takes the global top-k.  The blocks come from one of two sources:
+
+* **Files.** A corpus whose optimized plan is a bare Parquet relation,
+  at most under a projection of plain columns, whose needed columns are
+  all data columns (not hive partition columns), and whose file URIs
+  ``pyarrow.fs.FileSystem.from_uri`` opens, is never scanned by Spark.
+  Its ``inputFiles()`` are spread, balanced by bytes, over
+  ``defaultParallelism`` tasks of a ``spark.range(...).mapInArrow``.
+  Each task decodes its files with pyarrow and keeps each decoded block
+  in a byte-bounded LRU (:data:`BLOCK_CACHE_BYTES`) in its reused Python
+  worker, keyed by the file's ``(uri, size, mtime)`` and the columns
+  read, so a worker decodes a file once, not once per batch, and a file
+  rewritten in place is never served stale.  The plan holds no
+  ``FileScan``.
+* **Scan.** Any other corpus (in-memory, filtered, joined, derived)
+  feeds the scorer the Arrow batches of its own scan, through
+  ``mapInArrow``.
 """
 
 from __future__ import annotations
 
 import json
+from collections import OrderedDict
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -63,12 +84,12 @@ def _query_col(query_vec: Sequence[float] | Column) -> Column:
     return F.from_json(F.lit(json.dumps([float(v) for v in query_vec])), "array<double>")
 
 
-def _dims_checked(vec: Column, dim: Column, value: Column) -> Column:
+def _dims_checked(size: Column, dim: Column, value: Column) -> Column:
     """``value``, or pgvector's "different vector dimensions" error for a
-    row whose ``vec`` length is not ``dim`` (a null vector passes)."""
+    row whose vector length ``size`` is not ``dim`` (a null passes)."""
     return F.when(
-        F.size(vec) != dim,
-        F.raise_error(F.format_string("different vector dimensions %d and %d", F.size(vec), dim)),
+        size != dim,
+        F.raise_error(F.format_string("different vector dimensions %d and %d", size, dim)),
     ).otherwise(value)
 
 
@@ -94,12 +115,12 @@ def knn(
         qname = query_vec.columns[0]
         query = F.col(qname)
         scored = corpus.crossJoin(F.broadcast(query_vec)).withColumn(
-            distance_col, _dims_checked(vec, F.size(query), dist_fn(vec, query))
+            distance_col, _dims_checked(F.size(vec), F.size(query), dist_fn(vec, query))
         ).drop(qname)
     else:
         query = _query_col(query_vec)
         scored = corpus.withColumn(
-            distance_col, _dims_checked(vec, F.size(query), dist_fn(vec, query))
+            distance_col, _dims_checked(F.size(vec), F.size(query), dist_fn(vec, query))
         )
     cols = list(payload_cols) if payload_cols is not None else [c for c in corpus.columns if c != vec_col]
     if distance_col not in cols:
@@ -119,26 +140,139 @@ QUERY_BATCH_MAX_ROWS_CONF = "spark.sparkgraft.queryBatch.maxRows"
 DEFAULT_QUERY_BATCH_MAX_ROWS = 100_000
 
 
-def collect_query_batch(queries: DataFrame, cols: Sequence[str]) -> list:
-    """Collect the query relation under the configured row cap — one
-    ``limit(cap + 1)`` job (the limit bounds the transfer itself, not
-    just a post-hoc check), raising when the cap is exceeded."""
+def collect_query_batch(queries: DataFrame, cols: Sequence[str]):
+    """Collect the query relation under the configured row cap as one
+    Arrow table — one ``limit(cap + 1)`` job (the limit bounds the
+    transfer itself, not just a post-hoc check), raising when the cap
+    is exceeded."""
     spark = queries.sparkSession
     cap = int(
         spark.conf.get(QUERY_BATCH_MAX_ROWS_CONF, str(DEFAULT_QUERY_BATCH_MAX_ROWS))
     )
     sel = queries.select(*cols)
     if cap < 0:
-        return sel.collect()
-    rows = sel.limit(cap + 1).collect()
-    if len(rows) > cap:
+        return sel.toArrow()
+    table = sel.limit(cap + 1).toArrow()
+    if table.num_rows > cap:
         raise ValueError(
             f"query batch exceeds {cap} rows; the GEMM/graph-walk paths "
             "collect queries to a driver closure, which is only "
             "broadcast-equivalent for bounded serving batches — split the "
             f"batch, or raise {QUERY_BATCH_MAX_ROWS_CONF} deliberately"
         )
-    return rows
+    return table
+
+
+# Per Python worker: decoded corpus blocks beyond this many bytes are
+# evicted, least recently used first.  A block larger than the bound is
+# decoded for its batch and not kept.
+BLOCK_CACHE_BYTES = 256 << 20
+
+
+class _BlockCache:
+    """Decoded file blocks of one Python worker, least recently used first."""
+
+    def __init__(self, max_bytes: int):
+        self.max_bytes, self.nbytes = max_bytes, 0
+        self.blocks: OrderedDict = OrderedDict()  # key -> (block, nbytes)
+
+    def get(self, key, load):
+        if key in self.blocks:
+            self.blocks.move_to_end(key)
+            return self.blocks[key][0]
+        block = load()
+        size = sum(part.nbytes for part in block)
+        if size <= self.max_bytes:
+            self.blocks[key] = (block, size)
+            self.nbytes += size
+            while self.nbytes > self.max_bytes:
+                self.nbytes -= self.blocks.popitem(last=False)[1][1]
+        return block
+
+    def clear(self) -> None:
+        self.blocks.clear()
+        self.nbytes = 0
+
+
+_BLOCKS = _BlockCache(BLOCK_CACHE_BYTES)
+
+
+def _decode(table, vec_col: str, cols: Sequence[str]):
+    """An Arrow table -> a scorer block: ``(payload table, per-row vector
+    length with -1 for a null vector, flat values of the non-null
+    vectors)``.  The values keep their stored type."""
+    import pyarrow.compute as pc
+
+    vecs = table.column(vec_col).combine_chunks()
+    lens = pc.list_value_length(vecs).fill_null(-1).to_numpy()
+    return table.select(list(cols)), lens, vecs.flatten().to_numpy(zero_copy_only=False)
+
+
+def _file_block(file: tuple, read_schema, vec_col: str, cols: Sequence[str]):
+    """The decoded block of one ``(uri, size, mtime)`` Parquet file, from
+    this worker's cache."""
+    uri = file[0]
+
+    def load():
+        import pyarrow.parquet as pq
+        from pyarrow.fs import FileSystem
+
+        fs, path = FileSystem.from_uri(uri)
+        table = pq.read_table(path, filesystem=fs, schema=read_schema)
+        return _decode(table, vec_col, cols)
+
+    return _BLOCKS.get((*file, read_schema, vec_col, tuple(cols)), load)
+
+
+def _parquet_files(corpus: DataFrame, needed: Sequence[str]) -> list | None:
+    """``[(uri, size, mtime)]`` of a corpus the file source can read:
+    its optimized plan is a bare Parquet relation, at most under a
+    projection of plain columns, every ``needed`` column is a data
+    column, and pyarrow opens every file URI.  ``None`` otherwise."""
+    from pyarrow import ArrowException
+    from pyarrow.fs import FileSystem, FileType
+
+    plan = corpus._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() == "Project":
+        exprs = plan.projectList()
+        if any(
+            exprs.apply(i).getClass().getSimpleName() != "AttributeReference"
+            for i in range(exprs.size())
+        ):
+            return None
+        plan = plan.child()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    relation = plan.relation()
+    if relation.getClass().getSimpleName() != "HadoopFsRelation" or (
+        relation.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+    ):
+        return None
+    if set(needed) & set(relation.partitionSchema().fieldNames()):
+        return None
+    uris = corpus.inputFiles()
+    if not uris:
+        return None
+    try:
+        opened = [FileSystem.from_uri(u) for u in uris]
+        infos = [fs.get_file_info(path) for fs, path in opened]
+    except (ArrowException, OSError):  # a scheme pyarrow cannot open: scan instead
+        return None
+    if any(i.type != FileType.File for i in infos):  # gone since listing: Spark reports it
+        return None
+    return [(u, i.size, i.mtime_ns) for u, i in zip(uris, infos)]
+
+
+def _by_bytes(files: list, n: int) -> list[list]:
+    """Files spread over ``n`` groups, largest first onto the lightest
+    group; the same files always give the same groups."""
+    groups = [[] for _ in range(n)]
+    loads = [0] * len(groups)
+    for f in sorted(files, key=lambda f: (-f[1], f[0])):
+        g = loads.index(min(loads))
+        groups[g].append(f)
+        loads[g] += f[1]
+    return groups
 
 
 def knn_join(
@@ -156,14 +290,29 @@ def knn_join(
     """Per-query exact top-k for a relation of query vectors: the
     generalization the reference only runs at N=1.
 
-    The queries are collected once (:func:`collect_query_batch`) into a
-    matrix.  Each Arrow batch of the corpus scan then computes its
-    |batch| x |queries| distance matrix with one NumPy GEMM and keeps,
-    per query, its k nearest rows plus every row tied with the k-th, so
-    the window over the candidates applies the ``(distance, id)`` rule
-    to all rows that could win.  A null vector gets a null distance and
-    ranks last; a vector whose length differs from the queries' fails
-    with pgvector's "different vector dimensions" error.
+    The queries are collected once (:func:`collect_query_batch`, one
+    Arrow table) into a matrix.  One scorer computes each corpus block's
+    |block| x |queries| distance matrix with one NumPy GEMM in float64
+    and keeps, per query, its k nearest rows plus every row tied with
+    the k-th, so the window over the candidates applies the
+    ``(distance, id)`` rule to all rows that could win.  A null vector
+    gets a null distance and ranks last.  For a vector whose length
+    differs from the queries' the scorer reports that length, and the
+    projection after it raises pgvector's "different vector dimensions"
+    error.
+
+    The blocks come from the corpus files when :func:`_parquet_files`
+    accepts the corpus: ``inputFiles()`` spread by bytes over
+    ``defaultParallelism`` tasks of a ``spark.range`` mapped with
+    ``mapInArrow``, each file decoded by pyarrow and kept in the
+    worker's block cache (keyed by ``(uri, size, mtime)`` and the
+    columns read, with their types,
+    evicted least recently used past :data:`BLOCK_CACHE_BYTES`).  That
+    plan holds no ``FileScan``, and it sees exactly the files a Spark
+    scan of ``corpus`` would read.  The cache lives in this module, so
+    the package must be importable on the executors, as for the ingest
+    UDFs.  Any other corpus is scanned by Spark, and its Arrow batches
+    are the blocks.
 
     BLAS summation order differs from the sequential fold of
     :func:`knn`, so distances agree with it to ~1e-12 relative: the
@@ -171,26 +320,36 @@ def knn_join(
     that tolerance of each other.
     """
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     if metric not in DISTANCE_FNS:
         raise ValueError(f"unsupported metric {metric!r}")
 
-    qrows = collect_query_batch(queries, [query_id_col, query_vec_col])
-    qids = np.array([r[query_id_col] for r in qrows])
-    qmat = np.array([r[query_vec_col] for r in qrows], dtype=np.float64)  # (Q, d)
-    if metric == "cosine" and len(qrows):
+    qtable = collect_query_batch(queries, [query_id_col, query_vec_col])
+    qids = qtable.column(0).combine_chunks()
+    qvecs = qtable.column(1).combine_chunks()
+    n_q = len(qids)
+    qlens = pc.list_value_length(qvecs).to_numpy(zero_copy_only=False)
+    if qvecs.null_count or len(set(qlens)) > 1:
+        raise ValueError("query vectors must be non-null and of one length")
+    dim = int(qlens[0]) if n_q else 0
+    qmat = qvecs.flatten().to_numpy(zero_copy_only=False).astype(np.float64).reshape(n_q, dim)
+    if metric == "cosine" and n_q:
         qmat = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
     qsq = (qmat * qmat).sum(axis=-1)  # (Q,)
-    qidx = np.arange(len(qrows))
+    qidx = np.arange(n_q)
 
     cols = list(payload_cols) if payload_cols is not None else [
         c for c in corpus.columns if c != vec_col
     ]
-
+    needed = list(dict.fromkeys([*cols, vec_col]))
+    fields = [T.StructField(c, corpus.schema[c].dataType) for c in cols]
     schema = T.StructType(
         [T.StructField(query_id_col, queries.schema[query_id_col].dataType)]
-        + [corpus.schema[c] for c in cols]
-        + [T.StructField(distance_col, T.DoubleType())]
+        + fields
+        + [T.StructField(distance_col, T.DoubleType()), T.StructField("_bad_len", T.IntegerType())]
     )
 
     def distances(cmat):
@@ -202,38 +361,70 @@ def knn_join(
         np.maximum(sq, 0.0, out=sq)
         return np.sqrt(sq) if metric == "l2" else sq
 
-    def score(batches: Iterator) -> Iterator:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            scorable = pdf[vec_col].notna().to_numpy()
-            dist = np.full((len(pdf), len(qrows)), np.nan)  # NaN -> null distance
-            if scorable.any():
-                dist[scorable] = distances(
-                    np.array(list(pdf[vec_col][scorable]), dtype=np.float64)
-                )
-            kk = min(k, len(pdf))
-            top = np.argpartition(dist, kk - 1, axis=0)[:kk]  # NaN sorts last
-            take = dist <= dist[top[-1], qidx]  # ties with the k-th
-            take[top, qidx] = True
-            qi, ri = np.nonzero(take.T)
-            out = pdf.iloc[ri][cols].reset_index(drop=True)
-            out.insert(0, query_id_col, qids[qi])
-            out[distance_col] = dist[ri, qi]
-            yield out
+    def rows(payload, ri, qi, dist, bad_len=None):
+        out = payload.take(pa.array(ri, pa.int64()))
+        out = out.add_column(0, query_id_col, qids.take(pa.array(qi, pa.int64())))
+        out = out.append_column(distance_col, pa.array(dist, pa.float64(), from_pandas=True))
+        lens = pa.nulls(len(ri), pa.int32()) if bad_len is None else pa.array(bad_len, pa.int32())
+        return out.append_column("_bad_len", lens)
 
-    vec = F.col(vec_col)
-    scan = corpus.select(
-        _dims_checked(vec, F.lit(qmat.shape[-1]), vec).alias(vec_col),
-        *[c for c in cols if c != vec_col],
+    def score(block):
+        """The candidate rows of one block, as an Arrow table."""
+        payload, lens, flat = block
+        scorable = lens >= 0
+        bad = np.flatnonzero(scorable & (lens != dim))
+        if len(bad):  # one row carries the wrong length out to the check
+            return rows(payload, bad[:1], [0], [None], lens[bad[:1]])
+        dist = np.full((len(lens), n_q), np.nan)  # NaN -> null distance
+        if scorable.any():
+            dist[scorable] = distances(flat.reshape(-1, dim).astype(np.float64))
+        kk = min(k, len(lens))
+        top = np.argpartition(dist, kk - 1, axis=0)[:kk]  # NaN sorts last
+        take = dist <= dist[top[-1], qidx]  # ties with the k-th
+        take[top, qidx] = True
+        qi, ri = np.nonzero(take.T)
+        return rows(payload, ri, qi, dist[ri, qi])
+
+    def candidates(blocks: Iterator) -> Iterator:
+        for block in blocks:
+            if len(block[1]):
+                yield from score(block).to_batches()
+
+    files = _parquet_files(corpus, needed) if n_q else None
+    if files is not None:
+        spark = corpus.sparkSession
+        groups = _by_bytes(files, spark.sparkContext.defaultParallelism)
+        read_schema = to_arrow_schema(T.StructType([corpus.schema[c] for c in needed]))
+
+        def file_blocks(batches: Iterator) -> Iterator:
+            for batch in batches:
+                for g in batch.column(0).to_pylist():
+                    for file in groups[g]:
+                        yield _file_block(file, read_schema, vec_col, cols)
+
+        source = spark.range(0, len(groups), 1, len(groups)).mapInArrow(
+            lambda it: candidates(file_blocks(it)), schema
+        )
+    else:
+
+        def scan_blocks(batches: Iterator) -> Iterator:
+            for batch in batches:
+                yield _decode(pa.Table.from_batches([batch]), vec_col, cols)
+
+        scan = corpus.select(*needed)
+        if not n_q:
+            scan = scan.limit(0)  # nothing to score
+        source = scan.mapInArrow(lambda it: candidates(scan_blocks(it)), schema)
+
+    checked = source.select(
+        query_id_col,
+        *cols,
+        _dims_checked(F.col("_bad_len"), F.lit(dim), F.col(distance_col)).alias(distance_col),
     )
-    if not len(qrows):
-        scan = scan.limit(0)  # nothing to score
-    candidates = scan.mapInPandas(score, schema)
     global_w = Window.partitionBy(query_id_col).orderBy(
         F.col(distance_col).asc_nulls_last(), id_col
     )
     return (
-        candidates.withColumn("rank", F.row_number().over(global_w))
+        checked.withColumn("rank", F.row_number().over(global_w))
         .filter(F.col("rank") <= k)
     )

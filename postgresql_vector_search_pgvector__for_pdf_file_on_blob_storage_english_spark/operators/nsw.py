@@ -516,7 +516,7 @@ def hnsw_search_join(
     from .knn import collect_query_batch
 
     qrows = collect_query_batch(queries, [query_id_col, query_vec_col])
-    qlist = [(r[query_id_col], [float(v) for v in r[query_vec_col]]) for r in qrows]
+    qlist = [(r[query_id_col], [float(v) for v in r[query_vec_col]]) for r in qrows.to_pylist()]
     schema = T.StructType(
         [
             T.StructField(query_id_col, T.LongType()),

@@ -138,10 +138,15 @@ def pdf_source(
 ) -> DataFrame:
     """S1+S2+P1 composed: one row per page, ``(fileName, pageNumber, text)``.
 
-    ``fileName`` is the file's base name (the reference's blob name).
+    ``fileName`` is the file's base name (the reference's blob name).  A
+    file that does not decode is quarantined (``on_error='skip'``): like
+    an empty document it gives one row with a null page and no chunks,
+    and the other files' pages still flow, so one bad upload neither
+    fails a batch ingest nor stalls a stream that would replay the same
+    failing micro-batch.
     """
     binary = read_binary_docs(spark, path, glob, stream)
-    paged = extract_pages(binary)
+    paged = extract_pages(binary, on_error="skip")
     return paged.select(
         F.element_at(F.split(F.col("path"), "/"), -1).alias("fileName"),
         F.posexplode_outer(F.col("pages")).alias("_pos", "page"),

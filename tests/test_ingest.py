@@ -90,6 +90,19 @@ class TestPdfSource:
         assert pages.isStreaming
         assert pages.columns == ["fileName", "pageNumber", "text"]
 
+    def test_undecodable_pdf_is_quarantined(self, spark, pdf_dir, tmp_path):
+        # one bad upload among good ones: the ingest goes through and the
+        # good files' chunks reach the corpus
+        import shutil
+
+        inbox = tmp_path / "inbox"
+        shutil.copytree(pdf_dir, inbox)
+        (inbox / "bad.pdf").write_bytes(b"%PDF-1.7 x")
+        corpus, status = ingest_pages(pdf_source(spark, str(inbox)), dim=16)
+        stored, _ = _write_both(corpus, status, tmp_path)
+        assert {r["fileName"] for r in stored.select("fileName").collect()} == {"a.pdf", "b.pdf", "long.pdf"}
+        assert _chunk_ids(stored) == _chunk_ids(pages_to_chunks(pdf_source(spark, pdf_dir)))
+
 
 class TestBatchIngest:
     def test_chunk_ids_deterministic_idempotent(self, spark, pdf_dir):
@@ -231,7 +244,7 @@ class TestEmbedQuarantine:
         # quarantine granularity is the Arrow batch: the poisoned chunk
         # fails, co-batched rows fail with it, other batches are clean
         pages = pages.repartition(pages.count())
-        corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky, on_error="null")
+        corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky, on_error="null", backoff_s=0)
         failed = status.filter(F.col("status") == "FAILED_DB_INSERTION").collect()
         failed_keys = {(r["fileName"], r["pageNumber"]) for r in failed}
         assert ("a.pdf", 2) in failed_keys                 # the poisoned chunk
@@ -250,7 +263,7 @@ class TestEmbedQuarantine:
             return [hash_embed_text(t, 16) for t in texts]
 
         pages = pdf_source(spark, pdf_dir).repartition(8)
-        corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky, on_error="null")
+        corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky, on_error="null", backoff_s=0)
         current = {r["id"]: r["status"] for r in status_upsert(status).collect()}
         failed_ids = _chunk_ids(pages_to_chunks(pages)) - _chunk_ids(corpus)
         assert failed_ids, "fault injection produced no quarantined chunk"
@@ -272,7 +285,7 @@ class TestEmbedQuarantine:
             return [hash_embed_text(t, 16) for t in texts]
 
         pages = pdf_source(spark, pdf_dir).repartition(8)
-        corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky, on_error="null")
+        corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky, on_error="null", backoff_s=0)
         failed_ids = _chunk_ids(pages_to_chunks(pages)) - _chunk_ids(corpus)
         assert failed_ids, "fault injection produced no quarantined chunk"
         history = {}
@@ -300,7 +313,7 @@ class TestEmbedQuarantine:
 
         chunks = pages_to_chunks(pdf_source(spark, pdf_dir))
         with pytest.raises(Exception, match="embedding failed"):
-            embed_chunks(chunks, dim=16, embed_fn=always_fail, on_error="fail").collect()
+            embed_chunks(chunks, dim=16, embed_fn=always_fail, on_error="fail", backoff_s=0).collect()
 
 
 def _write_both(corpus, status, out, status_first=False):

@@ -294,3 +294,248 @@ class TestQueryBatchCap:
                 hnsw_search_join(g, queries, k=2, ef_search=8)
         finally:
             spark.conf.unset(QUERY_BATCH_MAX_ROWS_CONF)
+
+
+# ---------------------------------------------------------------------------
+# knn_join over a file-backed corpus: blocks decoded from the Parquet
+# files and kept in the Python workers, no Spark scan of the corpus.
+
+
+def _write_file_corpus(spark, path, ids, vecs, files):
+    """write_corpus rows (vec_id, embedding, fileName) and read them back."""
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.ingest import (
+        write_corpus,
+    )
+
+    rows = [
+        (int(i), None if v is None else [float(x) for x in v], f)
+        for i, v, f in zip(ids, vecs, files)
+    ]
+    write_corpus(
+        spark.createDataFrame(rows, "vec_id long, embedding array<float>, fileName string"), str(path)
+    )
+    return spark.read.parquet(str(path))
+
+
+def _query_frame(spark, qmat):
+    return spark.createDataFrame(
+        [(i, [float(x) for x in q]) for i, q in enumerate(qmat)], "query_id long, query_vec array<double>"
+    )
+
+
+def _plan(df):
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.plans.inspect import (
+        explain_str,
+    )
+
+    return explain_str(df, "simple")
+
+
+def _reads_files(df) -> bool:
+    import re
+
+    plan = _plan(df)
+    return "FileScan" not in plan and re.search(r"MapInArrow .*\n\s*\+- Range ", plan) is not None
+
+
+def _ranked(df):
+    got = {}
+    for r in sorted(df.collect(), key=lambda r: (r["query_id"], r["rank"])):
+        got.setdefault(r["query_id"], []).append(r["vec_id"])
+    return got
+
+
+def _brute_ranked(ids, mat, qmat, k, metric="l2"):
+    out = {}
+    for qi, q in enumerate(qmat):
+        if metric == "l2":
+            d = np.linalg.norm(mat - q, axis=1)
+        elif metric == "cosine":
+            d = 1.0 - (mat @ q) / (np.linalg.norm(mat, axis=1) * np.linalg.norm(q))
+        else:
+            d = -(mat @ q)
+        out[qi] = [int(ids[i]) for i in np.lexsort((ids, d))[:k]]
+    return out
+
+
+@pytest.fixture()
+def mixture(spark, tmp_path):
+    """240 vectors at dim 32 in 6 source files, and 12 queries near them."""
+    rng = np.random.default_rng(7)
+    mat = rng.normal(size=(240, 32)).astype(np.float32)
+    ids = rng.permutation(240)
+    corpus = _write_file_corpus(spark, tmp_path / "corpus", ids, mat, [f"f{j % 6}.pdf" for j in range(240)])
+    qmat = mat[rng.choice(240, 12)].astype(np.float64) + rng.normal(scale=0.1, size=(12, 32))
+    return corpus, ids, mat.astype(np.float64), qmat
+
+
+@pytest.mark.parametrize("metric", ["l2", "cosine", "dot"])
+def test_file_corpus_matches_bruteforce(spark, mixture, metric):
+    corpus, ids, mat, qmat = mixture
+    assert len(corpus.inputFiles()) > 1
+    got = knn_join(corpus, _query_frame(spark, qmat), k=5, metric=metric, payload_cols=["vec_id"])
+    assert _reads_files(got)
+    assert _ranked(got) == _brute_ranked(ids, mat, qmat, 5, metric)
+
+
+def test_file_corpus_ties_break_by_id(spark, tmp_path):
+    # 16 vectors stored 4x under shuffled ids, all in one file: every
+    # top-5 holds tied copies, which must come back in id order.
+    dim = 1536
+    rng = np.random.default_rng(dim)
+    base = rng.normal(size=(16, dim)).astype(np.float32)
+    ids = rng.permutation(64)
+    vecs = [base[v] for c in range(4) for v in range(16)]
+    corpus = _write_file_corpus(spark, tmp_path / "corpus", ids, vecs, ["one.pdf"] * 64)
+    assert len(corpus.inputFiles()) == 1
+    qmat = base[np.arange(64) % 16] + rng.normal(scale=0.3, size=(64, dim))
+    copies = {v: sorted(int(ids[c * 16 + v]) for c in range(4)) for v in range(16)}
+    expect = {}
+    for i in range(64):
+        order = np.argsort(np.linalg.norm(base.astype(np.float64) - qmat[i], axis=1))
+        expect[i] = [vid for v in order for vid in copies[v]][:5]
+    got = knn_join(corpus, _query_frame(spark, qmat), k=5, payload_cols=["vec_id"])
+    assert _reads_files(got)
+    assert _ranked(got) == expect
+
+
+def test_file_corpus_null_vector_ranks_last(spark, tmp_path):
+    corpus = _write_file_corpus(
+        spark, tmp_path / "corpus", [0, 1, 2], [None, [1.0, 0.0], [0.0, 1.0]], ["a.pdf"] * 3
+    )
+    queries = _query_frame(spark, [[1.0, 0.0]])
+
+    def ranked(k):
+        got = knn_join(corpus, queries, k=k, payload_cols=["vec_id"])
+        assert _reads_files(got)
+        return [(r["rank"], r["vec_id"], r["distance"]) for r in sorted(got.collect(), key=lambda r: r["rank"])]
+
+    assert ranked(3) == [(1, 1, 0.0), (2, 2, 2 ** 0.5), (3, 0, None)]
+    assert ranked(2) == [(1, 1, 0.0), (2, 2, 2 ** 0.5)]
+
+
+@pytest.mark.parametrize("vec", [[1.0, 0.0, 5.0], [1.0]], ids=["longer", "shorter"])
+def test_file_corpus_dimension_mismatch_raises(spark, tmp_path, vec):
+    corpus = _write_file_corpus(
+        spark, tmp_path / "corpus", [0, 1, 2], [[0.0, 1.0], vec, [1.0, 1.0]], ["a.pdf", "a.pdf", "b.pdf"]
+    )
+    got = knn_join(corpus, _query_frame(spark, [[1.0, 0.0]]), k=1, payload_cols=["vec_id"])
+    assert _reads_files(got)
+    with pytest.raises(SparkRuntimeException, match=f"different vector dimensions {len(vec)} and 2"):
+        got.collect()
+
+
+def test_file_corpus_sees_appended_file(spark, mixture, tmp_path):
+    corpus, ids, mat, qmat = mixture
+    queries = _query_frame(spark, qmat[:1])
+    assert _ranked(knn_join(corpus, queries, k=1, payload_cols=["vec_id"]))[0] != [1000]
+    _write_file_corpus(spark, tmp_path / "corpus", [1000], [qmat[0]], ["appended.pdf"])
+    reread = spark.read.parquet(str(tmp_path / "corpus"))
+    assert len(reread.inputFiles()) == len(corpus.inputFiles()) + 1
+    assert _ranked(knn_join(reread, queries, k=1, payload_cols=["vec_id"]))[0] == [1000]
+
+
+def test_file_rewritten_in_place_is_not_served_stale(spark, tmp_path):
+    import shutil
+
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.knn import (
+        _file_block,
+        _parquet_files,
+    )
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    rng = np.random.default_rng(3)
+    old, new = rng.normal(size=(2, 8, 16)).astype(np.float32)
+    path = tmp_path / "corpus"
+    corpus = _write_file_corpus(spark, path, range(8), old, ["a.pdf"] * 8)
+    (target,) = path.rglob("*.parquet")
+    queries = _query_frame(spark, new[:1])
+    for _ in range(2):  # the second call is answered from warm blocks
+        assert _ranked(knn_join(corpus, queries, k=1, payload_cols=["vec_id"]))[0] != [100]
+    # this process's own block cache, keyed as the scorer keys it
+    schema = to_arrow_schema(corpus.select("embedding", "vec_id").schema)
+
+    def cached_ids(df):
+        (file,) = _parquet_files(df, ["vec_id", "embedding"])
+        return sorted(_file_block(file, schema, "embedding", ["vec_id"])[0].column(0).to_pylist())
+
+    assert cached_ids(corpus) == list(range(8))
+    _write_file_corpus(spark, tmp_path / "other", range(100, 108), new, ["a.pdf"] * 8)
+    (rewrite,) = (tmp_path / "other").rglob("*.parquet")
+    shutil.copyfile(rewrite, target)
+    (target.parent / f".{target.name}.crc").unlink()  # Hadoop's checksum of the old bytes
+    reread = spark.read.parquet(str(path))
+    assert reread.inputFiles() == corpus.inputFiles()
+    assert cached_ids(reread) == list(range(100, 108))
+    assert _ranked(knn_join(reread, queries, k=1, payload_cols=["vec_id"]))[0] == [100]
+
+
+def test_file_blocks_are_keyed_by_their_columns(spark, mixture):
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.knn import (
+        _file_block,
+        _parquet_files,
+    )
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    corpus = mixture[0]
+    file = _parquet_files(corpus, ["vec_id", "embedding"])[0]
+    schema = to_arrow_schema(corpus.select("vec_id", "embedding").schema)
+    narrow = _file_block(file, schema, "embedding", ["vec_id"])
+    wide = _file_block(file, schema, "embedding", ["vec_id", "embedding"])
+    assert (narrow[0].column_names, wide[0].column_names) == (["vec_id"], ["vec_id", "embedding"])
+
+
+def _worker_block_uris(spark, clear=False):
+    """The file URIs cached in the Python workers, after clearing each
+    worker's cache when ``clear``.  Idle workers are handed out first in,
+    first out, so a job with more one-row tasks than workers reaches
+    every idle worker."""
+    import pyarrow as pa
+
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators import (
+        knn as knn_mod,
+    )
+
+    def visit(batches):
+        for _ in batches:
+            if clear:
+                knn_mod._BLOCKS.clear()
+            uris = [key[0] for key in knn_mod._BLOCKS.blocks]
+            yield pa.RecordBatch.from_pydict({"uri": pa.array(uris, pa.string())})
+
+    return {r["uri"] for r in spark.range(0, 32, 1, 32).mapInArrow(visit, "uri string").collect()}
+
+
+def test_cold_warm_and_cleared_cache_agree(spark, mixture):
+    corpus, _, _, qmat = mixture
+    queries = _query_frame(spark, qmat)
+
+    def rows():
+        got = knn_join(corpus, queries, k=5, payload_cols=["vec_id"])
+        return sorted((r["query_id"], r["rank"], r["vec_id"], r["distance"]) for r in got.collect())
+
+    files = set(corpus.inputFiles())
+    assert not files & _worker_block_uris(spark)  # never read before
+    cold = rows()
+    assert files <= _worker_block_uris(spark)  # every file block is now cached
+    warm = rows()
+    assert not _worker_block_uris(spark, clear=True)
+    assert not files & _worker_block_uris(spark)
+    cleared = rows()
+    assert cold == warm == cleared
+
+
+def test_in_memory_and_filtered_corpus_take_the_scan(spark, mixture):
+    corpus, ids, mat, qmat = mixture
+    queries = _query_frame(spark, qmat)
+    in_memory = spark.createDataFrame(
+        [(int(i), v.tolist()) for i, v in zip(ids, mat.astype(np.float32))], "vec_id long, embedding array<float>"
+    )
+    keep = ids % 3 != 0
+    filtered = corpus.filter(F.col("vec_id") % 3 != 0)
+    for df, (sub_ids, sub_mat) in [(in_memory, (ids, mat)), (filtered, (ids[keep], mat[keep]))]:
+        got = knn_join(df, queries, k=5, payload_cols=["vec_id"])
+        plan = _plan(got)
+        assert not _reads_files(got) and "MapInArrow" in plan and "Range" not in plan
+        assert _ranked(got) == _brute_ranked(sub_ids, sub_mat, qmat, 5)
+    assert "FileScan parquet" in _plan(knn_join(filtered, queries, k=5, payload_cols=["vec_id"]))

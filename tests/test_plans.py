@@ -54,10 +54,11 @@ class TestFlagshipKnn:
         assert count_exchanges(df) == 0
 
     def test_batched_knn_single_exchange(self, spark):
-        # the query matrix rides in the GEMM scorer's closure: one
-        # MapInPandas over the (dimension-checked) corpus scan, no join
-        # node; the only shuffle is the per-query window for the global
-        # top-k.
+        # the query matrix rides in the GEMM scorer's closure, and the
+        # Parquet fixture is read through the file source: one
+        # MapInArrow over a Range of file-group tasks, no corpus scan and
+        # no join node; the only shuffle is the per-query window for the
+        # global top-k.
         import re
 
         from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.plans.inspect import (
@@ -66,7 +67,8 @@ class TestFlagshipKnn:
 
         df = q(spark, "q2_knn_l2_topk_batch")
         plan = explain_str(df, "simple")
-        assert re.search(r"MapInPandas .*\n\s*\+- Project .*\n\s*\+- FileScan parquet", plan)
+        assert re.search(r"MapInArrow .*\n\s*\+- Range ", plan)
+        assert "FileScan" not in plan
         assert "Join" not in plan
         assert count_exchanges(df) == 1
 
