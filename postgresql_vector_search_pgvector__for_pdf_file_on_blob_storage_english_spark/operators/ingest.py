@@ -73,15 +73,14 @@ def embed_chunks(
     dim: int = DEFAULT_DIM,
     embed_fn=None,
     text_col: str = "origntext",
-    on_error: str = "fail",
     backoff_s: float = 10.0,
 ) -> DataFrame:
     """P5: attach the embedding column (Arrow-batched; deterministic
-    local embedder unless a real endpoint is injected).  With
-    ``on_error='null'`` an exhausted-retry batch yields null vectors
-    for downstream quarantine instead of failing the job.  ``backoff_s``
-    is the sleep between an endpoint's retries (the reference's 10 s)."""
-    embedder = make_embedder(dim=dim, embed_fn=embed_fn, backoff_s=backoff_s, on_error=on_error)
+    local embedder unless a real endpoint is injected).  A batch the
+    endpoint still rejects after its retries gets null vectors, which
+    the ``VECTOR(n)`` check quarantines.  ``backoff_s`` is the sleep
+    between an endpoint's retries (the reference's 10 s)."""
+    embedder = make_embedder(dim=dim, embed_fn=embed_fn, backoff_s=backoff_s)
     return chunks.withColumn("embedding", embedder(F.col(text_col)))
 
 
@@ -105,7 +104,6 @@ def ingest_pages(
     pages: DataFrame,
     dim: int = DEFAULT_DIM,
     embed_fn=None,
-    on_error: str = "fail",
     backoff_s: float = 10.0,
 ) -> tuple[DataFrame, DataFrame]:
     """Full §3.1 pipeline from a page relation.
@@ -131,13 +129,13 @@ def ingest_pages(
       FAILED_DB_INSERTION.  The unconditional-COMPLETED bug
       (Function.java:177) is not replicated.
 
-    ``on_error`` and ``backoff_s`` are passed through to the embedder
-    (P5): ``'fail'`` raises on exhausted retries, ``'null'`` quarantines
-    the batch as null vectors so the job survives a partial embedding
-    outage.
+    No chunk fails the ingest: a batch the endpoint rejects on every
+    retry (``backoff_s`` apart) is quarantined as rejected chunks, and
+    the other batches are stored, as the reference marks the chunk
+    FAILED_DB_INSERTION and moves on (Function.java:173-174).
     """
     staged = embed_chunks(
-        pages_to_chunks(pages), dim=dim, embed_fn=embed_fn, on_error=on_error, backoff_s=backoff_s
+        pages_to_chunks(pages), dim=dim, embed_fn=embed_fn, backoff_s=backoff_s
     ).localCheckpoint(eager=False)
     ok = _vector_ok(dim)
     corpus = staged.filter(ok).select(*CORPUS_COLS)
@@ -203,8 +201,6 @@ def upsert_corpus_files(
     files (bucket = pmod(xxhash64(fileName), buckets), so untouched
     buckets are never rewritten).
     """
-    from pyspark.sql import functions as F  # local: keep module import light
-
     touched = [r[0] for r in new_corpus.select("fileName").distinct().collect()]
     new_bucketed = new_corpus.withColumn(
         "bucket", F.pmod(F.xxhash64("fileName"), F.lit(buckets))

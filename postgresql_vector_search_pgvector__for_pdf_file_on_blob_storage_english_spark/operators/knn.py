@@ -51,7 +51,9 @@ that takes the global top-k.  The blocks come from one of two sources:
   ``pyarrow.fs.FileSystem.from_uri`` opens, is never scanned by Spark.
   Its ``inputFiles()`` are spread, balanced by bytes, over
   ``defaultParallelism`` tasks of a ``spark.range(...).mapInArrow``.
-  Each task decodes its files with pyarrow and keeps each decoded block
+  Each task decodes its files with pyarrow, matching each column to the
+  file's field as Spark's reader does (case-insensitively unless
+  ``spark.sql.caseSensitive``), and keeps each decoded block
   in a byte-bounded LRU (:data:`BLOCK_CACHE_BYTES`) in its reused Python
   worker, keyed by the file's ``(uri, size, mtime)`` and the columns
   read, so a worker decodes a file once, not once per batch, and a file
@@ -208,20 +210,38 @@ def _decode(table, vec_col: str, cols: Sequence[str]):
     return table.select(list(cols)), lens, vecs.flatten().to_numpy(zero_copy_only=False)
 
 
-def _file_block(file: tuple, read_schema, vec_col: str, cols: Sequence[str]):
+def _file_block(
+    file: tuple, read_schema, vec_col: str, cols: Sequence[str], case_sensitive: bool = False
+):
     """The decoded block of one ``(uri, size, mtime)`` Parquet file, from
-    this worker's cache."""
+    this worker's cache.  Each column of ``read_schema`` is read from
+    the file's field of that name, matched as Spark's Parquet reader
+    matches it: case-insensitively unless ``case_sensitive``, failing
+    on an ambiguous match; a column the file lacks reads as nulls."""
     uri = file[0]
 
     def load():
+        import pyarrow as pa
         import pyarrow.parquet as pq
         from pyarrow.fs import FileSystem
 
         fs, path = FileSystem.from_uri(uri)
-        table = pq.read_table(path, filesystem=fs, schema=read_schema)
-        return _decode(table, vec_col, cols)
+        names = pq.read_schema(path, filesystem=fs).names
+        fold = (lambda n: n) if case_sensitive else str.lower
 
-    return _BLOCKS.get((*file, read_schema, vec_col, tuple(cols)), load)
+        def stored(name):
+            found = [n for n in names if fold(n) == fold(name)]
+            if len(found) > 1:
+                raise RuntimeError(
+                    f'Found duplicate field(s) "{name}": {found} in case-insensitive mode'
+                )
+            return found[0] if found else name
+
+        file_schema = pa.schema([f.with_name(stored(f.name)) for f in read_schema])
+        table = pq.read_table(path, filesystem=fs, schema=file_schema)
+        return _decode(table.rename_columns(read_schema.names), vec_col, cols)
+
+    return _BLOCKS.get((*file, read_schema, vec_col, tuple(cols), case_sensitive), load)
 
 
 def _parquet_files(corpus: DataFrame, needed: Sequence[str]) -> list | None:
@@ -395,12 +415,13 @@ def knn_join(
         spark = corpus.sparkSession
         groups = _by_bytes(files, spark.sparkContext.defaultParallelism)
         read_schema = to_arrow_schema(T.StructType([corpus.schema[c] for c in needed]))
+        case_sensitive = spark.conf.get("spark.sql.caseSensitive", "false").lower() == "true"
 
         def file_blocks(batches: Iterator) -> Iterator:
             for batch in batches:
                 for g in batch.column(0).to_pylist():
                     for file in groups[g]:
-                        yield _file_block(file, read_schema, vec_col, cols)
+                        yield _file_block(file, read_schema, vec_col, cols, case_sensitive)
 
         source = spark.range(0, len(groups), 1, len(groups)).mapInArrow(
             lambda it: candidates(file_blocks(it)), schema

@@ -59,9 +59,10 @@ def status_upsert(events: DataFrame, id_col: str = "id", ts_col: str = "updated_
 
     Last-write-wins on ``(ts, status-ordinal)`` — the ordinal breaks
     same-timestamp ties in state-machine order so a batch that emits
-    several transitions at one timestamp resolves to the furthest state;
-    terminal failure outranks terminal success on a tie (a quarantined
-    chunk unioned with the happy-path events must resolve FAILED).
+    several transitions at one timestamp resolves to the furthest state.
+    ``ingest_pages`` gives each chunk one trail that ends in exactly one
+    terminal state; should a log still hold both for one id at one
+    timestamp, the failure outranks the success.
     """
     ordinal = F.array_position(F.array(*[F.lit(s) for s in _TIE_ORDER]), F.col("status"))
     w = Window.partitionBy(id_col).orderBy(F.col(ts_col).desc(), ordinal.desc())

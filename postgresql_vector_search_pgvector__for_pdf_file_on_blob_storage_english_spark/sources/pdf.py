@@ -86,7 +86,6 @@ def extract_pages(
     df: DataFrame,
     content_col: str = "content",
     out_col: str = "pages",
-    on_error: str = "fail",
 ) -> DataFrame:
     """P1 as an Arrow-batched table function: adds ``pages
     array<struct<pageNumber,text>>`` plus ``extract_error string``
@@ -97,16 +96,15 @@ def extract_pages(
     is dropped from the output — page text, not raw blobs, crosses the
     next shuffle.
 
-    ``on_error``: ``'fail'`` propagates the first decode exception
-    (fail-fast default); ``'skip'`` emits the row with empty pages and
-    the error message in ``extract_error`` — one malformed blob among
-    millions must not kill a 1000-executor ingest, and the error rows
-    feed the status store as FAILED entries.
+    A blob that does not decode is quarantined: its row has empty
+    ``pages`` and the decode error's message in ``extract_error``, so
+    one malformed blob among millions does not kill the ingest.  The
+    error stays in that column; a file that yields no page gets no
+    chunk and so no chunk trail, as in the reference, whose trail
+    starts at PAGE_SEPARATE_FINISHED.
     """
     import pandas as pd
 
-    if on_error not in ("fail", "skip"):
-        raise ValueError("on_error must be 'fail' or 'skip'")
     keep = [c for c in df.columns if c != content_col]
     schema = T.StructType(
         [df.schema[c] for c in keep]
@@ -121,8 +119,6 @@ def extract_pages(
                     pages.append(extract_pages_bytes(b) if b is not None else [])
                     errors.append(None)
                 except Exception as e:  # noqa: BLE001 — quarantine contract
-                    if on_error == "fail":
-                        raise
                     pages.append([])
                     errors.append(f"{type(e).__name__}: {e}")
             out = pdf[keep].copy()
@@ -139,14 +135,14 @@ def pdf_source(
     """S1+S2+P1 composed: one row per page, ``(fileName, pageNumber, text)``.
 
     ``fileName`` is the file's base name (the reference's blob name).  A
-    file that does not decode is quarantined (``on_error='skip'``): like
-    an empty document it gives one row with a null page and no chunks,
-    and the other files' pages still flow, so one bad upload neither
-    fails a batch ingest nor stalls a stream that would replay the same
-    failing micro-batch.
+    file that does not decode is quarantined by :func:`extract_pages`:
+    like an empty document it gives one row with a null page and no
+    chunks, and the other files' pages still flow, so one bad upload
+    neither fails a batch ingest nor stalls a stream that would replay
+    the same failing micro-batch.
     """
     binary = read_binary_docs(spark, path, glob, stream)
-    paged = extract_pages(binary, on_error="skip")
+    paged = extract_pages(binary)
     return paged.select(
         F.element_at(F.split(F.col("path"), "/"), -1).alias("fileName"),
         F.posexplode_outer(F.col("pages")).alias("_pos", "page"),

@@ -440,8 +440,8 @@ def _check_page_fonts(doc: "_PdfDoc", page: dict) -> None:
     CMaps, and custom /Encoding entries all mean the shown bytes are NOT
     Latin-1 — silently decoding them would feed garbled text into the
     corpus.  Raising here routes the file into ``extract_pages``'
-    ``on_error='skip'`` quarantine instead (the loud-failure contract the
-    reference gets from PDFBox raising on broken files)."""
+    quarantine instead (the loud-failure contract the reference gets
+    from PDFBox raising on broken files)."""
     res = doc.resolve(page.get("Resources"))
     fonts = doc.resolve(res.get("Font")) if isinstance(res, dict) else None
     if not isinstance(fonts, dict):

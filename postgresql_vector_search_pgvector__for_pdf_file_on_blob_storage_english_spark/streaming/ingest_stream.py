@@ -47,6 +47,10 @@ def ingest_stream(
     ``foreachBatch`` runs the identical batch pipeline per micro-batch,
     so batch and streaming results are the same relation (stateless by
     design — the reference has no cross-event semantics to preserve).
+    A failure quarantines, it does not stop the stream: a file that
+    does not decode gives no chunks, and a chunk whose embedding batch
+    fails every retry is kept out of the corpus with a trail ending at
+    FAILED_DB_INSERTION, so no micro-batch is replayed forever.
     """
 
     def process(pages: DataFrame, batch_id: int) -> None:

@@ -41,14 +41,19 @@ def test_udf_matches_pure_function(spark):
         assert got[i] == pytest.approx(expect), f"text {t!r}"
 
 
-def test_retry_exhaustion_raises(spark):
-    calls = {"n": 0}
+def test_short_answer_is_retried_then_quarantined(spark, tmp_path):
+    # an endpoint that answers one vector short is a failed try: retried,
+    # then the batch becomes null vectors instead of failing the job
+    log = tmp_path / "calls"
 
-    def failing(texts):
-        calls["n"] += 1
-        raise ValueError("boom")
+    def short(texts):
+        with open(log, "a") as f:
+            f.write("call\n")
+        return [hash_embed_text(t, 4) for t in texts][:-1]
 
-    embed = make_embedder(dim=8, embed_fn=failing, max_retries=3, backoff_s=0.0)
-    df = spark.createDataFrame([(1, "t")], "id int, text string")
-    with pytest.raises(Exception, match="embedding failed after 3 attempts"):
-        df.select(embed(F.col("text")).alias("v")).collect()
+    embed = make_embedder(dim=4, embed_fn=short, backoff_s=0.0)
+    df = spark.createDataFrame([(1, "a b"), (2, "c d")], "id int, text string").repartition(1)
+    rows = df.select("id", embed(F.col("text")).alias("v")).collect()
+    assert sorted(r["id"] for r in rows) == [1, 2]
+    assert all(r["v"] is None for r in rows)
+    assert log.read_text().count("call") == 3

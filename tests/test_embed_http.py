@@ -128,17 +128,7 @@ def test_exhausted_retries_quarantine_as_null(spark, stub_server):
     df = spark.createDataFrame(
         [("a", "poison pill"), ("b", "poison too")], "id string, text string"
     ).repartition(1)
-    emb = make_embedder(
-        dim=DIM, embed_fn=_http_embed_fn(url), backoff_s=0.01, on_error="null"
-    )
+    emb = make_embedder(dim=DIM, embed_fn=_http_embed_fn(url), backoff_s=0.01)
     rows = df.select("id", emb(F.col("text")).alias("e")).collect()
     assert all(r["e"] is None for r in rows)  # quarantined, job survived
     assert len(state.requests) == 3  # retries exhausted: 3 attempts
-
-
-def test_exhausted_retries_fail_fast_by_default(spark, stub_server):
-    url, _ = stub_server
-    df = spark.createDataFrame([("a", "poison pill")], "id string, text string")
-    emb = make_embedder(dim=DIM, embed_fn=_http_embed_fn(url), backoff_s=0.01)
-    with pytest.raises(Exception, match="embedding failed after 3 attempts"):
-        df.select(emb(F.col("text")).alias("e")).collect()

@@ -68,7 +68,7 @@ class TestExtractPagesBytes:
 
     def test_malformed_pdf_raises(self):
         # %PDF magic but no object structure -> decode error (quarantined
-        # by extract_pages(on_error='skip'))
+        # by extract_pages)
         with pytest.raises(ValueError, match="catalog"):
             extract_pages_bytes(b"%PDF-1.7 fake content")
 
@@ -196,20 +196,11 @@ class TestExtractErrorHandling:
             ("bad", b"%PDF-1.7 truncated garbage, not a real pdf"),
         ]
         df = spark.createDataFrame(rows, "name string, content binary")
-        out = {r["name"]: r for r in extract_pages(df, on_error="skip").collect()}
+        out = {r["name"]: r for r in extract_pages(df).collect()}
         assert out["good"]["extract_error"] is None
         assert len(out["good"]["pages"]) == 2
         assert "ValueError" in out["bad"]["extract_error"]
         assert out["bad"]["pages"] == []
-
-    def test_fail_mode_raises(self, spark):
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.sources.pdf import (
-            extract_pages,
-        )
-
-        df = spark.createDataFrame([("bad", b"%PDF-1.7 x")], "name string, content binary")
-        with pytest.raises(Exception, match="catalog|ValueError"):
-            extract_pages(df, on_error="fail").collect()
 
 
 class TestIngestMetrics:
@@ -244,7 +235,7 @@ class TestEmbedQuarantine:
         # quarantine granularity is the Arrow batch: the poisoned chunk
         # fails, co-batched rows fail with it, other batches are clean
         pages = pages.repartition(pages.count())
-        corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky, on_error="null", backoff_s=0)
+        corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky, backoff_s=0)
         failed = status.filter(F.col("status") == "FAILED_DB_INSERTION").collect()
         failed_keys = {(r["fileName"], r["pageNumber"]) for r in failed}
         assert ("a.pdf", 2) in failed_keys                 # the poisoned chunk
@@ -255,7 +246,7 @@ class TestEmbedQuarantine:
         """ADVICE r1 repro: a quarantined chunk's events, resolved through
         status_upsert, must terminate FAILED_DB_INSERTION — not COMPLETED
         (the reference's Function.java:177 bug, which we do not replicate).
-        Reachable through the main pipeline entry point via on_error."""
+        Reachable through the main pipeline entry point."""
 
         def flaky(texts):
             if any("vectors" in t for t in texts):
@@ -263,7 +254,7 @@ class TestEmbedQuarantine:
             return [hash_embed_text(t, 16) for t in texts]
 
         pages = pdf_source(spark, pdf_dir).repartition(8)
-        corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky, on_error="null", backoff_s=0)
+        corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky, backoff_s=0)
         current = {r["id"]: r["status"] for r in status_upsert(status).collect()}
         failed_ids = _chunk_ids(pages_to_chunks(pages)) - _chunk_ids(corpus)
         assert failed_ids, "fault injection produced no quarantined chunk"
@@ -285,7 +276,7 @@ class TestEmbedQuarantine:
             return [hash_embed_text(t, 16) for t in texts]
 
         pages = pdf_source(spark, pdf_dir).repartition(8)
-        corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky, on_error="null", backoff_s=0)
+        corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky, backoff_s=0)
         failed_ids = _chunk_ids(pages_to_chunks(pages)) - _chunk_ids(corpus)
         assert failed_ids, "fault injection produced no quarantined chunk"
         history = {}
@@ -303,17 +294,33 @@ class TestEmbedQuarantine:
                 "COMPLETED",
             }
 
-    def test_on_error_fail_raises(self, spark, pdf_dir):
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.ingest import (
-            embed_chunks,
+    def test_ingest_quarantines_by_default(self, spark, pdf_dir, tmp_path):
+        """With no policy argument a failing embed batch never fails the
+        ingest: the clean chunks are stored, and every other chunk
+        resolves to FAILED_DB_INSERTION and is listed as failed."""
+        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.status import (
+            completed_listing,
+            failed_listing,
         )
 
-        def always_fail(texts):
-            raise ValueError("down")
+        def flaky(texts):
+            if any("vectors" in t for t in texts):
+                raise ValueError("endpoint rejected batch")
+            return [hash_embed_text(t, 16) for t in texts]
 
-        chunks = pages_to_chunks(pdf_source(spark, pdf_dir))
-        with pytest.raises(Exception, match="embedding failed"):
-            embed_chunks(chunks, dim=16, embed_fn=always_fail, on_error="fail", backoff_s=0).collect()
+        pages = pdf_source(spark, pdf_dir).repartition(8)
+        chunks = pages_to_chunks(pages)
+        corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky, backoff_s=0)
+        stored, events = _write_both(corpus, status, tmp_path)
+        stored_ids = _chunk_ids(stored)
+        poisoned = _chunk_ids(chunks.filter(F.col("origntext").contains("vectors")))
+        current = status_upsert(events)
+        failed = {r["id"]: r["status"] for r in failed_listing(current).collect()}
+        assert poisoned and poisoned <= set(failed)
+        assert stored_ids and not stored_ids & set(failed)
+        assert stored_ids | set(failed) == _chunk_ids(chunks)
+        assert set(failed.values()) == {"FAILED_DB_INSERTION"}
+        assert _chunk_ids(completed_listing(current)) == stored_ids
 
 
 def _write_both(corpus, status, out, status_first=False):

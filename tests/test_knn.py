@@ -539,3 +539,77 @@ def test_in_memory_and_filtered_corpus_take_the_scan(spark, mixture):
         assert not _reads_files(got) and "MapInArrow" in plan and "Range" not in plan
         assert _ranked(got) == _brute_ranked(sub_ids, sub_mat, qmat, 5)
     assert "FileScan parquet" in _plan(knn_join(filtered, queries, k=5, payload_cols=["vec_id"]))
+
+
+def test_file_corpus_names_resolve_like_the_scan(spark, tmp_path):
+    # the files hold vec_id/embedding; the read schema names them in
+    # upper case, which Spark matches case-insensitively by default
+    rng = np.random.default_rng(11)
+    mat = rng.normal(size=(50, 8)).astype(np.float32)
+    path = str(tmp_path / "corpus")
+    spark.createDataFrame(
+        [(f"v{i}", v.tolist()) for i, v in enumerate(mat)], "vec_id string, embedding array<float>"
+    ).write.parquet(path)
+    qmat = rng.normal(size=(4, 8))
+    queries = _query_frame(spark, qmat)
+
+    def answers():
+        corpus = spark.read.schema("VEC_ID string, EMBEDDING array<float>").parquet(path)
+        cols = dict(vec_col="EMBEDDING", id_col="VEC_ID", payload_cols=["VEC_ID"])
+        got = knn_join(corpus, queries, k=3, **cols)
+        assert _reads_files(got)
+        joined = {}
+        for r in sorted(got.collect(), key=lambda r: (r["query_id"], r["rank"])):
+            joined.setdefault(r["query_id"], []).append((r["VEC_ID"], r["distance"]))
+        single = {
+            qi: [(r["VEC_ID"], r["distance"]) for r in knn(corpus, q.tolist(), k=3, **cols).collect()]
+            for qi, q in enumerate(qmat)
+        }
+        return joined, single
+
+    joined, single = answers()
+    ids = np.array([f"v{i}" for i in range(50)])
+    for qi, q in enumerate(qmat):
+        expect = list(ids[np.argsort(np.linalg.norm(mat.astype(np.float64) - q, axis=1))[:3]])
+        assert [h[0] for h in joined[qi]] == [h[0] for h in single[qi]] == expect
+        assert [h[1] for h in joined[qi]] == pytest.approx([h[1] for h in single[qi]], rel=1e-9)
+    # case-sensitive, the scan reads both columns as nulls; so do the
+    # file blocks, although the same files were just decoded
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try:
+        joined, single = answers()
+    finally:
+        spark.conf.unset("spark.sql.caseSensitive")
+    assert joined == single == {qi: [(None, None)] * 3 for qi in range(4)}
+    # this process's own block cache keeps the two resolutions apart
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.knn import (
+        _file_block,
+        _parquet_files,
+    )
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    corpus = spark.read.schema("VEC_ID string, EMBEDDING array<float>").parquet(path)
+    file = _parquet_files(corpus, ["VEC_ID", "EMBEDDING"])[0]
+    schema = to_arrow_schema(corpus.schema)
+    for case_sensitive, nulls in [(False, 0), (True, 1)]:
+        payload = _file_block(file, schema, "EMBEDDING", ["VEC_ID"], case_sensitive)[0]
+        assert payload.column("VEC_ID").null_count == nulls * payload.num_rows
+
+
+def test_file_corpus_ambiguous_name_raises_like_the_scan(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    vecs = pa.array([[1.0, 0.0], [0.0, 1.0]], pa.list_(pa.float32()))
+    (tmp_path / "corpus").mkdir()
+    pq.write_table(
+        pa.table({"vec_id": [0, 1], "VEC_ID": [2, 3], "embedding": vecs}),
+        str(tmp_path / "corpus" / "part-0.parquet"),
+    )
+    corpus = spark.read.schema("vec_id long, embedding array<float>").parquet(str(tmp_path / "corpus"))
+    with pytest.raises(Exception, match="(?i)duplicate field"):
+        knn(corpus, [1.0, 0.0], k=1).collect()
+    got = knn_join(corpus, _query_frame(spark, [[1.0, 0.0]]), k=1, payload_cols=["vec_id"])
+    assert _reads_files(got)
+    with pytest.raises(Exception, match="(?i)duplicate field"):
+        got.collect()

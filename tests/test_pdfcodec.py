@@ -2,7 +2,7 @@
 shadow resistance, and the unsupported-font/encoding quarantine gates
 (ADVICE r2).  The codec stands in for PDFBox (Function.java:92-134); like
 PDFBox it must fail LOUDLY on files it cannot decode correctly so
-``extract_pages(on_error='skip')`` can quarantine them."""
+``extract_pages`` quarantines them."""
 
 from __future__ import annotations
 
@@ -79,8 +79,8 @@ class TestUnsupportedFeatureGates:
             _content_text(b"BT <FEFF0041> Tj ET")
 
     def test_gated_pdf_quarantined_not_garbled(self, spark, tmp_path):
-        # End-to-end: a Type0-font PDF flows into the FAILED quarantine
-        # path instead of contributing garbled text to the corpus.
+        # End-to-end: a Type0-font PDF is quarantined (no pages, its
+        # error kept) instead of contributing garbled text to the corpus.
         from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.sources.pdf import (
             extract_pages,
             read_binary_docs,
@@ -90,9 +90,7 @@ class TestUnsupportedFeatureGates:
         bad = make_pdf(["cid page"]).replace(b"/Subtype /Type1 ", b"/Subtype /Type0 ")
         (tmp_path / "good.pdf").write_bytes(good)
         (tmp_path / "bad.pdf").write_bytes(bad)
-        rows = extract_pages(
-            read_binary_docs(spark, str(tmp_path)), on_error="skip"
-        ).collect()
+        rows = extract_pages(read_binary_docs(spark, str(tmp_path))).collect()
         by_name = {r["path"].rsplit("/", 1)[-1]: r for r in rows}
         assert by_name["good.pdf"]["extract_error"] is None
         assert [p["text"] for p in by_name["good.pdf"]["pages"]] == ["clean page"]
