@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import DISTANCE_FNS, dot_product
-from .knn import knn_join
+from .knn import _query_col
 
 
 def _lcg_doubles(n: int, seed: int) -> list[float]:
@@ -142,7 +142,7 @@ def ivf_search(
         )
     else:
         probe = centroids.withColumn(
-            "_qd", dist_fn(F.col(centroid_vec_col), knn_query_col(query_vec))
+            "_qd", dist_fn(F.col(centroid_vec_col), _query_col(query_vec))
         )
     probe = probe.orderBy("_qd", centroid_id_col).limit(nprobe).select(centroid_id_col)
     bucket = assigned_corpus.join(F.broadcast(probe), centroid_id_col, "left_semi")
@@ -308,7 +308,7 @@ def ivf_index_search(
     dist_fn = DISTANCE_FNS[metric]
     probe_rows = (
         centroids.withColumn(
-            "_qd", dist_fn(F.col(centroid_vec_col), knn_query_col(query_vec))
+            "_qd", dist_fn(F.col(centroid_vec_col), _query_col(query_vec))
         )
         .orderBy("_qd", centroid_id_col)
         .limit(nprobe)
@@ -441,12 +441,6 @@ def ivf_index_rebuild(
     )
     ivf_index_write(assigned, dest_path, centroid_id_col=centroid_id_col)
     return centroids
-
-
-def knn_query_col(query_vec) -> Column:
-    if isinstance(query_vec, Column):
-        return query_vec
-    return F.array(*[F.lit(float(v)) for v in query_vec])
 
 
 def recall_sweep(
@@ -641,7 +635,7 @@ def lsh_index_search(
     """
     from .knn import knn
 
-    qrow = spark.range(1).select(knn_query_col(query_vec).alias("_qv"))
+    qrow = spark.range(1).select(_query_col(query_vec).alias("_qv"))
     qbucket = qrow.select(lsh_bucket("_qv", planes).alias("_b")).first()["_b"]
     index = (
         spark.read.parquet(path)
@@ -687,7 +681,7 @@ def lsh_search_multiprobe(
     from .knn import knn
 
     spark = corpus.sparkSession
-    qrow = spark.range(1).select(knn_query_col(query_vec).alias("_qv"))
+    qrow = spark.range(1).select(_query_col(query_vec).alias("_qv"))
     qbucket = qrow.select(lsh_bucket("_qv", planes).alias("_b")).first()["_b"]
     probe = multiprobe_buckets(qbucket, len(planes), max_flips)
     tagged = corpus.withColumn("_bucket", lsh_bucket(f"`{vec_col}`", planes))
@@ -717,7 +711,7 @@ def lsh_index_search_multiprobe(
     partition-pruned cost."""
     from .knn import knn
 
-    qrow = spark.range(1).select(knn_query_col(query_vec).alias("_qv"))
+    qrow = spark.range(1).select(_query_col(query_vec).alias("_qv"))
     qbucket = qrow.select(lsh_bucket("_qv", planes).alias("_b")).first()["_b"]
     probe = multiprobe_buckets(qbucket, len(planes), max_flips)
     index = (

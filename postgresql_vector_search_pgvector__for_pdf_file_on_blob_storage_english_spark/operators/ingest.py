@@ -162,19 +162,29 @@ def validate_corpus(corpus: DataFrame, dim: int = DEFAULT_DIM) -> DataFrame:
     return corpus.filter(~_vector_ok(dim))
 
 
-def write_corpus(corpus: DataFrame, path: str, buckets: int = 64) -> None:
+# The corpus layout: rows live in ``bucket=b`` directories, b =
+# pmod(xxhash64(fileName), CORPUS_BUCKETS), so all chunks of one source
+# file share a bucket and the fan-out stays bounded.
+CORPUS_BUCKETS = 64
+
+
+def _bucket() -> Column:
+    return F.pmod(F.xxhash64("fileName"), F.lit(CORPUS_BUCKETS))
+
+
+def write_corpus(corpus: DataFrame, path: str) -> None:
     """S3 as a bulk columnar append.
 
     ``fileName``-hash bucket as the partition column: bounded fan-out
-    (``buckets`` directories), no per-file skew, and chunk locality per
-    source file — the layout a 100 TB corpus wants for both per-file
-    reprocessing and embedding-scan queries.  Rows are shuffled on the
-    bucket first, so each call writes one file per touched bucket
+    (:data:`CORPUS_BUCKETS` directories), no per-file skew, and chunk
+    locality per source file — the layout a 100 TB corpus wants for both
+    per-file reprocessing and embedding-scan queries.  Rows are shuffled
+    on the bucket first, so each call writes one file per touched bucket
     whatever the input's partitioning (reads split per core; AQE
     coalesces the small shuffle).
     """
     (
-        corpus.withColumn("bucket", F.pmod(F.xxhash64("fileName"), F.lit(buckets)))
+        corpus.withColumn("bucket", _bucket())
         .repartition("bucket")
         .write.mode("append")
         .partitionBy("bucket")
@@ -186,7 +196,6 @@ def upsert_corpus_files(
     spark,
     corpus_path: str,
     new_corpus: DataFrame,
-    buckets: int = 64,
 ) -> None:
     """Replace all chunks of the files present in ``new_corpus`` —
     the re-uploaded-blob path.
@@ -198,13 +207,11 @@ def upsert_corpus_files(
     rows, rewrite.  On a transactional table format this is
     ``MERGE``/``replaceWhere``; on plain parquet it is a
     read-filter-rewrite of only the buckets that contain the touched
-    files (bucket = pmod(xxhash64(fileName), buckets), so untouched
-    buckets are never rewritten).
+    files (the :func:`write_corpus` layout, so untouched buckets are
+    never rewritten).
     """
     touched = [r[0] for r in new_corpus.select("fileName").distinct().collect()]
-    new_bucketed = new_corpus.withColumn(
-        "bucket", F.pmod(F.xxhash64("fileName"), F.lit(buckets))
-    )
+    new_bucketed = new_corpus.withColumn("bucket", _bucket())
     touched_buckets = sorted(
         r[0] for r in new_bucketed.select("bucket").distinct().collect()
     )

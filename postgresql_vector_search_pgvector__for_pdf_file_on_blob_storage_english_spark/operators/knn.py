@@ -37,13 +37,14 @@ Spark-first physical design
 
 Batched queries (N query vectors, :func:`knn_join`)
 ----------------------------------------------------
-The query batch is collected once, as one Arrow table (under a row
-cap), and becomes a matrix.  One scorer takes *blocks* of the
-corpus — ``(payload, vector lengths, flat vector values)`` — scores all
-queries against each block with one NumPy GEMM, and keeps per query its
-k nearest rows plus any row tied with the k-th.  Only these narrow
-candidates (no embedding) cross the one exchange, to a per-query window
-that takes the global top-k.  The blocks come from one of two sources:
+The query batch is collected once, as one Arrow table (under the row
+cap :data:`QUERY_BATCH_MAX_ROWS`), and becomes a matrix.  One scorer
+takes *blocks* of the corpus — ``(payload, vector lengths, flat vector
+values)`` — scores all queries against each block by L2 distance (the
+reference's ``<->``, the only distance it asks for) with one NumPy
+GEMM, and keeps per query its k nearest rows plus any row tied with the
+k-th.  Only these narrow candidates (no embedding) cross the one
+exchange, to a per-query window that takes the global top-k.  The blocks come from one of two sources:
 
 * **Files.** A corpus whose optimized plan is a bare Parquet relation,
   at most under a projection of plain columns, whose needed columns are
@@ -136,31 +137,23 @@ def knn(
 # movement broadcasting it performs, valid only while the batch is
 # genuinely small (serving batches: 10s-1000s of rows).  Collecting more
 # than this many query rows raises instead of silently materializing an
-# unbounded relation on the driver.  Override per session with the conf
-# key (-1 disables the cap).
-QUERY_BATCH_MAX_ROWS_CONF = "spark.sparkgraft.queryBatch.maxRows"
-DEFAULT_QUERY_BATCH_MAX_ROWS = 100_000
+# unbounded relation on the driver.
+QUERY_BATCH_MAX_ROWS = 100_000
 
 
 def collect_query_batch(queries: DataFrame, cols: Sequence[str]):
-    """Collect the query relation under the configured row cap as one
-    Arrow table — one ``limit(cap + 1)`` job (the limit bounds the
+    """Collect the query relation under :data:`QUERY_BATCH_MAX_ROWS` as
+    one Arrow table — one ``limit(cap + 1)`` job (the limit bounds the
     transfer itself, not just a post-hoc check), raising when the cap
     is exceeded."""
-    spark = queries.sparkSession
-    cap = int(
-        spark.conf.get(QUERY_BATCH_MAX_ROWS_CONF, str(DEFAULT_QUERY_BATCH_MAX_ROWS))
-    )
-    sel = queries.select(*cols)
-    if cap < 0:
-        return sel.toArrow()
-    table = sel.limit(cap + 1).toArrow()
+    cap = QUERY_BATCH_MAX_ROWS
+    table = queries.select(*cols).limit(cap + 1).toArrow()
     if table.num_rows > cap:
         raise ValueError(
             f"query batch exceeds {cap} rows; the GEMM/graph-walk paths "
             "collect queries to a driver closure, which is only "
             "broadcast-equivalent for bounded serving batches — split the "
-            f"batch, or raise {QUERY_BATCH_MAX_ROWS_CONF} deliberately"
+            "batch"
         )
     return table
 
@@ -299,7 +292,6 @@ def knn_join(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    metric: str = "l2",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
@@ -311,15 +303,18 @@ def knn_join(
     generalization the reference only runs at N=1.
 
     The queries are collected once (:func:`collect_query_batch`, one
-    Arrow table) into a matrix.  One scorer computes each corpus block's
-    |block| x |queries| distance matrix with one NumPy GEMM in float64
-    and keeps, per query, its k nearest rows plus every row tied with
-    the k-th, so the window over the candidates applies the
-    ``(distance, id)`` rule to all rows that could win.  A null vector
-    gets a null distance and ranks last.  For a vector whose length
-    differs from the queries' the scorer reports that length, and the
-    projection after it raises pgvector's "different vector dimensions"
-    error.
+    Arrow table) into a matrix; each ``query_id`` must appear once, as
+    it keys the per-query window (a repeated id raises ``ValueError``).
+    One scorer computes each corpus block's |block| x |queries| L2
+    distance matrix with one NumPy GEMM in float64 and keeps, per query,
+    its k nearest rows plus every row tied with the k-th, so the window
+    over the candidates applies the ``(distance, id)`` rule to all rows
+    that could win.  ``id_col`` rides along for that rule even when
+    ``payload_cols`` leaves it out, and is dropped after the window.  A
+    null vector gets a null distance and ranks last.  For a vector whose
+    length differs from the queries' the scorer reports that length, and
+    the projection after it raises pgvector's "different vector
+    dimensions" error.
 
     The blocks come from the corpus files when :func:`_parquet_files`
     accepts the corpus: ``inputFiles()`` spread by bytes over
@@ -344,26 +339,26 @@ def knn_join(
     import pyarrow.compute as pc
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    if metric not in DISTANCE_FNS:
-        raise ValueError(f"unsupported metric {metric!r}")
-
     qtable = collect_query_batch(queries, [query_id_col, query_vec_col])
     qids = qtable.column(0).combine_chunks()
     qvecs = qtable.column(1).combine_chunks()
     n_q = len(qids)
+    counts = pc.value_counts(qids)
+    repeated = counts.field("values").filter(pc.greater(counts.field("counts"), 1))
+    if len(repeated):
+        raise ValueError(f"query ids must be unique: {query_id_col} {repeated[0].as_py()!r} repeats")
     qlens = pc.list_value_length(qvecs).to_numpy(zero_copy_only=False)
     if qvecs.null_count or len(set(qlens)) > 1:
         raise ValueError("query vectors must be non-null and of one length")
     dim = int(qlens[0]) if n_q else 0
     qmat = qvecs.flatten().to_numpy(zero_copy_only=False).astype(np.float64).reshape(n_q, dim)
-    if metric == "cosine" and n_q:
-        qmat = qmat / np.linalg.norm(qmat, axis=1, keepdims=True)
     qsq = (qmat * qmat).sum(axis=-1)  # (Q,)
     qidx = np.arange(n_q)
 
-    cols = list(payload_cols) if payload_cols is not None else [
+    asked = list(payload_cols) if payload_cols is not None else [
         c for c in corpus.columns if c != vec_col
     ]
+    cols = asked if id_col in asked else [*asked, id_col]
     needed = list(dict.fromkeys([*cols, vec_col]))
     fields = [T.StructField(c, corpus.schema[c].dataType) for c in cols]
     schema = T.StructType(
@@ -373,13 +368,9 @@ def knn_join(
     )
 
     def distances(cmat):
-        if metric == "cosine":
-            return 1.0 - (cmat / np.linalg.norm(cmat, axis=1, keepdims=True)) @ qmat.T
-        if metric == "dot":
-            return -(cmat @ qmat.T)
         sq = (cmat * cmat).sum(axis=1)[:, None] - 2.0 * (cmat @ qmat.T) + qsq[None, :]
         np.maximum(sq, 0.0, out=sq)
-        return np.sqrt(sq) if metric == "l2" else sq
+        return np.sqrt(sq)
 
     def rows(payload, ri, qi, dist, bad_len=None):
         out = payload.take(pa.array(ri, pa.int64()))
@@ -445,7 +436,5 @@ def knn_join(
     global_w = Window.partitionBy(query_id_col).orderBy(
         F.col(distance_col).asc_nulls_last(), id_col
     )
-    return (
-        checked.withColumn("rank", F.row_number().over(global_w))
-        .filter(F.col("rank") <= k)
-    )
+    ranked = checked.withColumn("rank", F.row_number().over(global_w)).filter(F.col("rank") <= k)
+    return ranked if id_col in asked else ranked.drop(id_col)

@@ -580,10 +580,10 @@ def ivf_sq8_index_search(
     centroid ids + ``k * oversample`` candidate ids (the same contract
     as ``ann.py::ivf_index_search`` / ``sq8_index_search``).
     """
-    from .ann import knn_query_col
     from ..functions.vector import l2_distance
+    from .knn import _query_col
 
-    qarr = knn_query_col(query_vec)
+    qarr = _query_col(query_vec)
     probe_rows = (
         centroids.withColumn("_qd", l2_distance(F.col(centroid_vec_col), qarr))
         .orderBy("_qd", centroid_id_col)

@@ -1,62 +1,26 @@
-"""Keyed MERGE upsert for the status store — SURVEY §1.2's primary mapping.
+"""Keyed upsert for the status store — SURVEY §1.2's primary mapping.
 
 The reference mutates one Cosmos DB item per chunk via read-modify-
 ``replaceItem`` (CosmosDBUtil.java:50-75).  The set-oriented analog is a
-keyed MERGE into a transactional table: per key keep the row that wins
+keyed merge into one Parquet table: per key keep the row that wins
 last-write-wins on ``(ts, status-ordinal)`` — the exact resolution
 ``status_upsert`` (operators/status.py) applies to an event log.
 
-Two physical strategies behind one API:
-
-* **Delta Lake MERGE** (primary, capability-gated): transactional,
-  conflict-safe under concurrent writers, and at 100 TB the join in
-  MERGE prunes untouched files via data skipping — only files holding
-  matched keys rewrite.  Used when ``delta-spark`` is importable AND the
-  session was built with the Delta SQL extension.
-* **Parquet last-write-wins rewrite** (fallback): read-union-resolve-
-  rewrite with *identical* resolution semantics, so switching formats
-  never changes results.  Single-writer only — the documented limit of
-  the fallback, not of the design.
-
-Both paths resolve the incoming batch with ``status_upsert`` first, so a
-batch that carries several events for one key merges its winner only.
+One physical strategy: read the table, union the incoming batch,
+resolve with ``status_upsert``, rewrite.  A batch that carries several
+events for one key merges its winner only, and a stale replay never
+regresses a resolved key.  Single-writer only: two concurrent merges
+into one path lose one of the batches.  Read the table back with
+``spark.read.parquet(path)``.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .status import _TIE_ORDER, status_upsert
-
-
-def delta_available(spark: SparkSession | None = None) -> bool:
-    """True iff the Delta MERGE path can run: delta-spark importable and,
-    when a session is given, its catalog actually speaks Delta."""
-    try:
-        from delta.tables import DeltaTable  # noqa: F401
-    except ImportError:
-        return False
-    if spark is None:
-        return True
-    try:
-        # A session without the Delta extension raises on any Delta op;
-        # probing the parser is the cheapest reliable check.
-        spark.sql("SELECT 1").collect()
-        return (
-            "io.delta.sql.DeltaSparkSessionExtension"
-            in (spark.conf.get("spark.sql.extensions", "") or "")
-        )
-    except Exception:
-        return False
-
-
-def _ordinal_sql(qualified_col: str) -> str:
-    """CASE expression mapping a status column to its tie-break rank."""
-    whens = " ".join(
-        f"WHEN '{s}' THEN {i}" for i, s in enumerate(_TIE_ORDER)
-    )
-    return f"(CASE {qualified_col} {whens} ELSE -1 END)"
+from .status import status_upsert
 
 
 def merge_status(
@@ -65,51 +29,10 @@ def merge_status(
     updates: DataFrame,
     id_col: str = "id",
     ts_col: str = "updated_at",
-) -> str:
+) -> None:
     """Upsert ``updates`` (an event batch) into the keyed status table at
-    ``path``.  Returns the strategy used: ``"delta"`` or ``"parquet"``.
-    """
-    if delta_available(spark):
-        _merge_delta(spark, path, updates, id_col, ts_col)
-        return "delta"
-    _merge_parquet(spark, path, updates, id_col, ts_col)
-    return "parquet"
-
-
-def _merge_delta(
-    spark: SparkSession, path: str, updates: DataFrame, id_col: str, ts_col: str
-) -> None:
-    from delta.tables import DeltaTable
-
-    resolved = status_upsert(updates, id_col=id_col, ts_col=ts_col)
-    if not DeltaTable.isDeltaTable(spark, path):
-        resolved.write.format("delta").save(path)
-        return
-    newer = (
-        f"u.{ts_col} > t.{ts_col} OR "
-        f"(u.{ts_col} = t.{ts_col} AND "
-        f"{_ordinal_sql('u.status')} > {_ordinal_sql('t.status')})"
-    )
-    (
-        DeltaTable.forPath(spark, path)
-        .alias("t")
-        .merge(resolved.alias("u"), f"t.{id_col} = u.{id_col}")
-        .whenMatchedUpdate(
-            condition=newer, set={c: f"u.{c}" for c in resolved.columns}
-        )
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
-
-
-def _merge_parquet(
-    spark: SparkSession, path: str, updates: DataFrame, id_col: str, ts_col: str
-) -> None:
-    import os
-
-    if os.path.isdir(path) and any(
-        f.endswith(".parquet") for f in os.listdir(path)
-    ):
+    ``path``, creating it on the first batch."""
+    if os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path)):
         current = spark.read.parquet(path)
         merged = current.unionByName(updates.select(*current.columns))
     else:
@@ -117,12 +40,3 @@ def _merge_parquet(
     resolved = status_upsert(merged, id_col=id_col, ts_col=ts_col)
     # Materialize before overwriting the path the plan reads from.
     resolved.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
-
-
-def read_status(spark: SparkSession, path: str) -> DataFrame:
-    """Read the keyed status table regardless of which strategy wrote it."""
-    import os
-
-    if os.path.isdir(os.path.join(path, "_delta_log")):
-        return spark.read.format("delta").load(path)
-    return spark.read.parquet(path)

@@ -387,9 +387,6 @@ _register(
 
 
 def _ann_lsh_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.ann import knn_query_col
-    from ..operators.knn import knn
-
     emb = _t(spark, sf_dir, "embeddings")
     tagged = emb.withColumn("bucket", lsh_bucket("embedding", _LSH_PLANES))
     qrow = emb.filter(F.col("vec_id") == _LSH_PROBE_ID).select(

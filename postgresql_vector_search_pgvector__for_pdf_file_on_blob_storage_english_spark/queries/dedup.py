@@ -342,7 +342,7 @@ def _eval_knn_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding"), lambda x: (x.cast("double") * 1.01).cast("float")
         ).alias("query_vec"),
     )
-    hits = knn_join(emb, queries, k=10, metric="l2", payload_cols=["vec_id"])
+    hits = knn_join(emb, queries, k=10, payload_cols=["vec_id"])
     found = hits.filter(F.col("vec_id") == F.col("query_id")).select(
         "query_id", "rank"
     )

@@ -115,7 +115,7 @@ def _knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    out = knn_join(emb, queries, k=3, metric="l2", payload_cols=["vec_id", "label"])
+    out = knn_join(emb, queries, k=3, payload_cols=["vec_id", "label"])
     return out.select(
         "query_id", "rank", "vec_id", "label", F.round("distance", 4).alias("distance")
     )

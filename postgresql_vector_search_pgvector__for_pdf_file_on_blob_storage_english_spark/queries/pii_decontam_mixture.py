@@ -265,7 +265,7 @@ def _stream_knn_serve_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _serve(batch_df: DataFrame, _batch_id: int) -> None:
-        out = knn_join(emb, batch_df, k=3, metric="l2", payload_cols=["vec_id", "label"])
+        out = knn_join(emb, batch_df, k=3, payload_cols=["vec_id", "label"])
         out.select(
             "query_id", "rank", "vec_id", "label",
             F.round("distance", 4).alias("distance"),

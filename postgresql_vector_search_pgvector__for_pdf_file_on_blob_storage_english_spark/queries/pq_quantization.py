@@ -798,7 +798,7 @@ def _ann_ivfpq_recall_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (distance, vec_id) tie-break matches, so the winner set is
     # identical to the oracle's l2sq QUALIFY form.
     exact5 = knn_join(
-        emb, queries, k=5, metric="l2", id_col="vec_id", payload_cols=["vec_id"]
+        emb, queries, k=5, id_col="vec_id", payload_cols=["vec_id"]
     ).select("query_id", "vec_id")
 
     def recall_row(config: str, hits: DataFrame) -> DataFrame:

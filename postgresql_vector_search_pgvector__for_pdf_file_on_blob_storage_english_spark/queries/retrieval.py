@@ -287,7 +287,7 @@ def _eval_hybrid_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("query_vec"),
         )
     )
-    knn_hits = knn_join(emb, qvecs, k=10, metric="l2", payload_cols=["vec_id"]).select(
+    knn_hits = knn_join(emb, qvecs, k=10, payload_cols=["vec_id"]).select(
         "query_id", F.col("vec_id").alias("doc_id"), F.col("rank").alias("_r_knn")
     )
     fused = (

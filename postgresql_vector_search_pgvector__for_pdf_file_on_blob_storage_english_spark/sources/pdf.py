@@ -15,11 +15,12 @@ Reference surface (SURVEY.md §2.1/S1-S2, §2.2/P1):
   with ``posexplode``; runs as an Arrow-batched ``mapInPandas`` so one
   Python worker handles a whole batch of files.
 
-Real ``%PDF`` bytes decode with ``pypdf`` when importable, else with
-the vendored stdlib-only codec (:mod:`.pdfcodec` — classic-xref +
-FlateDecode + text-operator subset, round-trip-tested against its own
-writer's goldens).  The deterministic ``\\f``-separated text format is
-kept alongside as the bit-reproducible fixture path.
+Real ``%PDF`` bytes always decode with the vendored stdlib-only codec
+(:mod:`.pdfcodec` — classic-xref + FlateDecode + text-operator subset,
+round-trip-tested against its own writer's goldens), whatever else is
+installed, so the page text the chunks re-join to never depends on the
+host.  The deterministic ``\\f``-separated text format is kept alongside
+as the bit-reproducible fixture path.
 """
 
 from __future__ import annotations
@@ -29,6 +30,8 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .pdfcodec import extract_text_pdf
 
 PAGE_SEP = "\f"
 
@@ -62,22 +65,13 @@ def read_binary_docs(
 def extract_pages_bytes(content: bytes) -> list[tuple[int, str]]:
     """Pure-Python page extraction (unit-test twin of the UDF).
 
-    ``%PDF`` magic -> pypdf when importable, else the vendored
-    :mod:`.pdfcodec` reader — the stdlib stand-in for PDFBox's
-    page-by-page ``PDFTextStripper`` loop (Function.java:99-118).
-    Anything else -> UTF-8 text split on form-feed page separators.
+    ``%PDF`` magic -> the vendored :mod:`.pdfcodec` reader, the stdlib
+    stand-in for PDFBox's page-by-page ``PDFTextStripper`` loop
+    (Function.java:99-118).  Anything else -> UTF-8 text split on
+    form-feed page separators.
     """
     if content[:5] == b"%PDF-":
-        try:
-            import io
-
-            from pypdf import PdfReader  # noqa: PLC0415 — optional, preferred
-        except ImportError:
-            from .pdfcodec import extract_text_pdf
-
-            return extract_text_pdf(content)
-        reader = PdfReader(io.BytesIO(content))  # pragma: no cover
-        return [(i + 1, p.extract_text() or "") for i, p in enumerate(reader.pages)]
+        return extract_text_pdf(content)
     text = content.decode("utf-8", errors="replace")
     return [(i + 1, page) for i, page in enumerate(text.split(PAGE_SEP))]
 

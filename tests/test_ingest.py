@@ -66,6 +66,25 @@ class TestExtractPagesBytes:
         pages = extract_pages_bytes(make_pdf(["First real page.", "Second real page."]))
         assert pages == [(1, "First real page."), (2, "Second real page.")]
 
+    def test_installed_pypdf_is_not_used(self, monkeypatch):
+        # The page text the chunks re-join to comes from one decoder,
+        # whatever else the host has installed.
+        import sys
+        import types
+
+        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.sources.pdfcodec import (
+            extract_text_pdf,
+            make_pdf,
+        )
+
+        class PdfReader:
+            def __init__(self, *args, **kwargs):
+                raise AssertionError("pypdf must not decode the ingest's PDFs")
+
+        monkeypatch.setitem(sys.modules, "pypdf", types.SimpleNamespace(PdfReader=PdfReader))
+        pdf = make_pdf(["First real page.", "Second real page."])
+        assert extract_pages_bytes(pdf) == extract_text_pdf(pdf)
+
     def test_malformed_pdf_raises(self):
         # %PDF magic but no object structure -> decode error (quarantined
         # by extract_pages)

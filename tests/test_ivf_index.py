@@ -179,7 +179,7 @@ class TestIvfSearchJoin:
             assigned, centroids, queries, k=5, nprobe=N_CENTROIDS,
             payload_cols=["vec_id"],
         )
-        exact = knn_join(emb, queries, k=5, metric="l2", payload_cols=["vec_id"])
+        exact = knn_join(emb, queries, k=5, payload_cols=["vec_id"])
         key = lambda r: (r["query_id"], r["rank"], r["vec_id"], round(r["distance"], 6))  # noqa: E731
         assert sorted(key(r) for r in ivf.collect()) == sorted(key(r) for r in exact.collect())
 

@@ -1,26 +1,20 @@
-"""MERGE-shaped keyed upsert (operators/upsert.py): parquet LWW fallback
-semantics always; the Delta MERGE path runs when delta-spark is
-importable (capability-gated, skips otherwise).
+"""Keyed upsert of the status store (operators/upsert.py), a Parquet
+last-write-wins rewrite.
 
 The invariant under test: N sequential ``merge_status`` batches produce
 exactly ``status_upsert`` over the concatenation of all batches — i.e.
-incremental MERGE == batch re-resolution, for either physical strategy.
+incremental merge == batch re-resolution.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-import pytest
-from pyspark.sql import functions as F
-
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.status import (
     status_upsert,
 )
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.upsert import (
-    delta_available,
     merge_status,
-    read_status,
 )
 
 T0 = dt.datetime(2024, 1, 1, 12, 0, 0)
@@ -62,20 +56,18 @@ def _expected(spark):
     }
 
 
-def _run_batches(spark, path):
-    strategies = set()
-    for batch in (BATCH1, BATCH2, BATCH3, BATCH4):
-        strategies.add(merge_status(spark, path, _events(spark, batch)))
-    got = {
+def _read(spark, path):
+    return {
         r["id"]: (r["status"], r["updated_at"])
-        for r in read_status(spark, path).collect()
+        for r in spark.read.parquet(path).collect()
     }
-    return got, strategies
 
 
 def test_incremental_merge_equals_batch_resolution(spark, tmp_path):
     path = str(tmp_path / "status_store")
-    got, strategies = _run_batches(spark, path)
+    for batch in (BATCH1, BATCH2, BATCH3, BATCH4):
+        merge_status(spark, path, _events(spark, batch))
+    got = _read(spark, path)
     assert got == _expected(spark)
     assert got["b"][0] == "FAILED_DB_INSERTION"
     assert got["c"][0] == "FAILED_DB_INSERTION"  # tie: failure outranks
@@ -87,44 +79,4 @@ def test_merge_idempotent_under_replay(spark, tmp_path):
     for _ in range(2):
         for batch in (BATCH1, BATCH2, BATCH3, BATCH4):
             merge_status(spark, path, _events(spark, batch))
-    got = {
-        r["id"]: (r["status"], r["updated_at"])
-        for r in read_status(spark, path).collect()
-    }
-    assert got == _expected(spark)
-
-
-def test_fallback_strategy_reported(spark, tmp_path):
-    path = str(tmp_path / "status_store")
-    strategy = merge_status(spark, path, _events(spark, BATCH1))
-    if delta_available(spark):
-        assert strategy == "delta"
-    else:
-        assert strategy == "parquet"
-
-
-@pytest.mark.skipif(not delta_available(), reason="delta-spark not installed")
-def test_delta_merge_path(tmp_path):
-    """Runs only where delta-spark exists: builds a Delta-enabled session
-    and requires the MERGE path to reproduce the same resolution."""
-    from delta import configure_spark_with_delta_pip
-    from pyspark.sql import SparkSession
-
-    builder = (
-        SparkSession.builder.master("local[2]")
-        .appName("delta_merge_test")
-        .config("spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension")
-        .config(
-            "spark.sql.catalog.spark_catalog",
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-    )
-    spark = configure_spark_with_delta_pip(builder).getOrCreate()
-    try:
-        path = str(tmp_path / "status_delta")
-        got, strategies = _run_batches(spark, path)
-        assert strategies == {"delta"}
-        assert got == _expected(spark)
-    finally:
-        spark.stop()
+    assert _read(spark, path) == _expected(spark)

@@ -110,7 +110,7 @@ class TestSearch:
             emb, queries, k=3, oversample=40, payload_cols=["label"], fitted=fitted
         ).collect()
         exact = knn_join(
-            emb, queries, k=3, metric="l2", payload_cols=["vec_id", "label"]
+            emb, queries, k=3, payload_cols=["vec_id", "label"]
         ).collect()
         key = lambda r: (r["query_id"], r["rank"])
         assert sorted([(r["query_id"], r["rank"], r["vec_id"]) for r in batch]) == sorted(

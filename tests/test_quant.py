@@ -282,7 +282,7 @@ class TestSq8KnnJoin:
         queries = emb.filter(F.col("vec_id") < 4).select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
         )
-        exact = knn_join(emb, queries, k=5, metric="l2", payload_cols=["vec_id"])
+        exact = knn_join(emb, queries, k=5, payload_cols=["vec_id"])
         got = sq8_knn_join(emb, queries, k=5, oversample=10)
         e = sorted(
             (r["query_id"], r["rank"], r["vec_id"], round(r["distance"], 6))
