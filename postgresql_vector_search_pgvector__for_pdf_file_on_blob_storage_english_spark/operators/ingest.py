@@ -46,7 +46,7 @@ def pages_to_chunks(pages: DataFrame) -> DataFrame:
 
     The reference draws a random UUID per chunk (Function.java:139);
     identity here is content-addressed — sha2(fileName § pageNumber §
-    chunk_index) — so re-ingesting a file is idempotent (same keys).
+    chunk_index) — so re-ingesting a file gives the same keys.
     """
     # Fully native chunking (functions/text.py::chunk_exploded): the page
     # text does not cross the Python boundary to find cut points, so the
@@ -154,14 +154,6 @@ def ingest_pages(
     return corpus, status_events
 
 
-def validate_corpus(corpus: DataFrame, dim: int = DEFAULT_DIM) -> DataFrame:
-    """The engine-side twin of pgvector's ``VECTOR(n)`` insert check
-    (SURVEY.md §1.1): the rows failing :func:`_vector_ok`, i.e. whose
-    embedding is missing or has the wrong dimensionality (empty = valid).
-    """
-    return corpus.filter(~_vector_ok(dim))
-
-
 # The corpus layout: rows live in ``bucket=b`` directories, b =
 # pmod(xxhash64(fileName), CORPUS_BUCKETS), so all chunks of one source
 # file share a bucket and the fan-out stays bounded.
@@ -173,15 +165,16 @@ def _bucket() -> Column:
 
 
 def write_corpus(corpus: DataFrame, path: str) -> None:
-    """S3 as a bulk columnar append.
+    """S3 as a bulk columnar append — the corpus's one writer, as the
+    reference's one JDBC ``INSERT`` (Function.java:165) is pgvector's.
 
     ``fileName``-hash bucket as the partition column: bounded fan-out
     (:data:`CORPUS_BUCKETS` directories), no per-file skew, and chunk
-    locality per source file — the layout a 100 TB corpus wants for both
-    per-file reprocessing and embedding-scan queries.  Rows are shuffled
-    on the bucket first, so each call writes one file per touched bucket
-    whatever the input's partitioning (reads split per core; AQE
-    coalesces the small shuffle).
+    locality per source file for embedding-scan queries.  Rows are
+    shuffled on the bucket first, so each call writes one file per
+    touched bucket whatever the input's partitioning (reads split per
+    core; AQE coalesces the small shuffle).  Nothing rewrites or deletes
+    stored rows: appending a file's chunks again stores them twice.
     """
     (
         corpus.withColumn("bucket", _bucket())
@@ -190,59 +183,6 @@ def write_corpus(corpus: DataFrame, path: str) -> None:
         .partitionBy("bucket")
         .parquet(path)
     )
-
-
-def upsert_corpus_files(
-    spark,
-    corpus_path: str,
-    new_corpus: DataFrame,
-) -> None:
-    """Replace all chunks of the files present in ``new_corpus`` —
-    the re-uploaded-blob path.
-
-    The reference re-processes a re-uploaded blob into *new random
-    UUIDs*, silently duplicating the corpus (Function.java:139); here
-    chunk ids are content-addressed, and replacement is file-scoped:
-    keep rows whose fileName is NOT being re-ingested, union the new
-    rows, rewrite.  On a transactional table format this is
-    ``MERGE``/``replaceWhere``; on plain parquet it is a
-    read-filter-rewrite of only the buckets that contain the touched
-    files (the :func:`write_corpus` layout, so untouched buckets are
-    never rewritten).
-    """
-    touched = [r[0] for r in new_corpus.select("fileName").distinct().collect()]
-    new_bucketed = new_corpus.withColumn("bucket", _bucket())
-    touched_buckets = sorted(
-        r[0] for r in new_bucketed.select("bucket").distinct().collect()
-    )
-
-    import os
-
-    existing_dirs = [
-        f"{corpus_path}/bucket={b}"
-        for b in touched_buckets
-        if os.path.isdir(f"{corpus_path}/bucket={b}")
-    ]
-    if existing_dirs:
-        kept = (
-            spark.read.option("basePath", corpus_path)
-            .parquet(*existing_dirs)
-            .filter(~F.col("fileName").isin(touched))
-            .localCheckpoint(eager=True)  # materialize before overwrite
-        )
-    else:
-        kept = None
-
-    merged = (
-        kept.unionByName(new_bucketed) if kept is not None else new_bucketed
-    )
-    for b in touched_buckets:
-        (
-            merged.filter(F.col("bucket") == b)
-            .drop("bucket")
-            .write.mode("overwrite")
-            .parquet(f"{corpus_path}/bucket={b}")
-        )
 
 
 def with_ingest_metrics(chunks: DataFrame):

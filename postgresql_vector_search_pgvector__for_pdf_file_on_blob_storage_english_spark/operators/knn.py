@@ -145,7 +145,11 @@ def collect_query_batch(queries: DataFrame, cols: Sequence[str]):
     """Collect the query relation under :data:`QUERY_BATCH_MAX_ROWS` as
     one Arrow table — one ``limit(cap + 1)`` job (the limit bounds the
     transfer itself, not just a post-hoc check), raising when the cap
-    is exceeded."""
+    is exceeded.  ``cols[0]`` is the query id, which keys the batched
+    joins' per-query window: a repeated id raises ``ValueError`` rather
+    than merging two queries' results."""
+    import pyarrow.compute as pc
+
     cap = QUERY_BATCH_MAX_ROWS
     table = queries.select(*cols).limit(cap + 1).toArrow()
     if table.num_rows > cap:
@@ -155,6 +159,10 @@ def collect_query_batch(queries: DataFrame, cols: Sequence[str]):
             "broadcast-equivalent for bounded serving batches — split the "
             "batch"
         )
+    counts = pc.value_counts(table.column(0))
+    repeated = counts.field("values").filter(pc.greater(counts.field("counts"), 1))
+    if len(repeated):
+        raise ValueError(f"query ids must be unique: {cols[0]} {repeated[0].as_py()!r} repeats")
     return table
 
 
@@ -343,10 +351,6 @@ def knn_join(
     qids = qtable.column(0).combine_chunks()
     qvecs = qtable.column(1).combine_chunks()
     n_q = len(qids)
-    counts = pc.value_counts(qids)
-    repeated = counts.field("values").filter(pc.greater(counts.field("counts"), 1))
-    if len(repeated):
-        raise ValueError(f"query ids must be unique: {query_id_col} {repeated[0].as_py()!r} repeats")
     qlens = pc.list_value_length(qvecs).to_numpy(zero_copy_only=False)
     if qvecs.null_count or len(set(qlens)) > 1:
         raise ValueError("query vectors must be non-null and of one length")

@@ -506,7 +506,8 @@ def hnsw_search_join(
     deserialized once and all queries walk them, instead of N separate
     jobs.  ``queries`` is a DataFrame (query_id, query_vec); it is
     collected to the closure (bounded by the query batch — the same
-    data movement broadcasting the batch performs).  Output:
+    data movement broadcasting the batch performs), and a repeated
+    ``query_id`` raises ``ValueError``, as in ``knn_join``.  Output:
     ``(query_id, rank, vec_id, distance)`` per query after the global
     per-query merge (a partitioned window over n_shards * k rows per
     query, never corpus-sized)."""

@@ -7,6 +7,10 @@ top-k result as a relation and derives prompts, summaries, links and
 the SSE event stream as columns — the per-user demux (Q9) is a
 serving-process concern with no analytic content and is intentionally
 out of scope (SURVEY.md §2.3).
+
+A hit relation carries the corpus's column names (SURVEY.md §1.1):
+``id``, ``origntext``, ``fileName``, ``pageNumber``.  ``llm_extract``
+adds ``summary`` and ``sse_events`` reads it; neither takes other names.
 """
 
 from __future__ import annotations
@@ -46,31 +50,29 @@ def build_prompt(text_col: Column | str, query_text: str) -> Column:
 
 def llm_extract(
     df: DataFrame,
-    text_col: str = "origntext",
-    out_col: str = "summary",
     llm_fn: Callable[[list[str]], list[str]] | None = None,
 ) -> DataFrame:
-    """Q6: per-hit summarize stage.
+    """Q6: per-hit summarize stage — adds ``summary`` from ``origntext``.
 
     ``llm_fn`` (prompts -> completions) is the external-model hook,
     applied via an Arrow-batched pandas UDF.  The default mock —
     first ``MOCK_SUMMARY_LEN`` chars + ellipsis — is a *native* column
     expression: deterministic, oracle-checkable, and zero-cost.
     """
+    c = F.col("origntext")
     if llm_fn is None:
-        c = F.col(text_col)
         mock = F.when(
             F.length(c) > MOCK_SUMMARY_LEN,
             F.concat(F.substring(c, 1, MOCK_SUMMARY_LEN), F.lit("...")),
         ).otherwise(c)
-        return df.withColumn(out_col, mock)
+        return df.withColumn("summary", mock)
 
     @F.pandas_udf(T.StringType())
     def run(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for s in it:
             yield pd.Series(llm_fn(s.fillna("").tolist()))
 
-    return df.withColumn(out_col, run(F.col(text_col)))
+    return df.withColumn("summary", run(c))
 
 
 def blob_url(account_url: str, file_col: Column | str = "fileName", page_col: Column | str = "pageNumber") -> Column:
@@ -87,53 +89,38 @@ def sse_escape(col: Column | str) -> Column:
     return F.regexp_replace(c, " ", SSE_SPACE_SENTINEL)
 
 
-def json_escape(col: Column | str) -> Column:
-    """Escape ``\\`` and ``\"`` in a string column destined for a JSON
-    string literal — the two characters the reference's Gson serializer
-    escapes that can appear in fileName/summary payloads
-    (SSEOpenAIController.java:189-234).  Backslash first so the quote
-    escape's own backslash is not re-escaped."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.replace(F.replace(c, F.lit("\\"), F.lit("\\\\")), F.lit('"'), F.lit('\\"'))
-
-
-def sse_events(
-    hits: DataFrame,
-    account_url: str,
-    id_col: str = "id",
-    summary_col: str = "summary",
-) -> DataFrame:
+def sse_events(hits: DataFrame, account_url: str) -> DataFrame:
     """S8: the three-event-per-hit SSE stream as a relation.
 
     The reference emits a tagged union — ``create`` area, ``createLink``,
     ``addMessage`` (entities/Create*.java, serialized at
     SSEOpenAIController.java:189-234) — per hit, in that order.  Here:
-    one row per event, ``event_json`` shaped exactly like the
-    reference's Gson payloads (field order = record component order),
-    ``seq`` making the per-hit ordering explicit.
+    one row per event ``(id, seq, event_json)``, ``seq`` making the
+    per-hit ordering explicit.  Each ``event_json`` is one ``to_json`` of
+    a struct whose fields follow the record's component order, so it is
+    valid JSON whatever the hit's ``id``, ``fileName`` or ``summary``
+    hold: quotes, backslashes and control characters are escaped, as
+    Gson escapes them.
     """
-    esc_file = json_escape("fileName")
-    create = F.concat(
-        F.lit('{"type":"create","id":"'), F.col(id_col), F.lit('"}')
+    create = F.struct(F.lit("create").alias("type"), "id")
+    link = F.struct(
+        F.lit("createLink").alias("type"),
+        "id",
+        blob_url(account_url).alias("link"),
+        "pageNumber",
+        "fileName",
     )
-    link = F.concat(
-        F.lit('{"type":"createLink","id":"'), F.col(id_col),
-        F.lit('","link":"'), blob_url(account_url, file_col=esc_file),
-        F.lit('","pageNumber":'), F.col("pageNumber").cast("string"),
-        F.lit(',"fileName":"'), esc_file, F.lit('"}'),
-    )
-    message = F.concat(
-        F.lit('{"type":"addMessage","id":"'), F.col(id_col),
-        F.lit('","content":"'), sse_escape(json_escape(summary_col)), F.lit('"}'),
+    message = F.struct(
+        F.lit("addMessage").alias("type"), "id", sse_escape("summary").alias("content")
     )
     events = F.array(
-        F.struct(F.lit(1).alias("seq"), create.alias("event_json")),
-        F.struct(F.lit(2).alias("seq"), link.alias("event_json")),
-        F.struct(F.lit(3).alias("seq"), message.alias("event_json")),
+        F.struct(F.lit(1).alias("seq"), F.to_json(create).alias("event_json")),
+        F.struct(F.lit(2).alias("seq"), F.to_json(link).alias("event_json")),
+        F.struct(F.lit(3).alias("seq"), F.to_json(message).alias("event_json")),
     )
-    return hits.select(
-        F.col(id_col), F.explode(events).alias("_e")
-    ).select(id_col, F.col("_e.seq").alias("seq"), F.col("_e.event_json").alias("event_json"))
+    return hits.select("id", F.explode(events).alias("_e")).select(
+        "id", F.col("_e.seq").alias("seq"), F.col("_e.event_json").alias("event_json")
+    )
 
 
 def expand_context(

@@ -5,7 +5,10 @@ Reference schema: ``CosmosDBDocument(id, fileName, status, pageNumber)``
 models/CosmosDBDocumentStatus.java:5-10.  The reference's "replaceItem"
 read-modify-write (BlobUploadDetector CosmosDBUtil.java:50-75) becomes a
 set-oriented **last-write-wins upsert**: append status events, resolve
-current state with one window over event time.  (The reference also
+current state with one window over event time — SURVEY.md §1.2's
+pure-Parquet mapping.  The store is the event log and has one writer,
+the append; no keyed table is rewritten, so each chunk's full trail
+stays readable.  (The reference also
 sets COMPLETED unconditionally even after a failure —
 Function.java:173-177 — a bug we deliberately do not replicate: here a
 failed chunk terminates at FAILED_DB_INSERTION.)
@@ -54,18 +57,19 @@ _TIE_ORDER = [
 ]
 
 
-def status_upsert(events: DataFrame, id_col: str = "id", ts_col: str = "updated_at") -> DataFrame:
-    """Resolve an append-only status-event log to current state per id.
+def status_upsert(events: DataFrame) -> DataFrame:
+    """Resolve an append-only status-event log (the ``ingest_pages``
+    status columns) to current state per ``id``.
 
-    Last-write-wins on ``(ts, status-ordinal)`` — the ordinal breaks
-    same-timestamp ties in state-machine order so a batch that emits
-    several transitions at one timestamp resolves to the furthest state.
-    ``ingest_pages`` gives each chunk one trail that ends in exactly one
-    terminal state; should a log still hold both for one id at one
-    timestamp, the failure outranks the success.
+    Last-write-wins on ``(updated_at, status-ordinal)`` — the ordinal
+    breaks same-timestamp ties in state-machine order so a batch that
+    emits several transitions at one timestamp resolves to the furthest
+    state.  ``ingest_pages`` gives each chunk one trail that ends in
+    exactly one terminal state; should a log still hold both for one id
+    at one timestamp, the failure outranks the success.
     """
     ordinal = F.array_position(F.array(*[F.lit(s) for s in _TIE_ORDER]), F.col("status"))
-    w = Window.partitionBy(id_col).orderBy(F.col(ts_col).desc(), ordinal.desc())
+    w = Window.partitionBy("id").orderBy(F.col("updated_at").desc(), ordinal.desc())
     return (
         events.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)

@@ -49,17 +49,17 @@ PAGES_SCHEMA = T.ArrayType(
 BINARY_FILE_SCHEMA = "path string, modificationTime timestamp, length long, content binary"
 
 
-def read_binary_docs(
-    spark: SparkSession, path: str, glob: str = "*.pdf", stream: bool = False
-) -> DataFrame:
-    """S1/S2: binary scan of a directory with the extension filter pushed
-    down as a path-glob (file-level pruning, no bytes read for misses).
+def read_binary_docs(spark: SparkSession, path: str, stream: bool = False) -> DataFrame:
+    """S1/S2: binary scan of a directory's ``*.pdf`` files, the extension
+    filter pushed down as a path-glob (file-level pruning, no bytes read
+    for misses).
 
     Returns ``(path, modificationTime, length, content)``; ``stream=True``
     gives the identical relation as a streaming source.
     """
     reader = spark.readStream.schema(BINARY_FILE_SCHEMA) if stream else spark.read
-    return reader.format("binaryFile").option("pathGlobFilter", glob).load(path)
+    # S2: the reference's ``.pdf`` predicate (Function.java:85).
+    return reader.format("binaryFile").option("pathGlobFilter", "*.pdf").load(path)
 
 
 def extract_pages_bytes(content: bytes) -> list[tuple[int, str]]:
@@ -76,12 +76,9 @@ def extract_pages_bytes(content: bytes) -> list[tuple[int, str]]:
     return [(i + 1, page) for i, page in enumerate(text.split(PAGE_SEP))]
 
 
-def extract_pages(
-    df: DataFrame,
-    content_col: str = "content",
-    out_col: str = "pages",
-) -> DataFrame:
-    """P1 as an Arrow-batched table function: adds ``pages
+def extract_pages(df: DataFrame) -> DataFrame:
+    """P1 as an Arrow-batched table function over the binary scan's
+    ``content`` column: replaces it with ``pages
     array<struct<pageNumber,text>>`` plus ``extract_error string``
     (null on success); explode downstream.
 
@@ -99,16 +96,16 @@ def extract_pages(
     """
     import pandas as pd
 
-    keep = [c for c in df.columns if c != content_col]
+    keep = [c for c in df.columns if c != "content"]
     schema = T.StructType(
         [df.schema[c] for c in keep]
-        + [T.StructField(out_col, PAGES_SCHEMA), T.StructField("extract_error", T.StringType())]
+        + [T.StructField("pages", PAGES_SCHEMA), T.StructField("extract_error", T.StringType())]
     )
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
             pages, errors = [], []
-            for b in pdf[content_col]:
+            for b in pdf["content"]:
                 try:
                     pages.append(extract_pages_bytes(b) if b is not None else [])
                     errors.append(None)
@@ -116,17 +113,16 @@ def extract_pages(
                     pages.append([])
                     errors.append(f"{type(e).__name__}: {e}")
             out = pdf[keep].copy()
-            out[out_col] = [[(n, t) for n, t in ps] for ps in pages]
+            out["pages"] = [[(n, t) for n, t in ps] for ps in pages]
             out["extract_error"] = errors
             yield out
 
     return df.mapInPandas(run, schema)
 
 
-def pdf_source(
-    spark: SparkSession, path: str, glob: str = "*.pdf", stream: bool = False
-) -> DataFrame:
-    """S1+S2+P1 composed: one row per page, ``(fileName, pageNumber, text)``.
+def pdf_source(spark: SparkSession, path: str, stream: bool = False) -> DataFrame:
+    """S1+S2+P1 composed: one row per page of each ``*.pdf`` file under
+    ``path``, ``(fileName, pageNumber, text)``.
 
     ``fileName`` is the file's base name (the reference's blob name).  A
     file that does not decode is quarantined by :func:`extract_pages`:
@@ -135,7 +131,7 @@ def pdf_source(
     neither fails a batch ingest nor stalls a stream that would replay
     the same failing micro-batch.
     """
-    binary = read_binary_docs(spark, path, glob, stream)
+    binary = read_binary_docs(spark, path, stream)
     paged = extract_pages(binary)
     return paged.select(
         F.element_at(F.split(F.col("path"), "/"), -1).alias("fileName"),

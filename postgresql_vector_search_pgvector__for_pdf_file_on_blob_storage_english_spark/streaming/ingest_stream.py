@@ -37,12 +37,12 @@ def ingest_stream(
     corpus_path: str,
     status_path: str,
     checkpoint_dir: str,
-    glob: str = "*.pdf",
     dim: int = DEFAULT_DIM,
     embed_fn=None,
     available_now: bool = True,
 ):
-    """Start the arrival-driven ingest; returns the StreamingQuery.
+    """Start the arrival-driven ingest of the ``*.pdf`` files arriving in
+    ``input_dir``; returns the StreamingQuery.
 
     ``foreachBatch`` runs the identical batch pipeline per micro-batch,
     so batch and streaming results are the same relation (stateless by
@@ -59,7 +59,7 @@ def ingest_stream(
         status_events.write.mode("append").parquet(status_path)
 
     writer = (
-        pdf_source(spark, input_dir, glob, stream=True)
+        pdf_source(spark, input_dir, stream=True)
         .writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
     )

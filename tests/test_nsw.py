@@ -225,6 +225,18 @@ class TestHnsw:
         ]
         assert persisted == live
 
+    def test_batch_repeated_query_id_raises(self, spark, hgraph, emb):
+        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.nsw import (
+            hnsw_search_join,
+        )
+
+        # two different queries sharing an id would share one window
+        queries = emb.filter(F.col("vec_id") < 2).select(
+            F.lit(7).cast("long").alias("query_id"), F.col("embedding").alias("query_vec")
+        )
+        with pytest.raises(ValueError, match="query_id 7 repeats"):
+            hnsw_search_join(hgraph, queries, k=1, ef_search=EF)
+
 
 class TestHnswBatch:
     def test_batch_matches_single_query_walks(self, spark, emb):

@@ -77,17 +77,23 @@ def test_sse_events_shape_and_order(spark, hits):
 
 
 def test_sse_events_json_escaping(spark):
-    # a fileName/summary containing quotes or backslashes must still
-    # produce valid JSON (the reference serializes via Gson, which escapes)
-    rows = [("idq", 'he said "hi" \\ bye', 'we"ird\\.pdf', 3)]
+    # a fileName/summary containing quotes, backslashes or control
+    # characters (a single tab survives the page normalization) must
+    # still produce valid JSON (the reference serializes via Gson, which
+    # escapes them all)
+    rows = [
+        ("idq", 'he said "hi" \\ bye', 'we"ird\\.pdf', 3),
+        ("idt", "tab\there \x01 ctl", "ta\tb\x01.pdf", 4),
+    ]
     df = spark.createDataFrame(
         rows, "id string, origntext string, fileName string, pageNumber int"
     )
     ev = sse_events(llm_extract(df), ACCOUNT).collect()
-    by_seq = {r["seq"]: json.loads(r["event_json"]) for r in ev}
-    assert by_seq[2]["fileName"] == 'we"ird\\.pdf'
-    assert by_seq[2]["link"] == f'{ACCOUNT}we"ird\\.pdf#page=3'
-    assert by_seq[3]["content"].replace(SSE_SPACE_SENTINEL, " ") == 'he said "hi" \\ bye'
+    got = {(r["id"], r["seq"]): json.loads(r["event_json"]) for r in ev}
+    for id_, text, file_name, page in rows:
+        assert got[(id_, 2)]["fileName"] == file_name
+        assert got[(id_, 2)]["link"] == f"{ACCOUNT}{file_name}#page={page}"
+        assert got[(id_, 3)]["content"].replace(SSE_SPACE_SENTINEL, " ") == text
 
 
 class TestExpandContext:

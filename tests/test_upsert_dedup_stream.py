@@ -1,52 +1,8 @@
-"""File-scoped corpus upsert + streaming dedup with cross-batch state."""
+"""Streaming dedup with cross-batch state."""
 
 from __future__ import annotations
 
-import pytest
-
-from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.ingest import (
-    ingest_pages,
-    upsert_corpus_files,
-    write_corpus,
-)
 from pyspark.sql import functions as F
-
-
-def _pages(spark, rows):
-    return spark.createDataFrame(rows, "fileName string, pageNumber int, text string")
-
-
-class TestUpsertCorpusFiles:
-    def test_reingest_replaces_only_touched_file(self, spark, tmp_path):
-        path = str(tmp_path / "corpus")
-        v1 = _pages(spark, [("a.pdf", 1, "alpha one"), ("a.pdf", 2, "alpha two"),
-                            ("b.pdf", 1, "beta one")])
-        corpus_v1, _ = ingest_pages(v1, dim=16)
-        write_corpus(corpus_v1, path)
-
-        # re-upload a.pdf with different content (one page now)
-        v2 = _pages(spark, [("a.pdf", 1, "alpha REVISED")])
-        corpus_v2, _ = ingest_pages(v2, dim=16)
-        upsert_corpus_files(spark, path, corpus_v2)
-
-        stored = spark.read.parquet(path)
-        by_file = {
-            r["fileName"]: r["n"]
-            for r in stored.groupBy("fileName").agg(F.count("*").alias("n")).collect()
-        }
-        assert by_file == {"a.pdf": 1, "b.pdf": 1}
-        a_text = stored.filter(F.col("fileName") == "a.pdf").first()["origntext"]
-        assert a_text == "alpha REVISED"
-
-    def test_reingest_identical_is_idempotent(self, spark, tmp_path):
-        path = str(tmp_path / "corpus")
-        v1 = _pages(spark, [("a.pdf", 1, "same content")])
-        corpus, _ = ingest_pages(v1, dim=16)
-        write_corpus(corpus, path)
-        ids_before = sorted(r["id"] for r in spark.read.parquet(path).collect())
-        upsert_corpus_files(spark, path, corpus)
-        ids_after = sorted(r["id"] for r in spark.read.parquet(path).collect())
-        assert ids_before == ids_after
 
 
 class TestStreamingDedup:
