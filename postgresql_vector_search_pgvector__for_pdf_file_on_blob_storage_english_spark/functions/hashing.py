@@ -19,9 +19,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Large prime < 2^61 for universal-hash style (a*h + b) % P families.
-MERSENNE_P = (1 << 61) - 1
-
 
 def stable_hash60(s: Column | str) -> Column:
     """md5-derived 60-bit non-negative hash, reproducible in ANSI SQL."""

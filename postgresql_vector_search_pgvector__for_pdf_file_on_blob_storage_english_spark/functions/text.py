@@ -55,36 +55,36 @@ def normalize_whitespace_col(col: Column | str) -> Column:
     return F.regexp_replace(F.regexp_replace(c, "\n", " "), "\\s{2,}", " ")
 
 
-def find_split_index(text: str, max_length: int = MAX_CHUNK_LEN) -> int:
+def find_split_index(text: str) -> int:
     """Port of Function.java:232-247 (see module docstring for edge cases)."""
-    start = max_length - SPLIT_WINDOW
-    split_index = max_length
+    start = MAX_CHUNK_LEN - SPLIT_WINDOW
+    split_index = MAX_CHUNK_LEN
     while split_index > start:
         if text[split_index] in PUNCTUATION:
             break
         split_index -= 1
     if split_index == 0:  # unreachable for start > 0; kept for fidelity
-        split_index = max_length
+        split_index = MAX_CHUNK_LEN
     return split_index
 
 
-def split_chunks(text: str, max_length: int = MAX_CHUNK_LEN) -> list[str]:
+def split_chunks(text: str) -> list[str]:
     """Port of Function.java:216-228: repeated cut + remainder.
 
     Invariants (property-tested): ``''.join(chunks) == text``; every
     chunk except the last has length in [7200, 7500]; input of length
-    <= max_length yields exactly [text] (including the empty page).
+    <= MAX_CHUNK_LEN yields exactly [text] (including the empty page).
     """
     chunks: list[str] = []
-    while len(text) > max_length:
-        i = find_split_index(text, max_length)
+    while len(text) > MAX_CHUNK_LEN:
+        i = find_split_index(text)
         chunks.append(text[:i])
         text = text[i:]
     chunks.append(text)
     return chunks
 
 
-def split_chunks_col(norm: Column, max_length: int = MAX_CHUNK_LEN) -> Column:
+def split_chunks_col(norm: Column) -> Column:
     """``array<string>`` of chunks for an ALREADY normalized text
     column — the r14 native port of :func:`split_chunks` (guide §4:
     the punctuation-window scan is pure integer/string work, so the
@@ -95,20 +95,20 @@ def split_chunks_col(norm: Column, max_length: int = MAX_CHUNK_LEN) -> Column:
     ``regexp_extract_all`` (global matching resumes where the previous
     chunk ended, which IS the loop's remainder semantics):
 
-    1. ``(?=.{7501}).{7201,7500}(?=[.:;?!])`` — more than max_length
+    1. ``(?=.{7501}).{7201,7500}(?=[.:;?!])`` — more than MAX_CHUNK_LEN
        remains and some position in the scan window ``(7200, 7500]``
        holds a punctuation char: the GREEDY bounded quantifier
        backtracks from 7500 down, so the first success is the LAST
        such position — exactly the reference's backwards scan — and
        the lookahead leaves the punctuation char to start the next
        chunk;
-    2. ``(?=.{7501}).{7200}`` — more than max_length remains, no
+    2. ``(?=.{7501}).{7200}`` — more than MAX_CHUNK_LEN remains, no
        punctuation in the window: cut at 7200 (the reference's
        splitIndex == start exit);
     3. ``.{1,7500}$`` — the remainder.
 
     Every position with >= 1 char remaining matches one alternative
-    (when more than max_length remains, alternative 2 always can), so
+    (when more than MAX_CHUNK_LEN remains, alternative 2 always can), so
     matches are contiguous and ``''.join(chunks) == text`` holds.  The
     empty page is the one case with no match — handled by the explicit
     CASE (the reference returns ``['']``).  Lengths are code points on
@@ -120,12 +120,12 @@ def split_chunks_col(norm: Column, max_length: int = MAX_CHUNK_LEN) -> Column:
     duplication re-runs the scan per reference (the repo's
     explode-staging pitfall, r13).
     """
-    start = max_length - SPLIT_WINDOW
+    start = MAX_CHUNK_LEN - SPLIT_WINDOW
     punct = "[.:;?!]"
     pat = (
-        f"(?s)(?:(?=.{{{max_length + 1}}}).{{{start + 1},{max_length}}}(?={punct})"
-        f"|(?=.{{{max_length + 1}}}).{{{start}}}"
-        f"|.{{1,{max_length}}}$)"
+        f"(?s)(?:(?=.{{{MAX_CHUNK_LEN + 1}}}).{{{start + 1},{MAX_CHUNK_LEN}}}(?={punct})"
+        f"|(?=.{{{MAX_CHUNK_LEN + 1}}}).{{{start}}}"
+        f"|.{{1,{MAX_CHUNK_LEN}}}$)"
     )
     return F.when(F.length(norm) == 0, F.array(F.lit(""))).otherwise(
         F.regexp_extract_all(norm, F.lit(pat), 0)

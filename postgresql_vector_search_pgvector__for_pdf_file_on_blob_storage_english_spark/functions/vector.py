@@ -6,9 +6,9 @@ plus the obvious siblings ``<=>`` (cosine) and ``<#>`` (negative inner
 product) — entirely with ``zip_with``/``aggregate``/``transform`` so the
 math stays on the JVM.  These higher-order functions are
 ``CodegenFallback`` expressions: they run interpreted per row inside an
-otherwise code-generated stage.  No Python UDF in the hot path: at
-100 TB this is the difference between an Arrow round-trip per batch and
-JVM-only execution.
+otherwise code-generated stage.  They are the query registry's path,
+not the search's: an exact L2 search over a list query is scored block
+at a time by ``operators/knn.py``'s NumPy scorer.
 
 Accumulation is sequential left-to-right (``aggregate`` semantics), in
 double precision regardless of the storage type (float4 arrays, matching

@@ -12,57 +12,52 @@ tiebreak ``(distance, id)``.
 
 Spark-first physical design
 ---------------------------
-* Single query: ``orderBy(distance, id).limit(k)`` plans as
-  ``TakeOrderedAndProject`` — a per-partition top-k heap merged on the
-  driver.  **No full sort, no shuffle of the corpus.**  This is the
-  plan you want at 100 TB: each executor scans its parquet split,
-  keeps k rows, and ships only k rows.
-* Distance math is native higher-order functions (functions/vector.py).
-  ``aggregate`` is a ``CodegenFallback`` expression, so the fold runs
-  interpreted per row inside the scan stage (the rest of the stage is
-  codegen); the embedding column never leaves that stage.
-* A literal query travels as ONE literal: its JSON text parsed by
-  ``from_json``, which Catalyst constant-folds into a single
-  ``array<double>`` literal holding the same doubles as a per-element
-  ``F.array(F.lit(v), ...)`` — one py4j call instead of one per
-  dimension, and bit-identical distances.
-* The scan is split per core: Spark sizes file splits from the corpus
-  bytes and the default parallelism, so even a small corpus of a few
-  files is scored by every core, each task keeping its own k-row heap.
-* A query whose length differs from a corpus vector fails in the same
-  scan with pgvector's "different vector dimensions" error, instead of
-  silently scoring the shared prefix.
+One scorer, :func:`_scored`, answers both a single query (:func:`knn`)
+and a batch (:func:`knn_join`), so the two give bit-identical
+distances.  It takes *blocks* of the corpus — ``(payload, vector
+lengths, flat vector values)`` — scores all queries against each block
+by L2 distance (the reference's ``<->``, the only distance it asks for)
+with one NumPy GEMM, and keeps per query its k nearest rows plus any
+row tied with the k-th.  Only these narrow candidates (no embedding)
+leave the scorer.
+
+* Single query: the query becomes a one-row matrix on the driver (no
+  Spark job), and ``orderBy(distance, id).limit(k)`` over the candidates
+  plans as ``TakeOrderedAndProject`` — a per-task top-k merged on the
+  driver.  **No full sort, no shuffle of the corpus.**
+* Batch: the query relation is collected once, as one Arrow table
+  (under :data:`QUERY_BATCH_MAX_ROWS` rows); the candidates cross one
+  exchange, to a per-query window that takes the global top-k.
+* A query whose length differs from a corpus vector fails with
+  pgvector's "different vector dimensions" error, instead of silently
+  scoring the shared prefix; a NaN or infinite query component is
+  refused on the driver, in pgvector's words.
 * Results are ordered ``(distance ASC NULLS LAST, id)``, as pgvector's
   ``ORDER BY ... ASC`` puts a null distance (a null vector) last.
 
-Batched queries (N query vectors, :func:`knn_join`)
-----------------------------------------------------
-The query batch is collected once, as one Arrow table (under the row
-cap :data:`QUERY_BATCH_MAX_ROWS`), and becomes a matrix.  One scorer
-takes *blocks* of the corpus — ``(payload, vector lengths, flat vector
-values)`` — scores all queries against each block by L2 distance (the
-reference's ``<->``, the only distance it asks for) with one NumPy
-GEMM, and keeps per query its k nearest rows plus any row tied with the
-k-th.  Only these narrow candidates (no embedding) cross the one
-exchange, to a per-query window that takes the global top-k.  The blocks come from one of two sources:
+The blocks come from one of two sources:
 
 * **Files.** A corpus whose optimized plan is a bare Parquet relation,
   at most under a projection of plain columns, whose needed columns are
   all data columns (not hive partition columns), and whose file URIs
   ``pyarrow.fs.FileSystem.from_uri`` opens, is never scanned by Spark.
-  Its ``inputFiles()`` are spread, balanced by bytes, over
-  ``defaultParallelism`` tasks of a ``spark.range(...).mapInArrow``.
+  Its ``inputFiles()`` are spread, balanced by bytes, over the tasks
+  (:data:`TASK_BYTES`) of a ``spark.range(...).mapInArrow``.
   Each task decodes its files with pyarrow, matching each column to the
   file's field as Spark's reader does (case-insensitively unless
   ``spark.sql.caseSensitive``), and keeps each decoded block
   in a byte-bounded LRU (:data:`BLOCK_CACHE_BYTES`) in its reused Python
   worker, keyed by the file's ``(uri, size, mtime)`` and the columns
-  read, so a worker decodes a file once, not once per batch, and a file
+  read, so a worker decodes a file once, not once per search, and a file
   rewritten in place is never served stale.  The plan holds no
   ``FileScan``.
 * **Scan.** Any other corpus (in-memory, filtered, joined, derived)
   feeds the scorer the Arrow batches of its own scan, through
   ``mapInArrow``.
+
+The fold of ``functions/vector.py`` (interpreted per row in the scan)
+scores only what the registry alone sends :func:`knn`: a Column or
+DataFrame query, or a metric other than ``l2``.
 """
 
 from __future__ import annotations
@@ -108,27 +103,38 @@ def knn(
 ) -> DataFrame:
     """Exact top-k nearest neighbors of one query vector.
 
-    ``query_vec`` may be a Python sequence (inlined as a literal array),
-    a Column, or a 1-row DataFrame whose single column is the vector
-    (joined via broadcast — keeps everything set-at-a-time, no collect).
+    An L2 query given as a Python sequence is scored by :func:`_scored`,
+    as in :func:`knn_join`.  ``query_vec`` may also be a Column, or a
+    1-row DataFrame whose single column is the vector (joined via
+    broadcast); these, and the other metrics, take the fold.
     """
-    dist_fn = DISTANCE_FNS[metric]
-    vec = F.col(vec_col)
-    if isinstance(query_vec, DataFrame):
-        qname = query_vec.columns[0]
-        query = F.col(qname)
-        scored = corpus.crossJoin(F.broadcast(query_vec)).withColumn(
-            distance_col, _dims_checked(F.size(vec), F.size(query), dist_fn(vec, query))
-        ).drop(qname)
+    asked = [c for c in corpus.columns if c != vec_col] if payload_cols is None else list(payload_cols)
+    if metric == "l2" and not isinstance(query_vec, (Column, DataFrame)):
+        import pyarrow as pa
+
+        vec = pa.array([[float(v) for v in query_vec]], pa.list_(pa.float64()))
+        qid = T.StructField("_query", T.LongType())
+        qtable = pa.table({qid.name: [0], "_vec": vec})
+        scored = _scored(corpus, qtable, qid, k, vec_col, id_col, asked, distance_col)
     else:
-        query = _query_col(query_vec)
-        scored = corpus.withColumn(
-            distance_col, _dims_checked(F.size(vec), F.size(query), dist_fn(vec, query))
-        )
-    cols = list(payload_cols) if payload_cols is not None else [c for c in corpus.columns if c != vec_col]
-    if distance_col not in cols:
-        cols.append(distance_col)
-    # TakeOrderedAndProject: per-partition heap, k rows to the driver.
+        # The fold: only the registry reaches it (Column and DataFrame
+        # queries, the cosine / dot / l2sq metrics); ROADMAP item 5
+        # deletes it with them.
+        dist_fn = DISTANCE_FNS[metric]
+        vec = F.col(vec_col)
+        if isinstance(query_vec, DataFrame):
+            qname = query_vec.columns[0]
+            query = F.col(qname)
+            scored = corpus.crossJoin(F.broadcast(query_vec)).withColumn(
+                distance_col, _dims_checked(F.size(vec), F.size(query), dist_fn(vec, query))
+            ).drop(qname)
+        else:
+            query = _query_col(query_vec)
+            scored = corpus.withColumn(
+                distance_col, _dims_checked(F.size(vec), F.size(query), dist_fn(vec, query))
+            )
+    cols = asked if distance_col in asked else [*asked, distance_col]
+    # TakeOrderedAndProject: per-task heap, k rows to the driver.
     return scored.select(*cols).orderBy(F.col(distance_col).asc_nulls_last(), id_col).limit(k)
 
 
@@ -284,6 +290,14 @@ def _parquet_files(corpus: DataFrame, needed: Sequence[str]) -> list | None:
     return [(u, i.size, i.mtime_ns) for u, i in zip(uris, infos)]
 
 
+# A single query's file source runs a task per this many corpus bytes, a
+# batch a task per core: one query's scoring is cheap next to the ~100 ms
+# that concurrent Python tasks each pay.  On 4 cores (medians of 11) one
+# query over 2, 12, 62 MB took 162, 167, 225 ms in 1 task and 199, 200,
+# 198 ms in 4; 256 queries over 62 MB took 494 ms in 4 tasks, 858 in 1.
+TASK_BYTES = 16 << 20
+
+
 def _by_bytes(files: list, n: int) -> list[list]:
     """Files spread over ``n`` groups, largest first onto the lightest
     group; the same files always give the same groups."""
@@ -296,58 +310,38 @@ def _by_bytes(files: list, n: int) -> list[list]:
     return groups
 
 
-def knn_join(
+def _scored(
     corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    payload_cols: Sequence[str] | None = None,
-    distance_col: str = "distance",
+    qtable,
+    qid: T.StructField,
+    k: int,
+    vec_col: str,
+    id_col: str,
+    asked: Sequence[str],
+    distance_col: str,
 ) -> DataFrame:
-    """Per-query exact top-k for a relation of query vectors: the
-    generalization the reference only runs at N=1.
+    """The checked candidates of each query of ``qtable`` (Arrow columns:
+    the id, of Spark type ``qid``, and the vector): ``(qid, *asked,
+    [id_col,] distance)`` rows, in no order.
 
-    The queries are collected once (:func:`collect_query_batch`, one
-    Arrow table) into a matrix; each ``query_id`` must appear once, as
-    it keys the per-query window (a repeated id raises ``ValueError``).
-    One scorer computes each corpus block's |block| x |queries| L2
-    distance matrix with one NumPy GEMM in float64 and keeps, per query,
-    its k nearest rows plus every row tied with the k-th, so the window
-    over the candidates applies the ``(distance, id)`` rule to all rows
-    that could win.  ``id_col`` rides along for that rule even when
-    ``payload_cols`` leaves it out, and is dropped after the window.  A
-    null vector gets a null distance and ranks last.  For a vector whose
-    length differs from the queries' the scorer reports that length, and
-    the projection after it raises pgvector's "different vector
-    dimensions" error.
-
-    The blocks come from the corpus files when :func:`_parquet_files`
-    accepts the corpus: ``inputFiles()`` spread by bytes over
-    ``defaultParallelism`` tasks of a ``spark.range`` mapped with
-    ``mapInArrow``, each file decoded by pyarrow and kept in the
-    worker's block cache (keyed by ``(uri, size, mtime)`` and the
-    columns read, with their types,
-    evicted least recently used past :data:`BLOCK_CACHE_BYTES`).  That
-    plan holds no ``FileScan``, and it sees exactly the files a Spark
-    scan of ``corpus`` would read.  The cache lives in this module, so
-    the package must be importable on the executors, as for the ingest
-    UDFs.  Any other corpus is scanned by Spark, and its Arrow batches
-    are the blocks.
-
-    BLAS summation order differs from the sequential fold of
-    :func:`knn`, so distances agree with it to ~1e-12 relative: the
-    winner set is the same unless two distinct candidates sit within
-    that tolerance of each other.
+    A null query vector, two lengths, or a NaN or infinite component
+    (pgvector's "NaN not allowed in vector" / "infinite value not
+    allowed in vector") raises ``ValueError`` on the driver, with no
+    Spark job.  Per block, one NumPy GEMM in float64 gives the
+    |block| x |queries| L2 distances (the expanded form rounds: a stored
+    copy of the query may score ~1e-8, not 0), and each query keeps
+    its k nearest rows plus every row tied with the k-th, so a merge
+    applies the ``(distance, id)`` rule to all rows that could win.  A
+    null vector gets a null distance; a vector of another length makes
+    the projection after the scorer raise pgvector's "different vector
+    dimensions".  The block cache lives in this module, so the package
+    must be importable on the executors, as for the ingest UDFs.
     """
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    qtable = collect_query_batch(queries, [query_id_col, query_vec_col])
     qids = qtable.column(0).combine_chunks()
     qvecs = qtable.column(1).combine_chunks()
     n_q = len(qids)
@@ -356,18 +350,17 @@ def knn_join(
         raise ValueError("query vectors must be non-null and of one length")
     dim = int(qlens[0]) if n_q else 0
     qmat = qvecs.flatten().to_numpy(zero_copy_only=False).astype(np.float64).reshape(n_q, dim)
+    bad = qmat[~np.isfinite(qmat)]
+    if len(bad):  # pgvector's check, on the first such component
+        raise ValueError(f"{'NaN' if np.isnan(bad[0]) else 'infinite value'} not allowed in vector")
     qsq = (qmat * qmat).sum(axis=-1)  # (Q,)
     qidx = np.arange(n_q)
 
-    asked = list(payload_cols) if payload_cols is not None else [
-        c for c in corpus.columns if c != vec_col
-    ]
     cols = asked if id_col in asked else [*asked, id_col]
     needed = list(dict.fromkeys([*cols, vec_col]))
-    fields = [T.StructField(c, corpus.schema[c].dataType) for c in cols]
     schema = T.StructType(
-        [T.StructField(query_id_col, queries.schema[query_id_col].dataType)]
-        + fields
+        [T.StructField(qid.name, qid.dataType)]
+        + [T.StructField(c, corpus.schema[c].dataType) for c in cols]
         + [T.StructField(distance_col, T.DoubleType()), T.StructField("_bad_len", T.IntegerType())]
     )
 
@@ -378,7 +371,7 @@ def knn_join(
 
     def rows(payload, ri, qi, dist, bad_len=None):
         out = payload.take(pa.array(ri, pa.int64()))
-        out = out.add_column(0, query_id_col, qids.take(pa.array(qi, pa.int64())))
+        out = out.add_column(0, qid.name, qids.take(pa.array(qi, pa.int64())))
         out = out.append_column(distance_col, pa.array(dist, pa.float64(), from_pandas=True))
         lens = pa.nulls(len(ri), pa.int32()) if bad_len is None else pa.array(bad_len, pa.int32())
         return out.append_column("_bad_len", lens)
@@ -408,7 +401,8 @@ def knn_join(
     files = _parquet_files(corpus, needed) if n_q else None
     if files is not None:
         spark = corpus.sparkSession
-        groups = _by_bytes(files, spark.sparkContext.defaultParallelism)
+        cores = spark.sparkContext.defaultParallelism
+        groups = _by_bytes(files, min(cores, -(-sum(f[1] for f in files) // TASK_BYTES)) if n_q == 1 else cores)
         read_schema = to_arrow_schema(T.StructType([corpus.schema[c] for c in needed]))
         case_sensitive = spark.conf.get("spark.sql.caseSensitive", "false").lower() == "true"
 
@@ -432,11 +426,38 @@ def knn_join(
             scan = scan.limit(0)  # nothing to score
         source = scan.mapInArrow(lambda it: candidates(scan_blocks(it)), schema)
 
-    checked = source.select(
-        query_id_col,
+    return source.select(
+        qid.name,
         *cols,
         _dims_checked(F.col("_bad_len"), F.lit(dim), F.col(distance_col)).alias(distance_col),
     )
+
+
+def knn_join(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+    payload_cols: Sequence[str] | None = None,
+    distance_col: str = "distance",
+) -> DataFrame:
+    """Per-query exact top-k for a relation of query vectors: the
+    generalization the reference only runs at N=1.
+
+    The queries are collected once (:func:`collect_query_batch`) for
+    :func:`_scored`; each ``query_id`` must appear once, as it keys the
+    per-query window over the candidates (a repeated id raises
+    ``ValueError``).  ``id_col`` rides along for the ``(distance, id)``
+    rule and is dropped after the window unless asked for.  :func:`knn`
+    with an L2 sequence query runs the same scorer, so a one-query
+    ``knn_join`` gives it bit-identical distances.
+    """
+    qtable = collect_query_batch(queries, [query_id_col, query_vec_col])
+    asked = [c for c in corpus.columns if c != vec_col] if payload_cols is None else list(payload_cols)
+    checked = _scored(corpus, qtable, queries.schema[query_id_col], k, vec_col, id_col, asked, distance_col)
     global_w = Window.partitionBy(query_id_col).orderBy(
         F.col(distance_col).asc_nulls_last(), id_col
     )

@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.functions.vector import (
-    l2_distance,
+    l2_distance_sq,
 )
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators import knn as knn_module
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.knn import (
@@ -86,14 +86,14 @@ def test_literal_query_distances_equal_per_element_literal(spark, emb, special):
     q = mat[ids == 0][0].tolist()
     if special is not None:
         q[1] = special
-    got = knn(df, q, k=len(ids), payload_cols=["vec_id"]).collect()
-    ref = df.select("vec_id", l2_distance("embedding", _per_element_literal(q)).alias("d")).collect()
+    got = knn(df, q, k=len(ids), metric="l2sq", payload_cols=["vec_id"]).collect()
+    ref = df.select("vec_id", l2_distance_sq("embedding", _per_element_literal(q)).alias("d")).collect()
     assert {r["vec_id"]: repr(r["distance"]) for r in got} == {r["vec_id"]: repr(r["d"]) for r in ref}
 
 
 def test_literal_query_is_folded_to_one_literal(spark, emb):
     df, ids, mat = emb
-    hits = knn(df, mat[ids == 0][0].tolist(), k=5, payload_cols=["vec_id"])
+    hits = knn(df, mat[ids == 0][0].tolist(), k=5, metric="l2sq", payload_cols=["vec_id"])
     optimized = hits._jdf.queryExecution().optimizedPlan().toString()
     assert "from_json" not in optimized and "JsonToStructs" not in optimized
 
@@ -111,6 +111,31 @@ def test_knn_dimension_mismatch_raises(spark, query, as_frame):
         query = spark.createDataFrame([(query,)], "qv array<double>")
     with pytest.raises(SparkRuntimeException, match=expected):
         knn(corpus, query, k=1, payload_cols=["vec_id"]).collect()
+
+
+@pytest.mark.parametrize(
+    "query, message",
+    [
+        ([1.0, float("nan")], "NaN not allowed in vector"),
+        ([float("inf"), 0.0], "infinite value not allowed in vector"),
+        ([1.0, float("-inf")], "infinite value not allowed in vector"),
+        ([float("-inf"), float("nan")], "infinite value not allowed in vector"),
+    ],
+    ids=["nan", "inf", "-inf", "first-wins"],
+)
+@pytest.mark.parametrize("op", ["knn", "knn_join"])
+def test_non_finite_query_component_raises(spark, op, query, message):
+    # pgvector refuses such a vector with these words, on its first
+    # non-finite component; no distance (NaN or null) may come back.
+    corpus = spark.createDataFrame(
+        [(0, [0.0, 1.0]), (1, [1.0, 0.0])], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match=message):
+        if op == "knn":
+            knn(corpus, query, k=1, payload_cols=["vec_id"]).collect()
+        else:
+            queries = spark.createDataFrame([(0, query)], "query_id long, query_vec array<double>")
+            knn_join(corpus, queries, k=1, payload_cols=["vec_id"]).collect()
 
 
 def _corpus_with_null(spark):
@@ -247,7 +272,8 @@ class TestNumpyScalePath:
             (qid, rank, r["vec_id"])
             for qid in range(5)
             for rank, r in enumerate(
-                knn(df, mat[ids == qid][0].tolist(), k=4, metric=metric, payload_cols=["vec_id"]).collect(),
+                knn(df, queries.filter(F.col("query_id") == qid).select("query_vec"), k=4, metric=metric,
+                    payload_cols=["vec_id"]).collect(),
                 start=1,
             )
         )
@@ -615,3 +641,46 @@ def test_file_corpus_ambiguous_name_raises_like_the_scan(spark, tmp_path):
     assert _reads_files(got)
     with pytest.raises(Exception, match="(?i)duplicate field"):
         got.collect()
+
+
+def test_paper_search_shape(spark, tmp_path):
+    # The reference's search (SSEOpenAIController.java:315-316) as the
+    # benchmark calls it: a list query, id_col="id" and the reference's
+    # payload, over a write_corpus corpus.  It runs knn_join's scorer:
+    # no shuffle, and distances repr-equal to a one-query knn_join.
+    import re
+
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators.ingest import (
+        write_corpus,
+    )
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.plans.inspect import (
+        count_exchanges,
+        pushed_filters,
+    )
+
+    rng = np.random.default_rng(5)
+    mat = rng.normal(size=(60, 16)).astype(np.float32)
+    schema = "id string, origntext string, fileName string, pageNumber int, embedding array<float>"
+    rows = [(f"c{i:02d}", f"text {i}", f"f{i % 4}.pdf", i % 7 + 1, v.tolist()) for i, v in enumerate(mat)]
+    write_corpus(spark.createDataFrame(rows, schema), str(tmp_path / "corpus"))
+    stored = spark.read.parquet(str(tmp_path / "corpus"))
+    in_memory = spark.createDataFrame(rows, schema).filter(F.col("pageNumber") != 2)
+    payload = ["id", "origntext", "fileName", "pageNumber"]
+    q = (mat[3] + rng.normal(scale=0.1, size=16)).tolist()
+    queries = _query_frame(spark, [q])
+    for corpus in (stored, stored.filter(F.col("pageNumber") != 2), in_memory):
+        hits = knn(corpus, q, k=5, id_col="id", payload_cols=payload)
+        plan = _plan(hits)
+        assert count_exchanges(hits) == 0 and "TakeOrderedAndProject" in plan
+        assert hits.columns == [*payload, "distance"]
+        joined = knn_join(corpus, queries, k=5, id_col="id", payload_cols=payload).collect()
+        assert [(r["id"], repr(r["distance"])) for r in hits.collect()] == [
+            (r["id"], repr(r["distance"])) for r in sorted(joined, key=lambda r: r["rank"])
+        ]
+    files = _plan(knn(stored, q, k=5, id_col="id", payload_cols=payload))
+    assert "FileScan" not in files and re.search(r"MapInArrow .*\n\s*\+- (\*\(\d+\) )?Range ", files)
+    filtered = knn(stored.filter(F.col("pageNumber") != 2), q, k=5, id_col="id", payload_cols=payload)
+    assert re.search(r"MapInArrow (.*\n)+.*FileScan parquet", _plan(filtered))
+    assert any("Not(EqualTo(pageNumber,2))" in f for f in pushed_filters(filtered))
+    scan = _plan(knn(in_memory, q, k=5, id_col="id", payload_cols=payload))
+    assert re.search(r"MapInArrow .*\n\s*\+- .*Filter .*pageNumber", scan) and "Range" not in scan

@@ -127,7 +127,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark import get_spark
 
-    spark = get_spark("oracle_check")
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
