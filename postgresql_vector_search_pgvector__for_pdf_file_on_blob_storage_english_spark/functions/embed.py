@@ -26,6 +26,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import keep_launch_archives
+
 DEFAULT_DIM = 64  # fixture dimensionality; the reference uses 1536 (config)
 ATTEMPTS = 3  # tries per embedding call (Function.java:48)
 
@@ -84,6 +86,7 @@ def make_embedder(
 
     @F.pandas_udf(T.ArrayType(T.FloatType()))
     def embed_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        keep_launch_archives()
         for s in it:
             yield pd.Series(_embed_batch(s.fillna("").tolist()))
 

@@ -71,6 +71,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.vector import DISTANCE_FNS
+from ..session import keep_launch_archives
 
 
 def _query_col(query_vec: Sequence[float] | Column) -> Column:
@@ -291,10 +292,11 @@ def _parquet_files(corpus: DataFrame, needed: Sequence[str]) -> list | None:
 
 
 # A single query's file source runs a task per this many corpus bytes, a
-# batch a task per core: one query's scoring is cheap next to the ~100 ms
-# that concurrent Python tasks each pay.  On 4 cores (medians of 11) one
-# query over 2, 12, 62 MB took 162, 167, 225 ms in 1 task and 199, 200,
-# 198 ms in 4; 256 queries over 62 MB took 494 ms in 4 tasks, 858 in 1.
+# batch a task per core: one query's scoring is cheap next to the ~45 ms
+# run time of even an empty Python task.  On 4 cores (medians of 11,
+# warm block caches) one query over 2, 12, 62 MB took 86, 98, 128 ms in
+# 1 task and 94, 97, 104 ms in 4; 256 queries over 62 MB took 426 ms in
+# 4 tasks, 735 in 1.
 TASK_BYTES = 16 << 20
 
 
@@ -394,6 +396,7 @@ def _scored(
         return rows(payload, ri, qi, dist[ri, qi])
 
     def candidates(blocks: Iterator) -> Iterator:
+        keep_launch_archives()
         for block in blocks:
             if len(block[1]):
                 yield from score(block).to_batches()

@@ -5,7 +5,8 @@ may use; the conf is written so the same code runs unchanged on a
 multi-executor cluster: Arrow on (pandas-UDF hot path), shuffle
 partitions sized to the local core count rather than the 200 default.
 AQE (runtime re-plan, skew-join handling, partition coalescing) is on
-by Spark's own defaults.
+by Spark's own defaults.  :func:`keep_launch_archives` is the Python
+workers' half: the paper path's UDF bodies call it.
 """
 
 from __future__ import annotations
@@ -35,3 +36,38 @@ def get_spark() -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+_archives_kept = False
+
+
+def keep_launch_archives() -> None:
+    """Stop this Python worker re-reading the archives it was launched
+    with, once per worker process.
+
+    Before each task, ``pyspark.worker_util.setup_spark_files`` calls
+    ``importlib.invalidate_caches()``, and under CPython 3.11 every
+    ``zipimporter`` on the path then re-reads its whole archive
+    directory.  A worker imports pyspark from the ``pyspark.zip``,
+    py4j zip and spark-core jar that Spark puts on its launch
+    ``PYTHONPATH``: 16 importers, ~80 ms per task on a 4-core host.  Those
+    files do not change while the worker lives, so after this call a
+    zip importer of one of them keeps its directory.  Every other
+    finder is still invalidated, so ``.py`` and ``.zip`` files added
+    with ``addPyFile`` (copied into the SparkFiles root, not the launch
+    path) still import.
+    """
+    global _archives_kept
+    if _archives_kept:
+        return
+    import zipimport
+
+    launch = frozenset(p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if os.path.isfile(p))
+    reread = zipimport.zipimporter.invalidate_caches
+
+    def invalidate_caches(self):
+        if self.archive not in launch:
+            reread(self)
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+    _archives_kept = True

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import keep_launch_archives
 from .pdfcodec import extract_text_pdf
 
 PAGE_SEP = "\f"
@@ -103,6 +104,7 @@ def extract_pages(df: DataFrame) -> DataFrame:
     )
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        keep_launch_archives()
         for pdf in batches:
             pages, errors = [], []
             for b in pdf["content"]:

@@ -1,4 +1,5 @@
-"""Shared fixtures: one session-scoped local SparkSession, fixture dirs."""
+"""Shared fixtures: one session-scoped SparkSession, the one the engine
+ships (``session.get_spark``), and fixture dirs."""
 
 from __future__ import annotations
 
@@ -15,18 +16,9 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.session import get_spark
 
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("engine_tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    s = get_spark()
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
