@@ -30,6 +30,7 @@ from ..session import keep_launch_archives
 
 DEFAULT_DIM = 64  # fixture dimensionality; the reference uses 1536 (config)
 ATTEMPTS = 3  # tries per embedding call (Function.java:48)
+BACKOFF_S = 10.0  # sleep between an endpoint's tries (Function.java:263-270)
 
 
 def _token_slot(token: str, dim: int) -> tuple[int, float]:
@@ -53,20 +54,21 @@ def hash_embed_text(text: str, dim: int = DEFAULT_DIM) -> list[float]:
 def make_embedder(
     dim: int = DEFAULT_DIM,
     embed_fn: Callable[[list[str]], list[list[float]]] | None = None,
-    backoff_s: float = 10.0,
 ) -> Callable[[Column], Column]:
     """Build an Arrow-batched embedding column function.
 
     ``embed_fn`` (texts -> vectors) is the external-service hook; None
     selects the deterministic local embedder.  Each batch is tried up to
-    :data:`ATTEMPTS` times, ``backoff_s`` apart (Function.java:189-210).
-    A try fails when ``embed_fn`` raises or answers with a different
-    number of vectors than texts.  A batch whose tries all fail becomes
+    :data:`ATTEMPTS` times, :data:`BACKOFF_S` apart (Function.java:189-210);
+    the UDF keeps the backoff it was built with.  A try fails when
+    ``embed_fn`` raises or answers with a different number of vectors
+    than texts.  A batch whose tries all fail becomes
     null vectors: the ingest's ``VECTOR(n)`` predicate
     (``operators.ingest._vector_ok``) keeps those rows out of the corpus
     and ends their trail at FAILED_DB_INSERTION, as the reference marks
     the chunk and moves on (Function.java:173-174).
     """
+    backoff_s = BACKOFF_S
 
     def _embed_batch(texts: list[str]) -> list[list[float] | None]:
         if embed_fn is None:

@@ -300,6 +300,10 @@ def _parquet_files(corpus: DataFrame, needed: Sequence[str]) -> list | None:
 TASK_BYTES = 16 << 20
 
 
+# Near-zero pairs are rescored this many at a time: 12 MB at dim 1536.
+RESCORE_PAIRS = 1024
+
+
 def _by_bytes(files: list, n: int) -> list[list]:
     """Files spread over ``n`` groups, largest first onto the lightest
     group; the same files always give the same groups."""
@@ -330,8 +334,10 @@ def _scored(
     (pgvector's "NaN not allowed in vector" / "infinite value not
     allowed in vector") raises ``ValueError`` on the driver, with no
     Spark job.  Per block, one NumPy GEMM in float64 gives the
-    |block| x |queries| L2 distances (the expanded form rounds: a stored
-    copy of the query may score ~1e-8, not 0), and each query keeps
+    |block| x |queries| L2 distances by the expanded form
+    |c|² - 2c·q + |q|².  Where that cancels to within its rounding
+    bound of 0, the pair is rescored by pgvector's direct sum of
+    (c - q)², so a stored copy of a query scores 0.  Each query keeps
     its k nearest rows plus every row tied with the k-th, so a merge
     applies the ``(distance, id)`` rule to all rows that could win.  A
     null vector gets a null distance; a vector of another length makes
@@ -366,8 +372,18 @@ def _scored(
         + [T.StructField(distance_col, T.DoubleType()), T.StructField("_bad_len", T.IntegerType())]
     )
 
+    # Twice the expanded form's first-order rounding bound, (dim + 2) unit
+    # roundoffs of (|c| + |q|)² <= 2 (|c|² + |q|²), over |c|² + |q|².
+    cancel = 2.0 * (dim + 2) * np.finfo(np.float64).eps
+
     def distances(cmat):
-        sq = (cmat * cmat).sum(axis=1)[:, None] - 2.0 * (cmat @ qmat.T) + qsq[None, :]
+        csq = (cmat * cmat).sum(axis=1)
+        sq = csq[:, None] - 2.0 * (cmat @ qmat.T) + qsq[None, :]
+        ri, qi = np.nonzero(sq <= cancel * (csq[:, None] + qsq[None, :]))
+        for lo in range(0, len(ri), RESCORE_PAIRS):
+            r, q = ri[lo : lo + RESCORE_PAIRS], qi[lo : lo + RESCORE_PAIRS]
+            diff = cmat[r] - qmat[q]
+            sq[r, q] = np.einsum("ij,ij->i", diff, diff)
         np.maximum(sq, 0.0, out=sq)
         return np.sqrt(sq)
 

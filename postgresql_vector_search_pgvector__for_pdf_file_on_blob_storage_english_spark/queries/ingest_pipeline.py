@@ -39,15 +39,10 @@ def _synth_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _synth_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Run the real extraction UDTF over the synthesized binaries."""
+    """Run the real page-extraction table function over the synthesized
+    binaries."""
     paged = extract_pages(_synth_binary_files(spark, sf_dir))
-    return paged.select(
-        "fileName", F.posexplode_outer("pages").alias("_pos", "page")
-    ).select(
-        "fileName",
-        F.col("page.pageNumber").alias("pageNumber"),
-        F.col("page.text").alias("text"),
-    )
+    return paged.select("fileName", "pageNumber", "text")
 
 
 _DD_PAGES = """
@@ -58,11 +53,7 @@ FROM documents
 """
 
 
-def _pipeline_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _synth_pages(spark, sf_dir)
-
-
-_register("pipeline_pages_from_binary", _pipeline_pages, _DD_PAGES)
+_register("pipeline_pages_from_binary", _synth_pages, _DD_PAGES)
 
 
 def _synth_real_pdf_files(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -95,13 +86,7 @@ def _pipeline_pages_real_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Function.java:92-134's front door) — and hash-match the per-page text
     against the same documents-derived SQL as the ``\\f`` twin."""
     paged = extract_pages(_synth_real_pdf_files(spark, sf_dir))
-    return paged.select(
-        "fileName", F.posexplode_outer("pages").alias("_pos", "page")
-    ).select(
-        "fileName",
-        F.col("page.pageNumber").alias("pageNumber"),
-        F.col("page.text").alias("text"),
-    )
+    return paged.select("fileName", "pageNumber", "text")
 
 
 _register("pipeline_pages_from_real_pdf", _pipeline_pages_real_pdf, _DD_PAGES)

@@ -10,10 +10,10 @@ Reference surface (SURVEY.md §2.1/S1-S2, §2.2/P1):
   the scan via ``pathGlobFilter`` so non-matching blobs are never
   opened — at 100 TB the filter must prune *files*, not rows.
 * P1 — PDF bytes -> per-page text (Function.java:92-134, PDFBox
-  ``PDFTextStripper`` page loop).  This is a table function:
-  ``binary -> array<struct<pageNumber int, text string>>``, exploded
-  with ``posexplode``; runs as an Arrow-batched ``mapInPandas`` so one
-  Python worker handles a whole batch of files.
+  ``PDFTextStripper`` page loop).  This is a row-emitting table
+  function: each file in, one ``(pageNumber, text)`` row out per page,
+  as the page loop emits them; it runs as an Arrow-batched
+  ``mapInPandas``, so one Python worker handles a whole batch of files.
 
 Real ``%PDF`` bytes always decode with the vendored stdlib-only codec
 (:mod:`.pdfcodec` — classic-xref + FlateDecode + text-operator subset,
@@ -35,16 +35,6 @@ from ..session import keep_launch_archives
 from .pdfcodec import extract_text_pdf
 
 PAGE_SEP = "\f"
-
-PAGES_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("pageNumber", T.IntegerType()),  # 1-based, Function.java:104
-            T.StructField("text", T.StringType()),
-        ]
-    )
-)
-
 
 # The binaryFile source's fixed schema; a streaming source must be given it.
 BINARY_FILE_SCHEMA = "path string, modificationTime timestamp, length long, content binary"
@@ -79,45 +69,48 @@ def extract_pages_bytes(content: bytes) -> list[tuple[int, str]]:
 
 def extract_pages(df: DataFrame) -> DataFrame:
     """P1 as an Arrow-batched table function over the binary scan's
-    ``content`` column: replaces it with ``pages
-    array<struct<pageNumber,text>>`` plus ``extract_error string``
-    (null on success); explode downstream.
+    ``content`` column: one row per page, in page order, carrying the
+    input's other columns plus ``pageNumber int`` (1-based,
+    Function.java:104), ``text string`` and ``extract_error string``
+    (null on success).
 
     ``mapInPandas`` (not a scalar UDF) so each Python worker invocation
     amortizes over a whole Arrow batch of files, and the binary column
     is dropped from the output — page text, not raw blobs, crosses the
     next shuffle.
 
-    A blob that does not decode is quarantined: its row has empty
-    ``pages`` and the decode error's message in ``extract_error``, so
-    one malformed blob among millions does not kill the ingest.  The
-    error stays in that column; a file that yields no page gets no
-    chunk and so no chunk trail, as in the reference, whose trail
-    starts at PAGE_SEPARATE_FINISHED.
+    A blob that does not decode is quarantined: it gives one row with a
+    null page and the decode error's message in ``extract_error``, so
+    one malformed blob among millions does not kill the ingest.  A null
+    blob, or a document with no page, gives a null-page row with a null
+    error.  A null page gets no chunk and so no chunk trail, as in the
+    reference, whose trail starts at PAGE_SEPARATE_FINISHED.
     """
     import pandas as pd
 
     keep = [c for c in df.columns if c != "content"]
     schema = T.StructType(
         [df.schema[c] for c in keep]
-        + [T.StructField("pages", PAGES_SCHEMA), T.StructField("extract_error", T.StringType())]
+        + [
+            T.StructField("pageNumber", T.IntegerType()),
+            T.StructField("text", T.StringType()),
+            T.StructField("extract_error", T.StringType()),
+        ]
     )
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         keep_launch_archives()
         for pdf in batches:
-            pages, errors = [], []
-            for b in pdf["content"]:
+            rows = []  # (input row, pageNumber, text, extract_error) per page
+            for i, b in enumerate(pdf["content"]):
                 try:
-                    pages.append(extract_pages_bytes(b) if b is not None else [])
-                    errors.append(None)
+                    found, error = (extract_pages_bytes(b) if b is not None else []), None
                 except Exception as e:  # noqa: BLE001 — quarantine contract
-                    pages.append([])
-                    errors.append(f"{type(e).__name__}: {e}")
-            out = pdf[keep].copy()
-            out["pages"] = [[(n, t) for n, t in ps] for ps in pages]
-            out["extract_error"] = errors
-            yield out
+                    found, error = [], f"{type(e).__name__}: {e}"
+                rows += [(i, n, t, error) for n, t in found or [(None, None)]]
+            pages = pd.DataFrame(rows, columns=["row", "pageNumber", "text", "extract_error"])
+            carried = pdf[keep].iloc[pages.pop("row")].reset_index(drop=True)
+            yield pd.concat([carried, pages.astype({"pageNumber": "Int32"})], axis=1)
 
     return df.mapInPandas(run, schema)
 
@@ -133,13 +126,6 @@ def pdf_source(spark: SparkSession, path: str, stream: bool = False) -> DataFram
     neither fails a batch ingest nor stalls a stream that would replay
     the same failing micro-batch.
     """
-    binary = read_binary_docs(spark, path, stream)
-    paged = extract_pages(binary)
-    return paged.select(
-        F.element_at(F.split(F.col("path"), "/"), -1).alias("fileName"),
-        F.posexplode_outer(F.col("pages")).alias("_pos", "page"),
-    ).select(
-        "fileName",
-        F.col("page.pageNumber").alias("pageNumber"),
-        F.col("page.text").alias("text"),
+    return extract_pages(read_binary_docs(spark, path, stream)).select(
+        F.element_at(F.split(F.col("path"), "/"), -1).alias("fileName"), "pageNumber", "text"
     )

@@ -7,6 +7,7 @@ import math
 import numpy as np
 import pytest
 
+from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.functions import embed as embed_module
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.functions.embed import (
     DEFAULT_DIM,
     hash_embed_text,
@@ -41,7 +42,7 @@ def test_udf_matches_pure_function(spark):
         assert got[i] == pytest.approx(expect), f"text {t!r}"
 
 
-def test_short_answer_is_retried_then_quarantined(spark, tmp_path):
+def test_short_answer_is_retried_then_quarantined(spark, tmp_path, monkeypatch):
     # an endpoint that answers one vector short is a failed try: retried,
     # then the batch becomes null vectors instead of failing the job
     log = tmp_path / "calls"
@@ -51,7 +52,8 @@ def test_short_answer_is_retried_then_quarantined(spark, tmp_path):
             f.write("call\n")
         return [hash_embed_text(t, 4) for t in texts][:-1]
 
-    embed = make_embedder(dim=4, embed_fn=short, backoff_s=0.0)
+    monkeypatch.setattr(embed_module, "BACKOFF_S", 0.0)  # read when the UDF is built
+    embed = make_embedder(dim=4, embed_fn=short)
     df = spark.createDataFrame([(1, "a b"), (2, "c d")], "id int, text string").repartition(1)
     rows = df.select("id", embed(F.col("text")).alias("v")).collect()
     assert sorted(r["id"] for r in rows) == [1, 2]

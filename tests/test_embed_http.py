@@ -19,6 +19,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
 
+from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.functions import embed as embed_module
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.functions.embed import (
     hash_embed_text,
     make_embedder,
@@ -70,6 +71,13 @@ def _make_handler(state: _StubState):
     return Handler
 
 
+@pytest.fixture(autouse=True)
+def short_backoff(monkeypatch):
+    """A 10 ms backoff between tries; make_embedder reads it when it
+    builds the UDF, so the workers get it too."""
+    monkeypatch.setattr(embed_module, "BACKOFF_S", 0.01)
+
+
 @pytest.fixture()
 def stub_server():
     state = _StubState()
@@ -102,7 +110,7 @@ def test_happy_path_round_trips_vectors(spark, stub_server):
     df = spark.createDataFrame(
         [("a", "hello world"), ("b", "vector text")], "id string, text string"
     ).repartition(1)
-    emb = make_embedder(dim=DIM, embed_fn=_http_embed_fn(url), backoff_s=0.01)
+    emb = make_embedder(dim=DIM, embed_fn=_http_embed_fn(url))
     rows = {r["id"]: r["e"] for r in df.select("id", emb(F.col("text")).alias("e")).collect()}
     assert rows["a"] == pytest.approx(hash_embed_text("hello world", DIM))
     assert rows["b"] == pytest.approx(hash_embed_text("vector text", DIM))
@@ -114,7 +122,7 @@ def test_retry_backoff_recovers_transient_503(spark, stub_server):
     df = spark.createDataFrame(
         [("a", "flaky endpoint text"), ("b", "companion row")], "id string, text string"
     ).repartition(1)
-    emb = make_embedder(dim=DIM, embed_fn=_http_embed_fn(url), backoff_s=0.01)
+    emb = make_embedder(dim=DIM, embed_fn=_http_embed_fn(url))
     rows = {r["id"]: r["e"] for r in df.select("id", emb(F.col("text")).alias("e")).collect()}
     # 3rd attempt succeeded and produced real vectors
     assert rows["a"] == pytest.approx(hash_embed_text("flaky endpoint text", DIM))
@@ -128,7 +136,7 @@ def test_exhausted_retries_quarantine_as_null(spark, stub_server):
     df = spark.createDataFrame(
         [("a", "poison pill"), ("b", "poison too")], "id string, text string"
     ).repartition(1)
-    emb = make_embedder(dim=DIM, embed_fn=_http_embed_fn(url), backoff_s=0.01)
+    emb = make_embedder(dim=DIM, embed_fn=_http_embed_fn(url))
     rows = df.select("id", emb(F.col("text")).alias("e")).collect()
     assert all(r["e"] is None for r in rows)  # quarantined, job survived
     assert len(state.requests) == 3  # retries exhausted: 3 attempts

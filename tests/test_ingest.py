@@ -9,6 +9,7 @@ import time
 import numpy as np
 import pytest
 
+from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.functions import embed as embed_module
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.functions.embed import (
     hash_embed_text,
 )
@@ -25,6 +26,7 @@ from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spa
 )
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.sources.pdf import (
     PAGE_SEP,
+    extract_pages,
     extract_pages_bytes,
     pdf_source,
 )
@@ -42,6 +44,15 @@ def _chunk_ids(df) -> set[str]:
 def _vector_dims(df) -> set:
     """The embedding lengths among ``df``'s rows, None for a null one."""
     return {None if r[0] is None else len(r[0]) for r in df.select("embedding").collect()}
+
+
+def _pages_by_name(paged) -> dict[str, list[tuple]]:
+    """``extract_pages`` rows as ``{name: [(pageNumber, text,
+    extract_error), ...]}``, in the order the decoder emitted them."""
+    out: dict[str, list[tuple]] = {}
+    for r in paged.collect():
+        out.setdefault(r["name"], []).append((r["pageNumber"], r["text"], r["extract_error"]))
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -209,20 +220,46 @@ class TestStreamingIngest:
 
 class TestExtractErrorHandling:
     def test_skip_quarantines_bad_blob(self, spark, tmp_path):
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.sources.pdf import (
-            extract_pages,
-        )
-
         rows = [
             ("good", b"page one\x0cpage two"),
             ("bad", b"%PDF-1.7 truncated garbage, not a real pdf"),
         ]
         df = spark.createDataFrame(rows, "name string, content binary")
-        out = {r["name"]: r for r in extract_pages(df).collect()}
-        assert out["good"]["extract_error"] is None
-        assert len(out["good"]["pages"]) == 2
-        assert "ValueError" in out["bad"]["extract_error"]
-        assert out["bad"]["pages"] == []
+        out = _pages_by_name(extract_pages(df))
+        assert out["good"] == [(1, "page one", None), (2, "page two", None)]
+        ((page, text, error),) = out["bad"]  # one null-page row
+        assert (page, text) == (None, None)
+        assert "ValueError" in error
+
+
+class TestExtractPagesRows:
+    """The decoder emits one row per page, as the reference's page loop
+    does (Function.java:92-134)."""
+
+    def _extract(self, spark, rows):
+        df = spark.createDataFrame(rows, "name string, content binary")
+        return _pages_by_name(extract_pages(df))
+
+    def test_null_content_gives_one_null_row(self, spark):
+        out = self._extract(spark, [("none", None), ("one", b"text")])
+        assert out == {"none": [(None, None, None)], "one": [(1, "text", None)]}
+
+    def test_empty_text_gives_one_empty_page(self, spark):
+        assert self._extract(spark, [("empty", b"")]) == {"empty": [(1, "", None)]}
+
+    def test_two_page_blobs_give_rows_in_order(self, spark):
+        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.sources.pdfcodec import (
+            make_pdf,
+        )
+
+        out = self._extract(
+            spark,
+            [("ff", f"one{PAGE_SEP}two".encode()), ("pdf", make_pdf(["First.", "Second."]))],
+        )
+        assert out == {
+            "ff": [(1, "one", None), (2, "two", None)],
+            "pdf": [(1, "First.", None), (2, "Second.", None)],
+        }
 
 
 class TestIngestMetrics:
@@ -242,6 +279,12 @@ class TestIngestMetrics:
 
 
 class TestEmbedQuarantine:
+    @pytest.fixture(autouse=True)
+    def no_backoff(self, monkeypatch):
+        """No sleep between an endpoint's tries; make_embedder reads it
+        when it builds the UDF, so the workers get it too."""
+        monkeypatch.setattr(embed_module, "BACKOFF_S", 0.0)
+
     def test_failed_embeds_become_failed_status(self, spark, pdf_dir):
         """Fault injection (SURVEY §5.4): an embed endpoint that rejects
         texts mentioning 'vectors' quarantines those chunks as null
@@ -257,7 +300,7 @@ class TestEmbedQuarantine:
         # quarantine granularity is the Arrow batch: the poisoned chunk
         # fails, co-batched rows fail with it, other batches are clean
         pages = pages.repartition(pages.count())
-        corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky, backoff_s=0)
+        corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky)
         failed = status.filter(F.col("status") == "FAILED_DB_INSERTION").collect()
         failed_keys = {(r["fileName"], r["pageNumber"]) for r in failed}
         assert ("a.pdf", 2) in failed_keys                 # the poisoned chunk
@@ -276,7 +319,7 @@ class TestEmbedQuarantine:
             return [hash_embed_text(t, 16) for t in texts]
 
         pages = pdf_source(spark, pdf_dir).repartition(8)
-        corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky, backoff_s=0)
+        corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky)
         current = {r["id"]: r["status"] for r in status_upsert(status).collect()}
         failed_ids = _chunk_ids(pages_to_chunks(pages)) - _chunk_ids(corpus)
         assert failed_ids, "fault injection produced no quarantined chunk"
@@ -298,7 +341,7 @@ class TestEmbedQuarantine:
             return [hash_embed_text(t, 16) for t in texts]
 
         pages = pdf_source(spark, pdf_dir).repartition(8)
-        corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky, backoff_s=0)
+        corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky)
         failed_ids = _chunk_ids(pages_to_chunks(pages)) - _chunk_ids(corpus)
         assert failed_ids, "fault injection produced no quarantined chunk"
         history = {}
@@ -332,7 +375,7 @@ class TestEmbedQuarantine:
 
         pages = pdf_source(spark, pdf_dir).repartition(8)
         chunks = pages_to_chunks(pages)
-        corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky, backoff_s=0)
+        corpus, status = ingest_pages(pages, dim=16, embed_fn=flaky)
         stored, events = _write_both(corpus, status, tmp_path)
         stored_ids = _chunk_ids(stored)
         poisoned = _chunk_ids(chunks.filter(F.col("origntext").contains("vectors")))
@@ -421,6 +464,33 @@ class TestIngestOnce:
         q = hash_embed_text("Single page document.", 16)
         hit = knn(stored, q, k=1, id_col="id", payload_cols=["fileName"]).first()
         assert hit["fileName"] == "b.pdf"
+
+    def test_non_finite_vectors_stay_out(self, spark, pdf_dir, tmp_path):
+        """pgvector refuses a vector with a NaN, infinite or null
+        component on insert: such a chunk is not stored, and its trail
+        ends FAILED_DB_INSERTION."""
+        poison = {"spark": float("nan"), "vectors": float("inf"), "Single": None}
+
+        def poisoned(texts):
+            out = []
+            for t in texts:
+                v = hash_embed_text(t, 16)
+                v[3] = next((x for word, x in poison.items() if word in t), v[3])
+                out.append(v)
+            return out
+
+        pages = pdf_source(spark, pdf_dir)
+        corpus, status = ingest_pages(pages, dim=16, embed_fn=poisoned)
+        stored, events = _write_both(corpus, status, tmp_path)
+        chunks = pages_to_chunks(pages).collect()
+        bad = {r["id"] for r in chunks if any(word in r["origntext"] for word in poison)}
+        assert len(bad) == 3
+        assert _chunk_ids(stored) == {r["id"] for r in chunks} - bad
+        history = {}
+        for r in events.collect():
+            history.setdefault(r["id"], set()).add(r["status"])
+        for i in bad:
+            assert history[i] == {"PAGE_SEPARATE_FINISHED", "FAILED_DB_INSERTION"}
 
     def test_ingest_leaves_no_cache_entry(self, spark, pdf_dir, tmp_path):
         cache = spark._jsparkSession.sharedState().cacheManager()

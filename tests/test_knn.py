@@ -51,11 +51,20 @@ def test_knn_dataframe_query(spark, emb):
     assert [r["vec_id"] for r in got] == [i for i, _ in expect]
 
 
-def test_knn_includes_self_at_distance_zero(spark, emb):
-    df, ids, mat = emb
-    got = knn(df, mat[ids == 7][0].tolist(), k=1, payload_cols=["vec_id"]).first()
-    assert got["vec_id"] == 7
-    assert got["distance"] == 0.0
+def test_knn_includes_self_at_distance_zero(spark):
+    # At dim 1536 the expanded form |c|² - 2c·q + |q|² leaves most stored
+    # copies of a unit query ~1e-8 from it; pgvector's direct sum gives 0.
+    rng = np.random.default_rng(13)
+    mat = rng.standard_normal((300, 1536))
+    mat = (mat / np.linalg.norm(mat, axis=1)[:, None]).astype(np.float32).tolist()
+    df = spark.createDataFrame(list(enumerate(mat)), "vec_id long, embedding array<float>")
+    queries = spark.createDataFrame(list(enumerate(mat)), "query_id long, query_vec array<double>")
+    hits = knn_join(df, queries, k=1, payload_cols=["vec_id"]).collect()
+    assert sorted((r["query_id"], r["vec_id"], r["distance"]) for r in hits) == [
+        (i, i, 0.0) for i in range(len(mat))
+    ]
+    got = knn(df, mat[0], k=1, payload_cols=["vec_id"]).first()
+    assert (got["vec_id"], got["distance"]) == (0, 0.0)
 
 
 # Values a folded JSON literal could get wrong: NaN, infinities, the

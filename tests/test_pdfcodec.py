@@ -91,11 +91,15 @@ class TestUnsupportedFeatureGates:
         (tmp_path / "good.pdf").write_bytes(good)
         (tmp_path / "bad.pdf").write_bytes(bad)
         rows = extract_pages(read_binary_docs(spark, str(tmp_path))).collect()
-        by_name = {r["path"].rsplit("/", 1)[-1]: r for r in rows}
-        assert by_name["good.pdf"]["extract_error"] is None
-        assert [p["text"] for p in by_name["good.pdf"]["pages"]] == ["clean page"]
-        assert "Type0" in by_name["bad.pdf"]["extract_error"]
-        assert by_name["bad.pdf"]["pages"] == []
+        by_name = {}
+        for r in rows:
+            by_name.setdefault(r["path"].rsplit("/", 1)[-1], []).append(r)
+        (good,) = by_name["good.pdf"]
+        assert good["extract_error"] is None
+        assert (good["pageNumber"], good["text"]) == (1, "clean page")
+        (bad,) = by_name["bad.pdf"]  # one null-page row
+        assert "Type0" in bad["extract_error"]
+        assert (bad["pageNumber"], bad["text"]) == (None, None)
 
 
 class TestRoundTripUnchanged:
