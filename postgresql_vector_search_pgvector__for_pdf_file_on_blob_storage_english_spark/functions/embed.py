@@ -26,8 +26,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import keep_launch_archives
-
 DEFAULT_DIM = 64  # fixture dimensionality; the reference uses 1536 (config)
 ATTEMPTS = 3  # tries per embedding call (Function.java:48)
 BACKOFF_S = 10.0  # sleep between an endpoint's tries (Function.java:263-270)
@@ -88,7 +86,6 @@ def make_embedder(
 
     @F.pandas_udf(T.ArrayType(T.FloatType()))
     def embed_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        keep_launch_archives()
         for s in it:
             yield pd.Series(_embed_batch(s.fillna("").tolist()))
 

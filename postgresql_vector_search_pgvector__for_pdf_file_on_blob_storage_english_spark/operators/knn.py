@@ -71,7 +71,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.vector import DISTANCE_FNS
-from ..session import keep_launch_archives
 
 
 def _query_col(query_vec: Sequence[float] | Column) -> Column:
@@ -412,7 +411,6 @@ def _scored(
         return rows(payload, ri, qi, dist[ri, qi])
 
     def candidates(blocks: Iterator) -> Iterator:
-        keep_launch_archives()
         for block in blocks:
             if len(block[1]):
                 yield from score(block).to_batches()

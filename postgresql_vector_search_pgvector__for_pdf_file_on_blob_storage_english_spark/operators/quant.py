@@ -162,6 +162,10 @@ def _approx_then_exact_join(
     3. exact rerank: candidates BROADCAST back onto the corpus (map-side
        join, corpus never shuffles), full-precision L2, final per-query
        top-k with the (distance, id) tiebreak.
+
+    ``query_id`` keys both windows and the query re-attach, so a
+    repeated id raises, as in ``knn_join``, rather than merging two
+    queries: the re-attached query relation counts its rows per id.
     """
     narrow = scored.select(query_id_col, id_col, coarse_col)
     coarse_w = Window.partitionBy(query_id_col).orderBy(
@@ -172,8 +176,17 @@ def _approx_then_exact_join(
         .filter(F.col("crank") <= k * oversample)
         .select(query_id_col, id_col)
     )
+    per_id = queries.groupBy(query_id_col).agg(F.count(F.lit(1)).alias("_n"))
+    repeated = F.raise_error(
+        F.format_string(f"query ids must be unique: {query_id_col} %s repeats", F.col(query_id_col))
+    )
+    checked = (
+        queries.join(F.broadcast(per_id), query_id_col)
+        .withColumn(query_vec_col, F.when(F.col("_n") > 1, repeated).otherwise(F.col(query_vec_col)))
+        .drop("_n")
+    )
     cand = corpus.join(F.broadcast(pool), id_col).join(
-        F.broadcast(queries), query_id_col
+        F.broadcast(checked), query_id_col
     )
     exact = cand.withColumn(
         distance_col,

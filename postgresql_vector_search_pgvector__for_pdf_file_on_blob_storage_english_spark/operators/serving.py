@@ -22,8 +22,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import keep_launch_archives
-
 # Q5 — SSEOpenAIController.java:151-155 (exact template; note the space
 # between the closing triple-quote and the newlines, '""" \n\n' at :153)
 PROMPT_TEMPLATE_PREFIX = '""" '
@@ -71,7 +69,6 @@ def llm_extract(
 
     @F.pandas_udf(T.StringType())
     def run(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        keep_launch_archives()
         for s in it:
             yield pd.Series(llm_fn(s.fillna("").tolist()))
 

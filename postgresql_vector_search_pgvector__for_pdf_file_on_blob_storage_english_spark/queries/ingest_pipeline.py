@@ -13,35 +13,45 @@ from ._base import (  # noqa: F401
     knn,
 )
 # Ingestion pipeline slices (sources/pdf.py + operators/ingest.py), each
-# oracle-checked.  The "files" are synthesized deterministically from
-# `documents` on both sides: one file per `source`, pages = that source's
-# docs in doc_id order, joined with \f (the binary test page format) —
+# oracle-checked.  The files are synthesized deterministically from
+# `documents` on both sides: one real PDF per `source` (the byte-stable
+# writer pdfcodec.make_pdf), pages = that source's docs in doc_id order,
 # so the real binary->pages->chunks->embed plumbing runs under the gate.
 # ==========================================================================
 
 from ..functions.embed import hash_embed_text  # noqa: E402
 from ..operators.ingest import ingest_pages, pages_to_chunks  # noqa: E402
-from ..sources.pdf import PAGE_SEP, extract_pages  # noqa: E402
+from ..sources.pdf import extract_pages  # noqa: E402
+from ..sources.pdfcodec import make_pdf  # noqa: E402
 
 _EMBED_DIM = 64
 
 
-def _synth_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(fileName, content binary) — one 'pdf' per documents.source."""
+def _synth_real_pdf_files(spark: SparkSession, sf_dir: str, compress: bool = True) -> DataFrame:
+    """(fileName, content binary) — one ``%PDF`` file per
+    ``documents.source``, built with :func:`..sources.pdfcodec.make_pdf`;
+    pages = that source's docs in doc_id order.  ``compress`` picks the
+    content streams' encoding (FlateDecode or none), the codec's two
+    stream branches."""
     docs = _t(spark, sf_dir, "documents")
     files = docs.groupBy("source").agg(
         F.array_sort(F.collect_list(F.struct("doc_id", "text"))).alias("_ps")
     )
-    payload = F.array_join(F.transform("_ps", lambda s: s["text"]), PAGE_SEP)
+    _mk_pdf = F.pandas_udf(
+        lambda pages: pages.map(lambda ps: make_pdf(list(ps), compress=compress)), "binary"
+    )
+
     return files.select(
-        F.col("source").alias("fileName"), F.encode(payload, "UTF-8").alias("content")
+        F.col("source").alias("fileName"),
+        _mk_pdf(F.transform("_ps", lambda s: s["text"])).alias("content"),
     )
 
 
-def _synth_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Run the real page-extraction table function over the synthesized
-    binaries."""
-    paged = extract_pages(_synth_binary_files(spark, sf_dir))
+def _synth_pages(spark: SparkSession, sf_dir: str, compress: bool = True) -> DataFrame:
+    """P1 under the oracle gate: encode documents into real PDFs and
+    decode them through ``extract_pages`` (``pdfcodec.extract_text_pdf``:
+    xref loading, page-tree walk, the text-operator interpreter)."""
+    paged = extract_pages(_synth_real_pdf_files(spark, sf_dir, compress))
     return paged.select("fileName", "pageNumber", "text")
 
 
@@ -53,43 +63,12 @@ FROM documents
 """
 
 
-_register("pipeline_pages_from_binary", _synth_pages, _DD_PAGES)
-
-
-def _synth_real_pdf_files(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(fileName, content binary) — one REAL ``%PDF`` file per
-    ``documents.source``, built with the deterministic writer
-    (:func:`..sources.pdfcodec.make_pdf`); pages = that source's docs in
-    doc_id order.  Unlike :func:`_synth_binary_files` (the ``\\f`` page
-    format), decoding these exercises the full PDF codec: xref loading,
-    FlateDecode, page-tree walk, and the text-operator interpreter."""
-    from ..sources.pdfcodec import make_pdf  # noqa: PLC0415
-
-    docs = _t(spark, sf_dir, "documents")
-    files = docs.groupBy("source").agg(
-        F.array_sort(F.collect_list(F.struct("doc_id", "text"))).alias("_ps")
-    )
-    _mk_pdf = F.pandas_udf(
-        lambda pages: pages.map(lambda ps: make_pdf(list(ps))), "binary"
-    )
-
-    return files.select(
-        F.col("source").alias("fileName"),
-        _mk_pdf(F.transform("_ps", lambda s: s["text"])).alias("content"),
-    )
-
-
-def _pipeline_pages_real_pdf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ``%PDF`` branch of P1 under the oracle gate (VERDICT r2 item 1):
-    encode documents into real PDFs, decode through ``extract_pages`` —
-    whose ``%PDF`` magic dispatch runs ``pdfcodec.extract_text_pdf``
-    (Function.java:92-134's front door) — and hash-match the per-page text
-    against the same documents-derived SQL as the ``\\f`` twin."""
-    paged = extract_pages(_synth_real_pdf_files(spark, sf_dir))
-    return paged.select("fileName", "pageNumber", "text")
-
-
-_register("pipeline_pages_from_real_pdf", _pipeline_pages_real_pdf, _DD_PAGES)
+_register(
+    "pipeline_pages_from_binary",
+    lambda spark, sf_dir: _synth_pages(spark, sf_dir, compress=False),
+    _DD_PAGES,
+)
+_register("pipeline_pages_from_real_pdf", _synth_pages, _DD_PAGES)
 
 
 def _pipeline_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -6,7 +6,8 @@ multi-executor cluster: Arrow on (pandas-UDF hot path), shuffle
 partitions sized to the local core count rather than the 200 default.
 AQE (runtime re-plan, skew-join handling, partition coalescing) is on
 by Spark's own defaults.  :func:`keep_launch_archives` is the Python
-workers' half: the paper path's UDF bodies call it.
+workers' half: this module is the session's Python daemon, which
+applies it once and then forks every worker.
 """
 
 from __future__ import annotations
@@ -21,7 +22,8 @@ def get_spark() -> SparkSession:
 
     At cluster scale the master/memory settings come from spark-submit;
     everything set here is safe to keep: Arrow, UTC, shuffle partition
-    sizing.
+    sizing, and this module as the Python daemon (the workers must import
+    the package, as the engine's UDFs need anyway).
     """
     cpus = len(os.sched_getaffinity(0))
     builder = (
@@ -32,18 +34,16 @@ def get_spark() -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", __name__)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
 
-_archives_kept = False
-
-
 def keep_launch_archives() -> None:
-    """Stop this Python worker re-reading the archives it was launched
-    with, once per worker process.
+    """Stop this process's Python workers re-reading the archives they
+    were launched with.
 
     Before each task, ``pyspark.worker_util.setup_spark_files`` calls
     ``importlib.invalidate_caches()``, and under CPython 3.11 every
@@ -55,11 +55,9 @@ def keep_launch_archives() -> None:
     zip importer of one of them keeps its directory.  Every other
     finder is still invalidated, so ``.py`` and ``.zip`` files added
     with ``addPyFile`` (copied into the SparkFiles root, not the launch
-    path) still import.
+    path) still import.  The daemon below calls it before it forks a
+    worker, so every task runs with it, the first included.
     """
-    global _archives_kept
-    if _archives_kept:
-        return
     import zipimport
 
     launch = frozenset(p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if os.path.isfile(p))
@@ -70,4 +68,10 @@ def keep_launch_archives() -> None:
             reread(self)
 
     zipimport.zipimporter.invalidate_caches = invalidate_caches
-    _archives_kept = True
+
+
+if __name__ == "__main__":  # spark.python.daemon.module: workers fork from here
+    keep_launch_archives()
+    from pyspark.daemon import manager
+
+    manager()

@@ -15,12 +15,14 @@ Reference surface (SURVEY.md §2.1/S1-S2, §2.2/P1):
   as the page loop emits them; it runs as an Arrow-batched
   ``mapInPandas``, so one Python worker handles a whole batch of files.
 
-Real ``%PDF`` bytes always decode with the vendored stdlib-only codec
+Every non-null blob decodes with the vendored stdlib-only codec
 (:mod:`.pdfcodec` — classic-xref + FlateDecode + text-operator subset,
 round-trip-tested against its own writer's goldens), whatever else is
 installed, so the page text the chunks re-join to never depends on the
-host.  The deterministic ``\\f``-separated text format is kept alongside
-as the bit-reproducible fixture path.
+host.  Like
+PDFBox's loader, it refuses bytes with no ``%PDF-`` header: an HTML
+error page, a truncated upload or an empty file named ``x.pdf`` is
+quarantined, not chunked.
 """
 
 from __future__ import annotations
@@ -31,10 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import keep_launch_archives
 from .pdfcodec import extract_text_pdf
-
-PAGE_SEP = "\f"
 
 # The binaryFile source's fixed schema; a streaming source must be given it.
 BINARY_FILE_SCHEMA = "path string, modificationTime timestamp, length long, content binary"
@@ -53,20 +52,6 @@ def read_binary_docs(spark: SparkSession, path: str, stream: bool = False) -> Da
     return reader.format("binaryFile").option("pathGlobFilter", "*.pdf").load(path)
 
 
-def extract_pages_bytes(content: bytes) -> list[tuple[int, str]]:
-    """Pure-Python page extraction (unit-test twin of the UDF).
-
-    ``%PDF`` magic -> the vendored :mod:`.pdfcodec` reader, the stdlib
-    stand-in for PDFBox's page-by-page ``PDFTextStripper`` loop
-    (Function.java:99-118).  Anything else -> UTF-8 text split on
-    form-feed page separators.
-    """
-    if content[:5] == b"%PDF-":
-        return extract_text_pdf(content)
-    text = content.decode("utf-8", errors="replace")
-    return [(i + 1, page) for i, page in enumerate(text.split(PAGE_SEP))]
-
-
 def extract_pages(df: DataFrame) -> DataFrame:
     """P1 as an Arrow-batched table function over the binary scan's
     ``content`` column: one row per page, in page order, carrying the
@@ -79,12 +64,15 @@ def extract_pages(df: DataFrame) -> DataFrame:
     is dropped from the output — page text, not raw blobs, crosses the
     next shuffle.
 
-    A blob that does not decode is quarantined: it gives one row with a
-    null page and the decode error's message in ``extract_error``, so
-    one malformed blob among millions does not kill the ingest.  A null
-    blob, or a document with no page, gives a null-page row with a null
-    error.  A null page gets no chunk and so no chunk trail, as in the
-    reference, whose trail starts at PAGE_SEPARATE_FINISHED.
+    Each blob decodes with :func:`.pdfcodec.extract_text_pdf`, the
+    stdlib stand-in for PDFBox's page loop (Function.java:99-118).  A
+    null blob gives a null-page row with a null error; anything else
+    that does not decode (no ``%PDF-`` header, an empty blob, a broken
+    or page-less document) carries its error: one row with a null page
+    and the message in ``extract_error``, so one malformed blob among
+    millions does not kill the ingest.  A null page gets no chunk and so
+    no chunk trail, as in the reference, whose trail starts at
+    PAGE_SEPARATE_FINISHED.
     """
     import pandas as pd
 
@@ -99,12 +87,11 @@ def extract_pages(df: DataFrame) -> DataFrame:
     )
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        keep_launch_archives()
         for pdf in batches:
             rows = []  # (input row, pageNumber, text, extract_error) per page
             for i, b in enumerate(pdf["content"]):
                 try:
-                    found, error = (extract_pages_bytes(b) if b is not None else []), None
+                    found, error = (extract_text_pdf(b) if b is not None else []), None
                 except Exception as e:  # noqa: BLE001 — quarantine contract
                     found, error = [], f"{type(e).__name__}: {e}"
                 rows += [(i, n, t, error) for n, t in found or [(None, None)]]
@@ -120,8 +107,8 @@ def pdf_source(spark: SparkSession, path: str, stream: bool = False) -> DataFram
     ``path``, ``(fileName, pageNumber, text)``.
 
     ``fileName`` is the file's base name (the reference's blob name).  A
-    file that does not decode is quarantined by :func:`extract_pages`:
-    like an empty document it gives one row with a null page and no
+    file that does not decode as a PDF is quarantined by
+    :func:`extract_pages`: it gives one row with a null page and no
     chunks, and the other files' pages still flow, so one bad upload
     neither fails a batch ingest nor stalls a stream that would replay
     the same failing micro-batch.

@@ -25,16 +25,20 @@ from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spa
     status_upsert,
 )
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.sources.pdf import (
-    PAGE_SEP,
     extract_pages,
-    extract_pages_bytes,
     pdf_source,
+    read_binary_docs,
+)
+from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.sources.pdfcodec import (
+    extract_text_pdf,
+    make_pdf,
 )
 from pyspark.sql import functions as F
 
-DOC_A = f"First page about spark.{PAGE_SEP}Second page about vectors."
-DOC_B = "Single page document."
+DOC_A = ["First page about spark.", "Second page about vectors."]
+DOC_B = ["Single page document."]
 LONG_PAGE = ("word " * 2000).strip() + "."  # ~10k chars -> 2 chunks
+NOT_A_PDF = "ValueError: not a PDF: missing %PDF- header"
 
 
 def _chunk_ids(df) -> set[str]:
@@ -58,27 +62,30 @@ def _pages_by_name(paged) -> dict[str, list[tuple]]:
 @pytest.fixture(scope="module")
 def pdf_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("pdfs")
-    (d / "a.pdf").write_text(DOC_A)
-    (d / "b.pdf").write_text(DOC_B)
-    (d / "long.pdf").write_text(LONG_PAGE)
+    (d / "a.pdf").write_bytes(make_pdf(DOC_A))
+    (d / "b.pdf").write_bytes(make_pdf(DOC_B))
+    (d / "long.pdf").write_bytes(make_pdf([LONG_PAGE]))
     (d / "ignored.txt").write_text("not a pdf")
     return str(d)
 
 
 class TestExtractPagesBytes:
-    def test_formfeed_format(self):
-        pages = extract_pages_bytes(DOC_A.encode())
-        assert pages == [(1, "First page about spark."), (2, "Second page about vectors.")]
+    """One blob's bytes to pages: ``pdfcodec.extract_text_pdf``, which
+    ``extract_pages`` runs on every non-null blob."""
+
+    def test_non_pdf_bytes_raise(self):
+        # like PDFBox's loader, the codec refuses bytes with no header
+        # (form-feed separated text included); extract_pages quarantines
+        # them
+        for blob in (b"one\x0ctwo", b"hello", b"", b"<html><body>502 Bad Gateway</body></html>"):
+            with pytest.raises(ValueError, match="missing %PDF- header"):
+                extract_text_pdf(blob)
 
     def test_single_page(self):
-        assert extract_pages_bytes(b"hello") == [(1, "hello")]
+        assert extract_text_pdf(make_pdf(["hello"])) == [(1, "hello")]
 
     def test_real_pdf_decodes_via_vendored_codec(self):
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.sources.pdfcodec import (
-            make_pdf,
-        )
-
-        pages = extract_pages_bytes(make_pdf(["First real page.", "Second real page."]))
+        pages = extract_text_pdf(make_pdf(["First real page.", "Second real page."]))
         assert pages == [(1, "First real page."), (2, "Second real page.")]
 
     def test_installed_pypdf_is_not_used(self, monkeypatch):
@@ -87,24 +94,19 @@ class TestExtractPagesBytes:
         import sys
         import types
 
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.sources.pdfcodec import (
-            extract_text_pdf,
-            make_pdf,
-        )
-
         class PdfReader:
             def __init__(self, *args, **kwargs):
                 raise AssertionError("pypdf must not decode the ingest's PDFs")
 
         monkeypatch.setitem(sys.modules, "pypdf", types.SimpleNamespace(PdfReader=PdfReader))
         pdf = make_pdf(["First real page.", "Second real page."])
-        assert extract_pages_bytes(pdf) == extract_text_pdf(pdf)
+        assert extract_text_pdf(pdf) == [(1, "First real page."), (2, "Second real page.")]
 
     def test_malformed_pdf_raises(self):
         # %PDF magic but no object structure -> decode error (quarantined
         # by extract_pages)
         with pytest.raises(ValueError, match="catalog"):
-            extract_pages_bytes(b"%PDF-1.7 fake content")
+            extract_text_pdf(b"%PDF-1.7 fake content")
 
 
 class TestPdfSource:
@@ -136,6 +138,32 @@ class TestPdfSource:
         stored, _ = _write_both(corpus, status, tmp_path)
         assert {r["fileName"] for r in stored.select("fileName").collect()} == {"a.pdf", "b.pdf", "long.pdf"}
         assert _chunk_ids(stored) == _chunk_ids(pages_to_chunks(pdf_source(spark, pdf_dir)))
+
+    def test_non_pdf_blobs_are_quarantined(self, spark, tmp_path):
+        # an HTML error page and an empty upload named *.pdf are not
+        # PDFs, and neither store gets a row of them.  The HTML page
+        # gives one null-page row with the codec's error; Spark's file
+        # scan skips a zero-byte file, so the empty one gives no row at
+        # all (an empty blob's own quarantine is checked below, in
+        # TestExtractPagesRows)
+        inbox = tmp_path / "inbox"
+        inbox.mkdir()
+        (inbox / "good.pdf").write_bytes(make_pdf(DOC_A))
+        (inbox / "notes.pdf").write_bytes(b"<html><body>502 Bad Gateway</body></html>")
+        (inbox / "empty.pdf").write_bytes(b"")
+        rows = extract_pages(read_binary_docs(spark, str(inbox))).collect()
+        decoded = {}
+        for r in rows:
+            decoded.setdefault(os.path.basename(r["path"]), []).append((r["pageNumber"], r["extract_error"]))
+        assert decoded == {
+            "good.pdf": [(1, None), (2, None)],
+            "notes.pdf": [(None, NOT_A_PDF)],
+        }
+        corpus, status = ingest_pages(pdf_source(spark, str(inbox)), dim=16)
+        stored, events = _write_both(corpus, status, tmp_path)
+        assert {r["fileName"] for r in stored.select("fileName").collect()} == {"good.pdf"}
+        assert {r["fileName"] for r in events.select("fileName").collect()} == {"good.pdf"}
+        assert stored.count() == 2
 
 
 class TestBatchIngest:
@@ -221,7 +249,7 @@ class TestStreamingIngest:
 class TestExtractErrorHandling:
     def test_skip_quarantines_bad_blob(self, spark, tmp_path):
         rows = [
-            ("good", b"page one\x0cpage two"),
+            ("good", make_pdf(["page one", "page two"])),
             ("bad", b"%PDF-1.7 truncated garbage, not a real pdf"),
         ]
         df = spark.createDataFrame(rows, "name string, content binary")
@@ -241,24 +269,24 @@ class TestExtractPagesRows:
         return _pages_by_name(extract_pages(df))
 
     def test_null_content_gives_one_null_row(self, spark):
-        out = self._extract(spark, [("none", None), ("one", b"text")])
+        out = self._extract(spark, [("none", None), ("one", make_pdf(["text"]))])
         assert out == {"none": [(None, None, None)], "one": [(1, "text", None)]}
 
     def test_empty_text_gives_one_empty_page(self, spark):
-        assert self._extract(spark, [("empty", b"")]) == {"empty": [(1, "", None)]}
+        # a PDF whose one page has no text is a page; an empty blob is
+        # not a PDF
+        out = self._extract(spark, [("blank", make_pdf([""])), ("empty", b"")])
+        assert out == {"blank": [(1, "", None)], "empty": [(None, None, NOT_A_PDF)]}
 
     def test_two_page_blobs_give_rows_in_order(self, spark):
-        from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.sources.pdfcodec import (
-            make_pdf,
-        )
-
+        # both content-stream encodings: none and FlateDecode
         out = self._extract(
             spark,
-            [("ff", f"one{PAGE_SEP}two".encode()), ("pdf", make_pdf(["First.", "Second."]))],
+            [("plain", make_pdf(["one", "two"], compress=False)), ("flate", make_pdf(["First.", "Second."]))],
         )
         assert out == {
-            "ff": [(1, "one", None), (2, "two", None)],
-            "pdf": [(1, "First.", None), (2, "Second.", None)],
+            "plain": [(1, "one", None), (2, "two", None)],
+            "flate": [(1, "First.", None), (2, "Second.", None)],
         }
 
 

@@ -387,3 +387,26 @@ class TestQuantBatchVariants:
                 and "bwords" not in inputs
                 and "query_vec" not in inputs
             ), inputs
+
+
+@pytest.mark.parametrize("join", ["sq8", "hamming", "matryoshka"])
+def test_batch_repeated_query_id_raises(spark, join):
+    """Two queries that share a ``query_id`` would merge in the shared
+    tail's windows and re-attach: each quantized join raises, as
+    ``knn_join`` does."""
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.operators import quant
+
+    corpus = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0]), (2, [0.0, 0.0, 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+    queries = spark.createDataFrame(
+        [(7, [1.0, 0.0, 0.0]), (7, [0.0, 1.0, 0.0])], "query_id long, query_vec array<float>"
+    )
+    fn, extra = {
+        "sq8": (quant.sq8_knn_join, {}),
+        "hamming": (quant.hamming_knn_join, {"word_bits": 1}),
+        "matryoshka": (quant.matryoshka_knn_join, {"prefix_dim": 2}),
+    }[join]
+    with pytest.raises(Exception, match="query_id 7 repeats"):
+        fn(corpus, queries, k=1, **extra).collect()

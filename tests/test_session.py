@@ -1,84 +1,72 @@
-"""The engine's Python workers keep the archives they were launched with
-(``session.keep_launch_archives``), and still import what ``addPyFile``
-sends them."""
+"""Every Python worker of a ``get_spark`` session keeps the archives it
+was launched with (``session.keep_launch_archives``, applied by the
+session's Python daemon before it forks any worker), and still imports
+what ``addPyFile`` sends it."""
 
 from __future__ import annotations
 
 import json
+import os
+import subprocess
+import sys
 import uuid
 import zipfile
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.functions.embed import (
-    make_embedder,
-)
 
 # One-row tasks: idle workers are handed out first in, first out, so a
 # job with more tasks than workers reaches every idle worker.
 TASKS = 32
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _after_embedder(spark, probe) -> pd.Series:
-    """``probe`` chained after the engine's embedder in one pandas UDF:
-    per task, it runs in the same worker, once the embedder's body has
-    started.  Returns the probe's output, one value per task."""
-    df = spark.range(0, TASKS, 1, TASKS).select(F.lit("a b").alias("text"))
-    out = df.select(F.pandas_udf(probe, T.StringType())(make_embedder()(F.col("text"))).alias("out"))
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1, plan  # chained: one runner, one worker
-    return pd.Series([r["out"] for r in out.collect()])
-
-
-def test_next_task_does_not_reread_launch_archives(spark):
-    """After an engine UDF has run in a worker, the next task's
-    ``setup_spark_files`` leaves each launch archive's directory in
-    ``zipimport._zip_directory_cache`` as the same object: it was not
-    read again.  The probe runs the function pyspark runs before every
-    task, and counts its ``importlib.invalidate_caches()`` calls, so
-    the test fails if pyspark stops making that call and the hook has
+def setup_reports(spark, tasks: int) -> list[dict]:
+    """Run a plain ``mapInArrow`` of ``tasks`` one-row tasks.  Each task
+    runs again the function pyspark runs before every task,
+    ``setup_spark_files``, and reports how many
+    ``importlib.invalidate_caches()`` calls it made and, per launch
+    archive, whether ``zipimport._zip_directory_cache`` kept the same
+    directory object: it was not read again.  The count makes the
+    check fail if pyspark stops making that call and the hook has
     nothing left to do."""
 
-    def probe(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    def probe(batches):
         import importlib
         import io
-        import os
         import struct
         import zipimport
 
+        import pyarrow as pa
         from pyspark import SparkFiles
         from pyspark import worker_util
 
-        for s in it:  # the embedder's body has run
-            launch = [p for p in os.environ["PYTHONPATH"].split(os.pathsep) if os.path.isfile(p)]
-            before = {p: zipimport._zip_directory_cache.get(p) for p in launch}
-            calls = []
-            invalidate = importlib.invalidate_caches
+        for _ in batches:
+            pass
+        launch = [p for p in os.environ["PYTHONPATH"].split(os.pathsep) if os.path.isfile(p)]
+        before = {p: zipimport._zip_directory_cache.get(p) for p in launch}
+        calls = []
+        invalidate = importlib.invalidate_caches
 
-            def counted():
-                calls.append(1)
-                invalidate()
+        def counted():
+            calls.append(1)
+            invalidate()
 
-            importlib.invalidate_caches = counted
-            try:  # the next task's setup: the same root, no new includes
-                root = SparkFiles.getRootDirectory().encode()
-                worker_util.setup_spark_files(
-                    io.BytesIO(struct.pack(">i", len(root)) + root + struct.pack(">i", 0))
-                )
-            finally:
-                importlib.invalidate_caches = invalidate
-            kept = {
-                os.path.basename(p): before[p] is not None
-                and zipimport._zip_directory_cache.get(p) is before[p]
-                for p in launch
-            }
-            yield pd.Series([json.dumps({"calls": len(calls), "kept": kept})] * len(s))
+        importlib.invalidate_caches = counted
+        try:  # the next task's setup: the same root, no new includes
+            root = SparkFiles.getRootDirectory().encode()
+            worker_util.setup_spark_files(io.BytesIO(struct.pack(">i", len(root)) + root + struct.pack(">i", 0)))
+        finally:
+            importlib.invalidate_caches = invalidate
+        kept = {
+            os.path.basename(p): before[p] is not None and zipimport._zip_directory_cache.get(p) is before[p]
+            for p in launch
+        }
+        yield pa.RecordBatch.from_pylist([{"report": json.dumps({"calls": len(calls), "kept": kept})}])
 
-    reports = [json.loads(r) for r in _after_embedder(spark, probe)]
-    assert len(reports) == TASKS
+    rows = spark.range(0, tasks, 1, tasks).mapInArrow(probe, "report string").collect()
+    return [json.loads(r["report"]) for r in rows]
+
+
+def _assert_kept(reports: list[dict], tasks: int) -> None:
+    assert len(reports) == tasks
     for report in reports:
         assert report["calls"] == 1, report
         names = set(report["kept"])
@@ -86,17 +74,39 @@ def test_next_task_does_not_reread_launch_archives(spark):
         assert all(report["kept"].values()), report
 
 
+def test_next_task_does_not_reread_launch_archives(spark):
+    """In every worker, a task's ``setup_spark_files`` leaves each
+    launch archive's directory in place, whatever UDF ran there."""
+    _assert_kept(setup_reports(spark, TASKS), TASKS)
+
+
+def test_first_task_keeps_launch_archives():
+    """The first task of a fresh session, a plain ``mapInArrow`` that
+    calls no engine code, already runs in a worker that keeps the
+    launch archives: the session's daemon applied the hook before it
+    forked the worker.  A fresh process, so no earlier task has run."""
+    script = (
+        "import json, sys\n"
+        f"sys.path[:0] = [{ROOT!r}, {os.path.dirname(os.path.abspath(__file__))!r}]\n"
+        "from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.session import get_spark\n"
+        "from test_session import setup_reports\n"
+        "spark = get_spark()\n"
+        "print(json.dumps(setup_reports(spark, 1)))\n"
+        "spark.stop()\n"
+    )
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=ROOT, env=env, capture_output=True, text=True, timeout=300
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    _assert_kept(json.loads(proc.stdout.strip().splitlines()[-1]), 1)
+
+
 def test_added_py_files_import_in_a_kept_worker(spark, tmp_path):
-    """A ``.py`` file and a ``.zip`` module sent with ``addPyFile`` after
-    the workers ran an engine UDF still import there: the hook leaves
-    the SparkFiles root's finder and new archives' importers alone."""
+    """A ``.py`` file and a ``.zip`` module sent with ``addPyFile`` still
+    import in the session's workers: the hook leaves the SparkFiles
+    root's finder and new archives' importers alone."""
     import pyarrow as pa
-
-    def passthrough(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in it:
-            yield pd.Series(["ran"] * len(s))
-
-    assert set(_after_embedder(spark, passthrough)) == {"ran"}
 
     tag = uuid.uuid4().hex[:8]
     py_mod, zip_mod = f"added_py_{tag}", f"added_zip_{tag}"
@@ -121,4 +131,4 @@ def test_added_py_files_import_in_a_kept_worker(spark, tmp_path):
     rows = spark.range(0, TASKS, 1, TASKS).mapInArrow(imports, "kept boolean, fresh boolean, values string")
     got = rows.collect()
     assert {r["values"] for r in got} == {"py,zip"}
-    assert any(r["kept"] and r["fresh"] for r in got), got
+    assert all(r["kept"] for r in got) and any(r["fresh"] for r in got), got
