@@ -132,9 +132,9 @@ def split_chunks_col(norm: Column) -> Column:
     )
 
 
-def chunk_exploded(df, text_col: str = "text", out_prefix: str = "chunk"):
-    """normalize -> split -> posexplode to (chunk_index, chunk_text)
-    rows.
+def chunk_exploded(df, text_col: str = "text"):
+    """normalize -> split -> posexplode: ``df``'s columns plus
+    ``(chunk_index, chunk_text)``, one row per chunk.
 
     r14: fully native (no Python eval node) — normalization and the
     chunk array are staged as real columns (bare attributes) so each
@@ -154,11 +154,8 @@ def chunk_exploded(df, text_col: str = "text", out_prefix: str = "chunk"):
     # positions and are dropped by one cheap post-Generate filter on
     # the OUTPUT attribute (None -> [] -> no rows).
     return staged.select(
-        *cols,
-        F.posexplode_outer("_cchunks").alias(
-            f"{out_prefix}_index", f"{out_prefix}_text"
-        ),
-    ).filter(F.col(f"{out_prefix}_index").isNotNull())
+        *cols, F.posexplode_outer("_cchunks").alias("chunk_index", "chunk_text")
+    ).filter(F.col("chunk_index").isNotNull())
 
 
 def sliding_chunks_col(text_col, size: int = 400, overlap: int = 100):

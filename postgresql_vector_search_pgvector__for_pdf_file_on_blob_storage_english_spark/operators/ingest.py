@@ -41,8 +41,9 @@ CORPUS_COLS = ["id", "embedding", "origntext", "fileName", "pageNumber", "chunk_
 
 
 def pages_to_chunks(pages: DataFrame) -> DataFrame:
-    """(fileName, pageNumber, text) -> one row per chunk with its
-    deterministic id (P2 + P3 + P6).
+    """(fileName, pageNumber, text) -> ``(id, origntext, fileName,
+    pageNumber, chunk_index)``, one row per chunk, in one projection
+    over :func:`..functions.text.chunk_exploded` (P2 + P3 + P6).
 
     The reference draws a random UUID per chunk (Function.java:139);
     identity here is content-addressed — sha2(fileName § pageNumber §
@@ -51,17 +52,9 @@ def pages_to_chunks(pages: DataFrame) -> DataFrame:
     # Fully native chunking (functions/text.py::chunk_exploded): the page
     # text does not cross the Python boundary to find cut points, so the
     # corpus text crosses JVM<->Python once, into the embedder.
-    chunked = chunk_exploded(
-        pages.select("fileName", "pageNumber", "text"), "text", "c"
-    ).select(
-        "fileName",
-        "pageNumber",
-        F.col("c_index").alias("chunk_index"),
-        F.col("c_text").alias("origntext"),
-    )
-    return chunked.select(
+    return chunk_exploded(pages.select("fileName", "pageNumber", "text")).select(
         chunk_id("fileName", "pageNumber", "chunk_index").alias("id"),
-        "origntext",
+        F.col("chunk_text").alias("origntext"),
         "fileName",
         "pageNumber",
         "chunk_index",

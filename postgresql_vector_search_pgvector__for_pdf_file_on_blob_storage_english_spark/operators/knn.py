@@ -56,8 +56,12 @@ The blocks come from one of two sources:
   ``mapInArrow``.
 
 The fold of ``functions/vector.py`` (interpreted per row in the scan)
-scores only what the registry alone sends :func:`knn`: a Column or
+scores only what the registry alone sends :func:`knn`: a one-row
 DataFrame query, or a metric other than ``l2``.
+
+The names are the reference's and fixed: a result's distance is
+``distance``; :func:`knn_join` reads its queries from ``query_id`` and
+``query_vec`` and ranks them in ``rank``.
 """
 
 from __future__ import annotations
@@ -73,9 +77,7 @@ from pyspark.sql import types as T
 from ..functions.vector import DISTANCE_FNS
 
 
-def _query_col(query_vec: Sequence[float] | Column) -> Column:
-    if isinstance(query_vec, Column):
-        return query_vec
+def _query_col(query_vec: Sequence[float]) -> Column:
     # json.dumps writes each float's shortest round-trip repr (and NaN /
     # Infinity, which Spark's JSON reader accepts), so the folded literal
     # holds exactly these doubles.
@@ -93,49 +95,46 @@ def _dims_checked(size: Column, dim: Column, value: Column) -> Column:
 
 def knn(
     corpus: DataFrame,
-    query_vec: Sequence[float] | Column | DataFrame,
+    query_vec: Sequence[float] | DataFrame,
     k: int = 5,
     metric: str = "l2",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     payload_cols: Sequence[str] | None = None,
-    distance_col: str = "distance",
 ) -> DataFrame:
-    """Exact top-k nearest neighbors of one query vector.
+    """Exact top-k nearest neighbors of one query vector: the
+    ``payload_cols`` (all but ``vec_col`` by default) and ``distance``,
+    ordered ``(distance, id_col)``.
 
     An L2 query given as a Python sequence is scored by :func:`_scored`,
-    as in :func:`knn_join`.  ``query_vec`` may also be a Column, or a
-    1-row DataFrame whose single column is the vector (joined via
-    broadcast); these, and the other metrics, take the fold.
+    as in :func:`knn_join`.  ``query_vec`` may also be a 1-row DataFrame
+    whose single column is the vector (joined via broadcast); it, and
+    the other metrics, take the fold.
     """
     asked = [c for c in corpus.columns if c != vec_col] if payload_cols is None else list(payload_cols)
-    if metric == "l2" and not isinstance(query_vec, (Column, DataFrame)):
+    if metric == "l2" and not isinstance(query_vec, DataFrame):
         import pyarrow as pa
 
         vec = pa.array([[float(v) for v in query_vec]], pa.list_(pa.float64()))
         qid = T.StructField("_query", T.LongType())
         qtable = pa.table({qid.name: [0], "_vec": vec})
-        scored = _scored(corpus, qtable, qid, k, vec_col, id_col, asked, distance_col)
+        scored = _scored(corpus, qtable, qid, k, vec_col, id_col, asked)
     else:
-        # The fold: only the registry reaches it (Column and DataFrame
-        # queries, the cosine / dot / l2sq metrics); ROADMAP item 5
-        # deletes it with them.
+        # The fold: only the registry reaches it (DataFrame queries, the
+        # cosine / dot / l2sq metrics); ROADMAP item 5 deletes it with them.
         dist_fn = DISTANCE_FNS[metric]
         vec = F.col(vec_col)
         if isinstance(query_vec, DataFrame):
-            qname = query_vec.columns[0]
-            query = F.col(qname)
-            scored = corpus.crossJoin(F.broadcast(query_vec)).withColumn(
-                distance_col, _dims_checked(F.size(vec), F.size(query), dist_fn(vec, query))
-            ).drop(qname)
+            query = F.col(query_vec.columns[0])
+            corpus = corpus.crossJoin(F.broadcast(query_vec))
         else:
             query = _query_col(query_vec)
-            scored = corpus.withColumn(
-                distance_col, _dims_checked(F.size(vec), F.size(query), dist_fn(vec, query))
-            )
-    cols = asked if distance_col in asked else [*asked, distance_col]
+        scored = corpus.withColumn(
+            "distance", _dims_checked(F.size(vec), F.size(query), dist_fn(vec, query))
+        )
+    cols = asked if "distance" in asked else [*asked, "distance"]
     # TakeOrderedAndProject: per-task heap, k rows to the driver.
-    return scored.select(*cols).orderBy(F.col(distance_col).asc_nulls_last(), id_col).limit(k)
+    return scored.select(*cols).orderBy(F.col("distance").asc_nulls_last(), id_col).limit(k)
 
 
 # Bounded-query-batch contract.  knn_join and the batched graph walk
@@ -323,7 +322,6 @@ def _scored(
     vec_col: str,
     id_col: str,
     asked: Sequence[str],
-    distance_col: str,
 ) -> DataFrame:
     """The checked candidates of each query of ``qtable`` (Arrow columns:
     the id, of Spark type ``qid``, and the vector): ``(qid, *asked,
@@ -368,7 +366,7 @@ def _scored(
     schema = T.StructType(
         [T.StructField(qid.name, qid.dataType)]
         + [T.StructField(c, corpus.schema[c].dataType) for c in cols]
-        + [T.StructField(distance_col, T.DoubleType()), T.StructField("_bad_len", T.IntegerType())]
+        + [T.StructField("distance", T.DoubleType()), T.StructField("_bad_len", T.IntegerType())]
     )
 
     # Twice the expanded form's first-order rounding bound, (dim + 2) unit
@@ -389,7 +387,7 @@ def _scored(
     def rows(payload, ri, qi, dist, bad_len=None):
         out = payload.take(pa.array(ri, pa.int64()))
         out = out.add_column(0, qid.name, qids.take(pa.array(qi, pa.int64())))
-        out = out.append_column(distance_col, pa.array(dist, pa.float64(), from_pandas=True))
+        out = out.append_column("distance", pa.array(dist, pa.float64(), from_pandas=True))
         lens = pa.nulls(len(ri), pa.int32()) if bad_len is None else pa.array(bad_len, pa.int32())
         return out.append_column("_bad_len", lens)
 
@@ -446,7 +444,7 @@ def _scored(
     return source.select(
         qid.name,
         *cols,
-        _dims_checked(F.col("_bad_len"), F.lit(dim), F.col(distance_col)).alias(distance_col),
+        _dims_checked(F.col("_bad_len"), F.lit(dim), F.col("distance")).alias("distance"),
     )
 
 
@@ -456,13 +454,12 @@ def knn_join(
     k: int = 5,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     payload_cols: Sequence[str] | None = None,
-    distance_col: str = "distance",
 ) -> DataFrame:
-    """Per-query exact top-k for a relation of query vectors: the
-    generalization the reference only runs at N=1.
+    """Per-query exact top-k for a relation of query vectors, columns
+    ``query_id`` and ``query_vec``: the generalization the reference
+    only runs at N=1.  Returns ``(query_id, *payload_cols, distance,
+    rank)`` rows, ``rank`` 1..k per query.
 
     The queries are collected once (:func:`collect_query_batch`) for
     :func:`_scored`; each ``query_id`` must appear once, as it keys the
@@ -472,11 +469,9 @@ def knn_join(
     with an L2 sequence query runs the same scorer, so a one-query
     ``knn_join`` gives it bit-identical distances.
     """
-    qtable = collect_query_batch(queries, [query_id_col, query_vec_col])
+    qtable = collect_query_batch(queries, ["query_id", "query_vec"])
     asked = [c for c in corpus.columns if c != vec_col] if payload_cols is None else list(payload_cols)
-    checked = _scored(corpus, qtable, queries.schema[query_id_col], k, vec_col, id_col, asked, distance_col)
-    global_w = Window.partitionBy(query_id_col).orderBy(
-        F.col(distance_col).asc_nulls_last(), id_col
-    )
+    checked = _scored(corpus, qtable, queries.schema["query_id"], k, vec_col, id_col, asked)
+    global_w = Window.partitionBy("query_id").orderBy(F.col("distance").asc_nulls_last(), id_col)
     ranked = checked.withColumn("rank", F.row_number().over(global_w)).filter(F.col("rank") <= k)
     return ranked if id_col in asked else ranked.drop(id_col)

@@ -54,10 +54,10 @@ def llm_extract(
 ) -> DataFrame:
     """Q6: per-hit summarize stage — adds ``summary`` from ``origntext``.
 
-    ``llm_fn`` (prompts -> completions) is the external-model hook,
-    applied via an Arrow-batched pandas UDF.  The default mock —
-    first ``MOCK_SUMMARY_LEN`` chars + ellipsis — is a *native* column
-    expression: deterministic, oracle-checkable, and zero-cost.
+    ``llm_fn`` maps a batch of the hits' raw ``origntext`` (null as ``""``),
+    not Q5 prompts (the hits carry no query text), to one summary each,
+    in an Arrow-batched pandas UDF.  The default mock — first
+    ``MOCK_SUMMARY_LEN`` chars + ellipsis — is a native column expression.
     """
     c = F.col("origntext")
     if llm_fn is None:
@@ -96,11 +96,12 @@ def sse_events(hits: DataFrame, account_url: str) -> DataFrame:
     ``addMessage`` (entities/Create*.java, serialized at
     SSEOpenAIController.java:189-234) — per hit, in that order.  Here:
     one row per event ``(id, seq, event_json)``, ``seq`` making the
-    per-hit ordering explicit.  Each ``event_json`` is one ``to_json`` of
-    a struct whose fields follow the record's component order, so it is
-    valid JSON whatever the hit's ``id``, ``fileName`` or ``summary``
-    hold: quotes, backslashes and control characters are escaped, as
-    Gson escapes them.
+    per-hit ordering explicit, from one ``inline`` of the three events.
+    Each ``event_json`` is one ``to_json`` of a struct whose fields
+    follow the record's component order, so it is valid JSON whatever
+    the hit's ``id``, ``fileName`` or ``summary`` hold: quotes,
+    backslashes and control characters are escaped, as Gson escapes
+    them.
     """
     create = F.struct(F.lit("create").alias("type"), "id")
     link = F.struct(
@@ -118,9 +119,7 @@ def sse_events(hits: DataFrame, account_url: str) -> DataFrame:
         F.struct(F.lit(2).alias("seq"), F.to_json(link).alias("event_json")),
         F.struct(F.lit(3).alias("seq"), F.to_json(message).alias("event_json")),
     )
-    return hits.select("id", F.explode(events).alias("_e")).select(
-        "id", F.col("_e.seq").alias("seq"), F.col("_e.event_json").alias("event_json")
-    )
+    return hits.select("id", F.inline(events))
 
 
 def expand_context(

@@ -271,9 +271,7 @@ def _p3_chunk_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import chunk_exploded
 
     docs = _t(spark, sf_dir, "documents")
-    return chunk_exploded(docs.select("doc_id", "text"), "text", "chunk").select(
-        "doc_id", "chunk_index", "chunk_text"
-    )
+    return chunk_exploded(docs.select("doc_id", "text")).select("doc_id", "chunk_index", "chunk_text")
 
 
 _register(
@@ -297,9 +295,7 @@ def _p3_chunk_long_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.repeat(F.concat(F.col("text"), F.lit("\n")), 40).alias("_long")
     )
     # r14: native chunking; chunk_exploded normalizes internally
-    chunks = chunk_exploded(docs, "_long", "chunk").select(
-        "doc_id", "chunk_index", "chunk_text"
-    )
+    chunks = chunk_exploded(docs, "_long").select("doc_id", "chunk_index", "chunk_text")
     return chunks.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_chunks"),
         F.sum(F.length("chunk_text")).cast("long").alias("total_chars"),

@@ -151,16 +151,14 @@ class TestNativeChunkerParity:
             [(i, t) for i, t in enumerate(cases)], "i long, t string"
         )
         out = (
-            chunk_exploded(df, "t", "c")
+            chunk_exploded(df, "t")
             .groupBy("i")
             .agg(
-                F.sort_array(F.collect_list(F.struct("c_index", "c_text"))).alias(
-                    "cs"
-                )
+                F.sort_array(F.collect_list(F.struct("chunk_index", "chunk_text"))).alias("cs")
             )
             .collect()
         )
-        got = {r["i"]: [x["c_text"] for x in r["cs"]] for r in out}
+        got = {r["i"]: [x["chunk_text"] for x in r["cs"]] for r in out}
         for i, t in enumerate(cases):
             want = [] if t is None else split_chunks(normalize_whitespace(t))
             assert got.get(i, []) == want, f"case {i}"

@@ -578,6 +578,17 @@ def test_in_memory_and_filtered_corpus_take_the_scan(spark, mixture):
     assert "FileScan parquet" in _plan(knn_join(filtered, queries, k=5, payload_cols=["vec_id"]))
 
 
+@pytest.mark.parametrize("source", ["files", "in_memory"])
+def test_knn_join_empty_query_batch(spark, tmp_path, source):
+    corpus = _write_file_corpus(spark, tmp_path / "corpus", [0, 1], [[1.0, 0.0], [0.0, 1.0]], ["a.pdf", "b.pdf"])
+    if source == "in_memory":
+        corpus = spark.createDataFrame(corpus.collect(), corpus.schema)
+    queries = spark.createDataFrame([], "query_id long, query_vec array<double>")
+    got = knn_join(corpus, queries, k=3, payload_cols=["fileName"])
+    assert got.columns == ["query_id", "fileName", "distance", "rank"]
+    assert got.collect() == []
+
+
 def test_file_corpus_names_resolve_like_the_scan(spark, tmp_path):
     # the files hold vec_id/embedding; the read schema names them in
     # upper case, which Spark matches case-insensitively by default

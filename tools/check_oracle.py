@@ -25,10 +25,12 @@ drawn names, making the committed sample independently re-runnable.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb
 
@@ -82,10 +84,8 @@ def _never_evidenced_tail(all_names) -> tuple[list[str], list[str]]:
     """Entries with no green row in any committed driver snapshot."""
     import glob
     import json
-    import os
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    snaps = sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")))
+    snaps = sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
     evidenced: set[str] = set()
     for path in snaps:
         with open(path) as fh:
@@ -125,7 +125,7 @@ def main() -> int:
     sample_meta = None
 
     import __spark_entry__ as entrymod
-    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark import get_spark
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.session import get_spark
 
     spark = get_spark()
     con = duckdb.connect()
