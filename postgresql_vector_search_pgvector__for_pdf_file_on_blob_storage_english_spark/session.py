@@ -8,6 +8,22 @@ AQE (runtime re-plan, skew-join handling, partition coalescing) is on
 by Spark's own defaults.  :func:`keep_launch_archives` is the Python
 workers' half: this module is the session's Python daemon, which
 applies it once and then forks every worker.
+
+The JVM talks to its Python workers, to this daemon and to the driver's
+accumulator server over Unix domain sockets, the only transport the
+engine sets up.  Over Spark's default loopback TCP each Python task
+waited ~40 ms for its first Arrow batch (the JVM does not set
+``TCP_NODELAY`` on those sockets, which fits Nagle's algorithm meeting
+delayed ACK), and the scorer's ~3 ms of NumPy sat behind that stall.
+The sockets live in :data:`SOCKET_DIR`, a short fixed directory:
+Spark's default is ``java.io.tmpdir``, and a socket's path
+(``<dir>/.<uuid4>.sock``, 42 characters past the directory) must fit
+the 107 characters of ``sun_path``, so a deep checkout or temp dir
+would stop the session from starting.  The directory is a constant
+that every host has, not one the driver makes, because a cluster's
+executors read the same conf.  ``spark.stop()`` removes the driver's
+socket files; a driver that exits without it leaves its accumulator
+server's ``.sock`` file there.
 """
 
 from __future__ import annotations
@@ -16,14 +32,17 @@ import os
 
 from pyspark.sql import SparkSession
 
+SOCKET_DIR = "/tmp"
+
 
 def get_spark() -> SparkSession:
     """Build (or fetch) the session.
 
     At cluster scale the master/memory settings come from spark-submit;
     everything set here is safe to keep: Arrow, UTC, shuffle partition
-    sizing, and this module as the Python daemon (the workers must import
-    the package, as the engine's UDFs need anyway).
+    sizing, this module as the Python daemon (the workers must import
+    the package, as the engine's UDFs need anyway), and Unix domain
+    sockets in :data:`SOCKET_DIR` between the JVM and Python.
     """
     cpus = len(os.sched_getaffinity(0))
     builder = (
@@ -35,6 +54,8 @@ def get_spark() -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", __name__)
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", SOCKET_DIR)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

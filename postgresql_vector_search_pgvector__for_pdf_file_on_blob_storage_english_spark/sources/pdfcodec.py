@@ -31,6 +31,13 @@ import re
 import zlib
 from typing import NamedTuple
 
+# Inflated bytes one content stream may reach.  The largest measured is
+# 17,389 B (a ~16k-char page of perfbench's generated PDFs; the test and
+# registry fixtures stay under 11 kB); 4 MiB leaves ~240x headroom for
+# denser real pages, while a deflate bomb (zlib packs zeros ~1000:1)
+# can no longer ask a worker for ~1000x its upload size.
+MAX_STREAM_BYTES = 4 << 20
+
 # ---------------------------------------------------------------------------
 # Object model
 # ---------------------------------------------------------------------------
@@ -383,7 +390,12 @@ class _PdfDoc:
         for f in filters:
             f = self.resolve(f)
             if f == "FlateDecode":
-                raw = zlib.decompress(raw)
+                inflate = zlib.decompressobj()
+                raw = inflate.decompress(raw, MAX_STREAM_BYTES)
+                if inflate.unconsumed_tail:
+                    raise ValueError(f"stream {ref.num} inflates past {MAX_STREAM_BYTES} bytes")
+                if not inflate.eof:
+                    raise ValueError(f"stream {ref.num} is truncated")
             elif f is None:
                 continue
             else:
@@ -407,8 +419,13 @@ class _PdfDoc:
 
     def pages(self) -> list[dict]:
         out: list[dict] = []
+        seen: set[int] = set()
 
         def walk(node, depth=0):
+            if isinstance(node, Ref):
+                if node.num in seen:  # a tree reaches each node once
+                    raise ValueError(f"page tree reaches object {node.num} twice")
+                seen.add(node.num)
             node = self.resolve(node)
             if not isinstance(node, dict) or depth > 64:
                 return
@@ -578,7 +595,12 @@ def make_pdf(pages: list[str], compress: bool = True) -> bytes:
         else:
             head = b"<< /Length %d >>" % len(content)
         objects.append(head + b"\nstream\n" + content + b"\nendstream")
+    return write_pdf(objects)
 
+
+def write_pdf(objects: list[bytes]) -> bytes:
+    """A classic-xref PDF of object bodies numbered from 1, with object 1
+    as the document catalog."""
     out = bytearray(b"%PDF-1.4\n%\xe2\xe3\xcf\xd3\n")
     offsets = [0]
     for num, body in enumerate(objects, start=1):

@@ -6,16 +6,52 @@ PDFBox it must fail LOUDLY on files it cannot decode correctly so
 
 from __future__ import annotations
 
+import time
+import zlib
+
 import pytest
 
 from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.sources.pdfcodec import (
+    MAX_STREAM_BYTES,
     _content_text,
     _PdfDoc,
     extract_text_pdf,
     make_pdf,
+    write_pdf,
 )
 
 FONT_OBJ = b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
+
+
+def _leaf(page: int, stream: bytes) -> list[bytes]:
+    """Objects ``page`` (a page), ``page + 1`` (its content ``stream``,
+    head and body) and ``page + 2`` (its font)."""
+    return [
+        b"<< /Type /Page /MediaBox [0 0 612 792] /Resources << /Font << /F1 %d 0 R >> >> /Contents %d 0 R >>"
+        % (page + 2, page + 1),
+        stream + b"\nendstream",
+        FONT_OBJ,
+    ]
+
+
+def shared_child_pdf(levels: int) -> bytes:
+    """A page tree of ``levels`` ``/Pages`` nodes, each listing the next
+    one twice, over one page: walked as a tree it holds 2**levels pages
+    in under 2 kB."""
+    objects = [b"<< /Type /Catalog /Pages 2 0 R >>"]
+    for num in range(2, levels + 2):
+        objects.append(b"<< /Type /Pages /Kids [%d 0 R %d 0 R] /Count %d >>" % (num + 1, num + 1, 2 ** (levels + 2 - num)))
+    content = b"BT /F1 11 Tf 72 720 Td (leaf) Tj ET"
+    return write_pdf(objects + _leaf(levels + 2, b"<< /Length %d >>\nstream\n" % len(content) + content))
+
+
+def deflated_page_pdf(content: bytes) -> bytes:
+    """A one-page PDF whose content stream is ``content``, deflated."""
+    packed = zlib.compress(content, 9)
+    return write_pdf(
+        [b"<< /Type /Catalog /Pages 2 0 R >>", b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>"]
+        + _leaf(3, b"<< /Length %d /Filter /FlateDecode >>\nstream\n" % len(packed) + packed)
+    )
 
 
 class TestXrefLoading:
@@ -130,3 +166,31 @@ class TestRoundTripUnchanged:
             + b"startxref\n%d\n%%%%EOF\n" % xref_at
         )
         assert extract_text_pdf(out) == [(1, "original")]
+
+
+class TestHostileBudgets:
+    """A few kilobytes of hostile PDF raise, in bounded time, so
+    ``extract_pages`` quarantines them instead of hanging a worker."""
+
+    def test_shared_child_tree_node_reached_twice_raises(self):
+        pdf = shared_child_pdf(16)  # 65,536 pages if walked as a tree
+        assert len(pdf) < 2000
+        start = time.perf_counter()
+        with pytest.raises(ValueError, match="twice"):
+            extract_text_pdf(pdf)
+        assert time.perf_counter() - start < 0.5
+
+    def test_stream_inflating_past_bound_raises(self):
+        text = b"BT /F1 11 Tf 72 720 Td (page) Tj ET"
+        assert extract_text_pdf(deflated_page_pdf(text)) == [(1, "page")]
+        pdf = deflated_page_pdf(text + b" " * MAX_STREAM_BYTES)
+        assert len(pdf) < 10_000
+        with pytest.raises(ValueError, match="inflates past"):
+            extract_text_pdf(pdf)
+
+    def test_truncated_stream_raises(self):
+        pdf = deflated_page_pdf(b"BT /F1 11 Tf 72 720 Td (page) Tj ET")
+        length = int(pdf.split(b"/Length ", 1)[1].split(b" ", 1)[0])
+        cut = pdf.replace(b"/Length %d " % length, b"/Length %d " % (length - 6), 1)
+        with pytest.raises(ValueError, match="truncated"):
+            extract_text_pdf(cut)

@@ -1,7 +1,9 @@
 """Every Python worker of a ``get_spark`` session keeps the archives it
 was launched with (``session.keep_launch_archives``, applied by the
 session's Python daemon before it forks any worker), and still imports
-what ``addPyFile`` sends it."""
+what ``addPyFile`` sends it.  The JVM reaches every Python task over a
+Unix domain socket in ``session.SOCKET_DIR``, whatever the checkout's or
+the temp dir's path."""
 
 from __future__ import annotations
 
@@ -9,8 +11,12 @@ import json
 import os
 import subprocess
 import sys
+import time
 import uuid
 import zipfile
+from typing import Iterator
+
+import pandas as pd
 
 # One-row tasks: idle workers are handed out first in, first out, so a
 # job with more tasks than workers reaches every idle worker.
@@ -63,6 +69,110 @@ def setup_reports(spark, tasks: int) -> list[dict]:
 
     rows = spark.range(0, tasks, 1, tasks).mapInArrow(probe, "report string").collect()
     return [json.loads(r["report"]) for r in rows]
+
+
+def socket_reports(spark, operator: str) -> list[list[str]]:
+    """Run one task of a Python ``operator`` (``mapInArrow``,
+    ``mapInPandas`` or a Series-iterator ``pandas_udf``).  The task reports, for
+    each socket its process holds open, the address family and the local
+    address: for the worker's socket to the JVM, the daemon's path."""
+
+    def sockets() -> str:
+        import socket
+
+        found = []
+        for fd in os.listdir("/proc/self/fd"):
+            try:
+                if not os.readlink(f"/proc/self/fd/{fd}").startswith("socket:"):
+                    continue
+            except OSError:  # the listing's own fd, closed by now
+                continue
+            sock = socket.socket(fileno=int(fd))
+            try:
+                found.append([sock.family.name, str(sock.getsockname())])
+            finally:
+                sock.detach()
+        return json.dumps(found)
+
+    def arrow(batches):
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pylist([{"sockets": sockets()}])
+
+    def pandas(frames):
+        for _ in frames:
+            pass
+        yield pd.DataFrame({"sockets": [sockets()]})
+
+    def series(ids: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        for s in ids:
+            yield pd.Series([sockets()] * len(s))
+
+    one = spark.range(0, 1, 1, 1)
+    if operator == "mapInArrow":
+        df = one.mapInArrow(arrow, "sockets string")
+    elif operator == "mapInPandas":
+        df = one.mapInPandas(pandas, "sockets string")
+    else:
+        from pyspark.sql import functions as F
+
+        df = one.select(F.pandas_udf(series, "string")("id").alias("sockets"))
+    (row,) = df.collect()
+    return json.loads(row["sockets"])
+
+
+def test_python_tasks_reach_the_jvm_over_unix_sockets(spark):
+    """Each Python operator of the paper's path (the scorer's
+    ``mapInArrow``, the PDF decoder's ``mapInPandas``, the embedder's
+    and ``llm_extract``'s Series-iterator ``pandas_udf``) runs in a worker whose
+    sockets are Unix domain sockets: none is TCP."""
+    for operator in ("mapInArrow", "mapInPandas", "pandas_udf"):
+        families = [family for family, _ in socket_reports(spark, operator)]
+        assert "AF_UNIX" in families, (operator, families)
+        assert not {"AF_INET", "AF_INET6"} & set(families), (operator, families)
+
+
+def test_session_starts_from_a_long_temp_dir(tmp_path):
+    """A session whose ``TMPDIR`` and ``java.io.tmpdir`` are 100+
+    characters long still starts, runs a Python task and stops: a
+    socket path in that dir would not fit ``sun_path``.  Its daemon's
+    and accumulator server's sockets are in ``SOCKET_DIR`` and are gone
+    after ``stop``; none is left in the temp dir."""
+    from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.session import SOCKET_DIR
+
+    deep = tmp_path / ("t" * 100)
+    deep.mkdir()
+    assert len(str(deep)) >= 100
+    script = (
+        "import json, sys\n"
+        f"sys.path[:0] = [{ROOT!r}, {os.path.dirname(os.path.abspath(__file__))!r}]\n"
+        "from postgresql_vector_search_pgvector__for_pdf_file_on_blob_storage_english_spark.session import get_spark\n"
+        "from test_session import socket_reports\n"
+        "spark = get_spark()\n"
+        "paths = [name for family, name in socket_reports(spark, 'mapInArrow') if family == 'AF_UNIX']\n"
+        "paths.append(spark.sparkContext._accumulatorServer.server_address)\n"
+        "spark.stop()\n"
+        "print(json.dumps(paths))\n"
+    )
+    env = dict(
+        os.environ,
+        SPARK_DRIVER_MEMORY="1g",
+        TMPDIR=str(deep),
+        PYSPARK_SUBMIT_ARGS=f"--driver-java-options -Djava.io.tmpdir={deep} pyspark-shell",
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=ROOT, env=env, capture_output=True, text=True, timeout=300
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    paths = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert len(paths) >= 2 and all(os.path.dirname(p) == SOCKET_DIR for p in paths), paths
+    deadline = time.monotonic() + 10  # the daemon removes its socket on the JVM's SIGTERM
+    while any(os.path.exists(p) for p in paths) and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert not [p for p in paths if os.path.exists(p)]
+    assert not list(deep.rglob("*.sock"))
 
 
 def _assert_kept(reports: list[dict], tasks: int) -> None:

@@ -238,6 +238,7 @@ def main() -> int:
             }
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
+    spark.stop()  # removes the accumulator server's socket file from session.SOCKET_DIR
     if json_out:
         import json
 
